@@ -158,34 +158,13 @@ def run_at_isolated(cpus: int, n_docs: int) -> tuple[float, int, str]:
                        f"{out.stderr[-500:]}")
 
 
-def _cpu_time_total(spark) -> float:
-    """Cumulative executorCpuTime (sec) over completed stages via the UI
-    REST API.  Wall time on this host swings 5-15× under hypervisor steal
-    waves (BENCH/BASELINE.md); per-stage CPU time is the steal-immune
-    signal, so per-query deltas of this total make round-over-round
-    regressions attributable without solo reruns.  NaN if the UI is off."""
-    import urllib.request
-
-    url = spark.sparkContext.uiWebUrl
-    if not url:
-        return float("nan")
-    app = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(
-                f"{url}/api/v1/applications/{app}/stages?status=complete",
-                timeout=10) as r:
-            stages = json.load(r)
-        return sum(s.get("executorCpuTime", 0) for s in stages) / 1e9
-    except Exception:  # noqa: BLE001 — cpu column is best-effort
-        return float("nan")
-
-
 def run_queries_once() -> dict[str, dict[str, float]]:
     """One cold-session pass over every registered query (the round-2
     measurement semantics: shared family builds are paid by the first
     query that needs them).  Returns {"wall": {q: sec}, "cpu": {q: sec}} —
     cpu = executorCpuTime delta around the query (driver-side Python time
     is invisible to it; wall remains the end-to-end number)."""
+    from cuckoofilter_spark.plans.profile import executor_cpu_s
     from cuckoofilter_spark.queries import QUERIES
     from cuckoofilter_spark.session import get_spark
 
@@ -208,12 +187,12 @@ def run_queries_once() -> dict[str, dict[str, float]]:
     prewarm_python_datasource(spark)
     qtimes: dict[str, float] = {}
     qcpu: dict[str, float] = {}
-    cpu0 = _cpu_time_total(spark)
+    cpu0 = executor_cpu_s(spark)
     for name in bench_queries():
         t0 = time.time()
         n = QUERIES[name](spark, SF_DIR).count()
         qtimes[name] = round(time.time() - t0, 3)
-        cpu1 = _cpu_time_total(spark)
+        cpu1 = executor_cpu_s(spark)
         delta = cpu1 - cpu0
         qcpu[name] = round(delta, 3) if delta == delta else float("nan")
         cpu0 = cpu1

@@ -98,6 +98,11 @@ class DynamicCuckooFilter:
             self._insert_fps(fp, i1)
         return n
 
+    def update(self, keys: np.ndarray) -> None:
+        """``Sketch``-protocol name of ``insert``: the build drivers
+        (``operators/build.py``) fold every state through ``update``."""
+        self.insert(keys)
+
     def _active(self) -> CuckooTable:
         """Last chain member with headroom below the 0.9 watermark
         (``nextCF``, ``DCF/dynamic_cuckoo_filter.h:302-326``)."""

@@ -1,27 +1,46 @@
-"""Distributed filter/sketch build: per-partition Arrow-vectorized build →
-deterministic multi-level tree merge.
+"""Distributed build: per-partition Arrow fold → deterministic tree merge.
 
 This is the Spark-native replacement for the reference's single-threaded
 insert loop (``Demo/cf_demo.cpp:16-27``) and the distributed analog of DCF
-chain growth + compaction (SURVEY.md §3.3): each input partition builds one
-``DynamicCuckooFilter`` inside ``mapInPandas`` (NumPy batch kernels over
-Arrow record batches — no per-row Python), then filters are folded together
-level by level with a **deterministic merge tree**: blobs are grouped by
-``partition_id // fanin`` and each group is folded in ascending partition-id
-order inside ``applyInPandas``.  Unlike ``RDD.treeAggregate`` (whose reduce
-order follows task completion), the tree shape and fold order here are pure
-functions of the partition ids — the same at local[8] and local[32], which
-is what makes "identical estimates at N and 4N executors" (north_rule) hold
-by construction rather than by commutativity luck.
+chain growth + compaction (SURVEY.md §3.3).  Every filter and sketch build
+of the library rides the three pieces defined here:
+
+- ``fold_batches``: one task folds its Arrow record batches into one
+  mergeable state (``new_state(pid)``, then ``state.update(keys)``) — NumPy
+  batch kernels, no per-row Python;
+- ``emit_blob``: that state leaves the task as ONE ``BLOB_SCHEMA`` row;
+- ``tree_merge_blobs``: blobs are grouped by ``pid // FANIN`` and each group
+  is folded in ascending pid order inside ``applyInArrow``, level by level,
+  until ≤ FANIN remain; the driver folds those, again in pid order.  The
+  blob codec (``FilterCodec`` here, ``sketches.base.SketchCodec``) is the
+  caller's.
+
+``fold_partitions`` runs the fold over the partitions of a DataFrame
+(``build_filter``, ``kmers.build_ngram_filter``,
+``sketch_build.build_sketch``); ``map_units`` runs it over a driver-planned
+unit list, one task per unit (``build_filter_from_parquet``,
+``sources.fasta.build_fasta_filter``); the checkpointed shard build calls
+``fold_batches`` from its own grouped map.
+
+Unlike ``RDD.treeAggregate`` (whose reduce order follows task completion),
+the tree shape and fold order are pure functions of the partition ids — the
+same at local[8] and local[32], which is what makes "identical estimates at
+N and 4N executors" (north_rule) hold by construction rather than by
+commutativity luck.
 
 Scale notes (100 TB / ~10^6 input partitions):
-- stage 1 emits ONE row (a few hundred KB zlib-packed) per input partition —
-  the shuffle into the merge stage moves sketch state, never data rows;
-- each merge level reduces the blob count by ``fanin`` (64): 10^6 blobs →
-  3 levels; level parallelism = n_blobs/fanin tasks, all executor-side;
-- the driver only ever folds the final ≤ fanin blobs;
-- column pruning: we select only the key column(s) before the UDF, so the
+- stage 1 emits ONE row per input partition — the shuffle into the merge
+  stage moves sketch state, never data rows;
+- each merge level reduces the blob count by ``FANIN`` (8): 10^6 blobs →
+  6 levels; level parallelism = n_blobs/FANIN tasks, all executor-side;
+- the driver only ever folds the final ≤ FANIN blobs;
+- column pruning: only the key column is selected before the UDF, so the
   parquet/Iceberg scan reads one column (check ``ReadSchema`` in explain).
+
+Closures shipped to Spark reach the serde functions only through a codec
+class or a module-level name, never as a captured function object: the
+benchmark's traced run patches ``deserialize_filter`` in this module on the
+driver, and a captured wrapper would be pickled into the job.
 """
 
 from __future__ import annotations
@@ -29,7 +48,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from cuckoofilter_spark.core.dynamic_filter import DynamicCuckooFilter
@@ -38,25 +56,37 @@ from cuckoofilter_spark.params import CuckooParams
 
 BLOB_SCHEMA = "pid long, blob binary, n_rows long, n_items long"
 
+#: merge-tree fanin: blobs per executor merge group, and the most blobs the
+#: driver ever folds.  A constant, so the tree is a pure function of the
+#: blob count — never of cluster size or of a caller's choice.
+FANIN = 8
+
 #: row-group splitting cutoff for the pyarrow-direct build: a CONSTANT so
 #: split granularity is a pure function of the data layout, never of
 #: cluster size (the merge tree must be identical at N and 4N executors)
 ROW_GROUP_SPLIT_MAX_FILES = 48
 
 
-def _keys_from_series(s: pd.Series) -> np.ndarray:
-    """Extract a flat int64 key array from a scalar-int or array<int> column."""
-    if len(s) and isinstance(s.iloc[0], (list, np.ndarray)):
-        arrs = [np.asarray(a, dtype=np.int64) for a in s if a is not None and len(a)]
-        return np.concatenate(arrs) if arrs else np.empty(0, dtype=np.int64)
-    return s.to_numpy(dtype=np.int64, na_value=0)
+class FilterCodec:
+    """Cuckoo blobs: plain ``serialize_filter`` bytes with no sketch tag —
+    the checkpoint wire format (``format_version`` 1).  Looks the serde
+    functions up in this module at call time."""
+
+    @staticmethod
+    def encode(filt: DynamicCuckooFilter) -> bytes:
+        return serialize_filter(filt)
+
+    @staticmethod
+    def decode(blob: bytes) -> DynamicCuckooFilter:
+        return deserialize_filter(blob)
 
 
 def _keys_from_arrow(col) -> np.ndarray:
     """Flatten an Arrow scalar-int or list<int> column to int64 — zero-copy
     offsets arithmetic, no per-row Python.  This path is ~10× faster than
     pandas list-of-array handling and is where "vectorized Arrow UDFs, no
-    per-row Python" (north_star) is actually won or lost."""
+    per-row Python" (north_star) is actually won or lost.  Null rows add no
+    key; a null element becomes key 0."""
     import pyarrow as pa
 
     if pa.types.is_list(col.type) or pa.types.is_large_list(col.type):
@@ -68,70 +98,90 @@ def _keys_from_arrow(col) -> np.ndarray:
     return col.to_numpy(zero_copy_only=False)
 
 
-def build_partition_udf(params: CuckooParams, dedup: bool = True):
-    """mapInArrow function: fold every Arrow batch of one partition into a
-    DynamicCuckooFilter; emit a single (pid, blob, n_rows, n_items) row.
+def emit_blob(pid: int, blob: bytes, n_rows: int, n_items: int):
+    """The one ``BLOB_SCHEMA`` record batch: a state's blob and its counts."""
+    import pyarrow as pa
+
+    return pa.record_batch({
+        "pid": pa.array([pid], pa.int64()),
+        "blob": pa.array([blob], pa.binary()),
+        "n_rows": pa.array([n_rows], pa.int64()),
+        "n_items": pa.array([n_items], pa.int64()),
+    })
+
+
+def fold_batches(state, batches, extract=_keys_from_arrow) -> tuple[int, int]:
+    """Fold record batches into ``state``: column 0 of each batch goes
+    through ``extract`` into ``state.update``.  Returns (n_rows, n_items)."""
+    n_rows = 0
+    n_items = 0
+    for b in batches:
+        keys = extract(b.column(0))
+        n_rows += b.num_rows
+        n_items += len(keys)
+        if len(keys):
+            state.update(keys)
+    return n_rows, n_items
+
+
+def new_filter(params: CuckooParams, dedup: bool = True):
+    """State factory of the cuckoo builds: task ``pid``'s empty filter,
+    its kick rng seeded by the pid.
 
     ``dedup=True`` (set semantics) is the scale default: corpus token
     streams are heavily skewed (Zipf), and a multiset filter would need one
     slot per *occurrence* of a hot token — unbounded chain growth.  Set
     semantics stores each distinct (bucket-pair, fp) once; membership
     answers are identical."""
-    import pyarrow as pa
-
     ptuple = params.to_tuple()
-
-    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        p = CuckooParams.from_tuple(ptuple)
-        filt = DynamicCuckooFilter(p, rng_seed=pid, dedup=dedup)
-        n_rows = 0
-        n_items = 0
-        for b in batches:
-            keys = _keys_from_arrow(b.column(0))
-            n_rows += b.num_rows
-            n_items += len(keys)
-            if len(keys):
-                filt.insert(keys)
-        yield pa.record_batch({
-            "pid": pa.array([pid], pa.int64()),
-            "blob": pa.array([serialize_filter(filt)], pa.binary()),
-            "n_rows": pa.array([n_rows], pa.int64()),
-            "n_items": pa.array([n_items], pa.int64()),
-        })
-
-    return fn
+    return lambda pid: DynamicCuckooFilter(CuckooParams.from_tuple(ptuple),
+                                           rng_seed=pid, dedup=dedup)
 
 
-def _merge_group_udf():
-    """applyInPandas fold: merge a group's blobs in ascending pid order."""
+def finish_filter(filt, params: CuckooParams, dedup: bool,
+                  compact: bool = True) -> DynamicCuckooFilter:
+    """The merged filter — an empty one when there were no blobs —
+    compacted unless ``compact=False``."""
+    if filt is None:
+        filt = DynamicCuckooFilter(params, dedup=dedup)
+    if compact:
+        filt.compact()
+    return filt
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("pid")
-        acc = None
-        for blob in pdf["blob"]:
-            f = deserialize_filter(bytes(blob))
-            if acc is None:
-                acc = f
-            else:
-                acc.merge(f)
-        gid = int(pdf["pid"].iloc[0])
-        return pd.DataFrame(
-            {"pid": [gid], "blob": [serialize_filter(acc)],
-             "n_rows": [int(pdf["n_rows"].sum())], "n_items": [int(pdf["n_items"].sum())]}
-        )
+
+def _fold_blobs(codec, pids, blobs):
+    """Decode and merge blobs in ascending pid order: the fold of one merge
+    group and of the driver alike."""
+    acc = None
+    for _, blob in sorted(zip(pids, blobs), key=lambda pb: pb[0]):
+        state = codec.decode(bytes(blob))
+        acc = state if acc is None else acc.merge(state)
+    return acc
+
+
+def _merge_group(codec):
+    """applyInArrow fold of one merge group → one blob row whose pid is the
+    group id (``pid // FANIN``), the next level's pid."""
+
+    def fn(table):
+        import pyarrow as pa
+
+        pids = table.column("pid").to_pylist()
+        acc = _fold_blobs(codec, pids, table.column("blob").to_pylist())
+        return pa.Table.from_batches([emit_blob(
+            min(pids) // FANIN, codec.encode(acc),
+            sum(table.column("n_rows").to_pylist()),
+            sum(table.column("n_items").to_pylist()))])
 
     return fn
 
 
-def tree_merge_blobs(blobs_df: DataFrame, fanin: int = 8,
+def tree_merge_blobs(blobs_df: DataFrame, codec=FilterCodec,
                      n_blobs: int | None = None):
-    """Deterministically fold a (pid, blob, n_rows, n_items) DataFrame down
-    to one filter.  Executor-side levels while > fanin blobs remain, then a
-    driver-side ordered fold of the last ≤ fanin.  Returns
-    (filter, n_rows, n_items).
+    """Deterministically fold a ``BLOB_SCHEMA`` DataFrame down to one state.
+    Executor-side levels while > FANIN blobs remain, then a driver-side
+    ordered fold of the last ≤ FANIN.  Returns (state, n_rows, n_items);
+    state is None when there are no blobs.
 
     ``n_blobs``: pass the known blob count (one per input partition) to
     avoid a ``count()`` action — counting would EXECUTE the whole upstream
@@ -147,34 +197,65 @@ def tree_merge_blobs(blobs_df: DataFrame, fanin: int = 8,
 
     df = blobs_df
     n = n_blobs if n_blobs is not None else df.count()
-    # executor-side levels: each shrinks the blob count by `fanin`.
-    # group id = pid // fanin, fold within group ordered by pid, and the
-    # group id becomes the next level's pid — a pure function of partition
-    # ids, hence the same tree at any cluster size.
-    while n > fanin:
-        df = (
-            df.withColumn("gid", (F.col("pid") / fanin).cast("long"))
-            .groupBy("gid")
-            .applyInPandas(lambda pdf: _merge_group_udf()(pdf.drop(columns=["gid"])),
-                           schema=BLOB_SCHEMA)
-            .withColumn("pid", (F.col("pid") / fanin).cast("long"))
-        )
-        n = -(-n // fanin)
+    while n > FANIN:
+        df = (df.groupBy((F.col("pid") / FANIN).cast("long").alias("gid"))
+              .applyInArrow(_merge_group(codec), schema=BLOB_SCHEMA))
+        n = -(-n // FANIN)
     rows = df.collect()
-    rows.sort(key=lambda r: r["pid"])
-    acc = None
-    n_rows = 0
-    n_items = 0
-    for r in rows:
-        f = deserialize_filter(bytes(r["blob"]))
-        acc = f if acc is None else acc.merge(f)
-        n_rows += r["n_rows"]
-        n_items += r["n_items"]
-    return acc, n_rows, n_items
+    acc = _fold_blobs(codec, [r["pid"] for r in rows], [r["blob"] for r in rows])
+    return acc, sum(r["n_rows"] for r in rows), sum(r["n_items"] for r in rows)
+
+
+def fold_partitions(df: DataFrame, col: str, new_state,
+                    extract=_keys_from_arrow, codec=FilterCodec,
+                    num_partitions: int | None = None):
+    """Fold each partition of ``df[col]`` into ``new_state(pid)`` inside
+    ``mapInArrow`` and tree-merge the blobs; returns what
+    ``tree_merge_blobs`` returns.
+
+    ``num_partitions``: fix the build parallelism explicitly.  Fixing it
+    (rather than inheriting the scan's split count) pins the merge tree, so
+    results are bit-identical across cluster sizes — the north_rule's
+    N-vs-4N invariance.  Salting/skew is irrelevant here because the build
+    is a narrow map (no shuffle by key); repartition only balances bytes."""
+    proj = df.select(col)  # column pruning reaches the scan
+    if num_partitions is not None:
+        proj = proj.repartition(num_partitions)
+        n_blobs = num_partitions
+    else:
+        n_blobs = proj.rdd.getNumPartitions()
+
+    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        state = new_state(pid)
+        n_rows, n_items = fold_batches(state, batches, extract)
+        yield emit_blob(pid, codec.encode(state), n_rows, n_items)
+
+    return tree_merge_blobs(proj.mapInArrow(fn, schema=BLOB_SCHEMA), codec, n_blobs)
+
+
+def map_units(spark, units: list, build_unit):
+    """One task per unit of a driver-planned list: ``spark.range`` hands
+    task ``uid`` its id, the task builds the filter ``build_unit(units[uid],
+    uid) -> (filter, n_rows, n_items)`` and emits its blob; returns what
+    ``tree_merge_blobs`` returns.  The unit list is broadcast once."""
+    bc = spark.sparkContext.broadcast(units)
+
+    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        ulist = bc.value
+        for b in batches:
+            for uid in b.column(0).to_pylist():
+                filt, n_rows, n_items = build_unit(ulist[uid], uid)
+                yield emit_blob(uid, FilterCodec.encode(filt), n_rows, n_items)
+
+    ids = spark.range(0, len(units), numPartitions=len(units))
+    return tree_merge_blobs(ids.mapInArrow(fn, schema=BLOB_SCHEMA), FilterCodec, len(units))
 
 
 def build_filter_from_parquet(spark, path: str, col: str, params: CuckooParams,
-                              fanin: int = 8, compact: bool = True,
+                              compact: bool = True,
                               dedup: bool = True) -> DynamicCuckooFilter:
     """Scale-path build: Spark distributes parquet *file splits*; each task
     reads its files directly with pyarrow (column-pruned, zero-copy list
@@ -190,14 +271,11 @@ def build_filter_from_parquet(spark, path: str, col: str, params: CuckooParams,
 
     The file→task assignment is sorted-deterministic, so the merge tree is
     pinned regardless of cluster size (north_rule invariance)."""
-    import pyarrow as pa
-
     files = sorted(_list_parquet_files(path))
     if not files:
         # an empty filter answers "non-member" to everything — a silent
         # wrong-path/permissions bug must not masquerade as that
         raise ValueError(f"no parquet files found under {path!r}")
-    ptuple = params.to_tuple()
     # Split granularity: one task per FILE by default.  When the file
     # count is small (single-file tables, small imports), split per ROW
     # GROUP instead — the footer reads that requires are one per file,
@@ -206,78 +284,43 @@ def build_filter_from_parquet(spark, path: str, col: str, params: CuckooParams,
     # so the split list, per-split rng seeds and the merge tree are
     # identical at N and 4N executors (north_rule invariance; a
     # defaultParallelism-based cutoff would silently change the tree
-    # with the cluster).
+    # with the cluster).  rg -1 = the whole file.
     if len(files) <= ROW_GROUP_SPLIT_MAX_FILES:
         splits = []
-        for fid, f in enumerate(files):
-            nrg = _num_row_groups(f)
-            if nrg == 0:
-                # metadata-only file (0 row groups): keep one whole-file
-                # split so the task list is never empty and spark.range
-                # never sees numPartitions=0
-                splits.append((fid, -1))
-            else:
-                splits.extend((fid, rg) for rg in range(nrg))
+        for f in files:
+            # a metadata-only file (0 row groups) keeps one whole-file
+            # split, so the split list is never empty
+            splits += [(f, rg) for rg in range(_num_row_groups(f))] or [(f, -1)]
     else:
-        splits = [(fid, -1) for fid in range(len(files))]  # -1 = whole file
-    bc_files = spark.sparkContext.broadcast(files)
-    bc_splits = spark.sparkContext.broadcast(splits)
+        splits = [(f, -1) for f in files]
+    new_state = new_filter(params, dedup)
 
-    def read_build(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        import pyarrow.parquet as pq
-        from pyarrow import fs as pafs
+    def build_split(split, sid):
+        fpath, rg = split
+        filt = new_state(sid)
+        # small streaming batches: ~8k docs ≈ 2M tokens ≈ 9 MB — decode
+        # scratch stays cache-resident; whole-file reads measured ~10×
+        # slower under 32-way concurrency
+        batches = _parquet_file(fpath).iter_batches(
+            columns=[col], batch_size=8192, row_groups=None if rg < 0 else [rg])
+        return (filt, *fold_batches(filt, batches))
 
-        p = CuckooParams.from_tuple(ptuple)
-        flist = bc_files.value
-        slist = bc_splits.value
-        for b in batches:
-            for sid in b.column(0).to_pylist():
-                fid, rg = slist[sid]
-                fpath = flist[fid]
-                filt = DynamicCuckooFilter(p, rng_seed=sid, dedup=dedup)
-                n_rows = 0
-                n_items = 0
-                if "://" in fpath:
-                    rfs, rpath = pafs.FileSystem.from_uri(fpath)
-                    pf = pq.ParquetFile(rfs.open_input_file(rpath))
-                else:
-                    pf = pq.ParquetFile(fpath)
-                # small streaming batches: ~8k docs ≈ 2M tokens ≈ 9 MB —
-                # decode scratch stays cache-resident; whole-file reads
-                # measured ~10× slower under 32-way concurrency
-                rgs = None if rg < 0 else [rg]
-                for rb in pf.iter_batches(columns=[col], batch_size=8192,
-                                          row_groups=rgs):
-                    keys = _keys_from_arrow(rb.column(0))
-                    n_rows += rb.num_rows
-                    n_items += len(keys)
-                    if len(keys):
-                        filt.insert(keys)
-                yield pa.record_batch({
-                    "pid": pa.array([sid], pa.int64()),
-                    "blob": pa.array([serialize_filter(filt)], pa.binary()),
-                    "n_rows": pa.array([n_rows], pa.int64()),
-                    "n_items": pa.array([n_items], pa.int64()),
-                })
-
-    ids_df = spark.range(0, len(splits), numPartitions=len(splits))
-    blobs = ids_df.mapInArrow(read_build, schema=BLOB_SCHEMA)
-    filt, _, _ = tree_merge_blobs(blobs, fanin=fanin, n_blobs=len(splits))
-    if filt is None:
-        filt = DynamicCuckooFilter(params, dedup=dedup)
-    if compact:
-        filt.compact()
-    return filt
+    filt, _, _ = map_units(spark, splits, build_split)
+    return finish_filter(filt, params, dedup, compact)
 
 
-def _num_row_groups(fpath: str) -> int:
+def _parquet_file(fpath: str):
     import pyarrow.parquet as pq
     from pyarrow import fs as pafs
 
     if "://" in fpath:
         rfs, rpath = pafs.FileSystem.from_uri(fpath)
-        return pq.ParquetFile(rfs.open_input_file(rpath)).metadata.num_row_groups
-    return pq.ParquetFile(fpath).metadata.num_row_groups
+        return pq.ParquetFile(rfs.open_input_file(rpath))
+    return pq.ParquetFile(fpath)
+
+
+def _num_row_groups(fpath: str) -> int:
+    return _parquet_file(fpath).metadata.num_row_groups
 
 
 def _list_parquet_files(path: str) -> list[str]:
@@ -314,27 +357,11 @@ def _list_parquet_files(path: str) -> list[str]:
 
 
 def build_filter(df: DataFrame, col: str, params: CuckooParams,
-                 fanin: int = 8, num_partitions: int | None = None,
+                 num_partitions: int | None = None,
                  compact: bool = True, dedup: bool = True) -> DynamicCuckooFilter:
     """Build a global DynamicCuckooFilter over ``df[col]`` (int column or
-    array<int> column).
-
-    ``num_partitions``: fix the build parallelism explicitly.  Fixing it
-    (rather than inheriting the scan's split count) pins the merge tree, so
-    results are bit-identical across cluster sizes — the north_rule's
-    N-vs-4N invariance.  Salting/skew is irrelevant here because the build
-    is a narrow map (no shuffle by key); repartition only balances bytes.
-    """
-    proj = df.select(col)  # column pruning reaches the scan
-    if num_partitions is not None:
-        proj = proj.repartition(num_partitions)
-        n_blobs = num_partitions
-    else:
-        n_blobs = proj.rdd.getNumPartitions()
-    blobs = proj.mapInArrow(build_partition_udf(params, dedup=dedup), schema=BLOB_SCHEMA)
-    filt, n_rows, n_items = tree_merge_blobs(blobs, fanin=fanin, n_blobs=n_blobs)
-    if filt is None:
-        filt = DynamicCuckooFilter(params)
-    if compact:
-        filt.compact()
-    return filt
+    array<int> column); ``num_partitions`` pins the merge tree (see
+    ``fold_partitions``)."""
+    filt, _, _ = fold_partitions(df, col, new_filter(params, dedup),
+                                 num_partitions=num_partitions)
+    return finish_filter(filt, params, dedup, compact)

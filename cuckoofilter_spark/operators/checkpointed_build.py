@@ -3,7 +3,7 @@ and metrics (north_rule: "resumable from checkpoint with per-partition
 lineage + metrics persisted alongside checkpoints").
 
 Unlike the fast path (``operators/build.py``: one blob per *physical* input
-partition via ``mapInPandas``), the checkpointed build keys work by a
+partition via ``mapInArrow``), the checkpointed build keys work by a
 **stable logical shard**: ``shard = pmod(xxhash64(key, seed), n_shards)``.
 Shard identity is a pure function of the data — not of the scan's split
 count, task scheduling, or cluster size — which is what makes a checkpoint
@@ -31,9 +31,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,7 +39,11 @@ from cuckoofilter_spark.core.dynamic_filter import DynamicCuckooFilter
 from cuckoofilter_spark.core.serde import deserialize_filter, serialize_filter
 from cuckoofilter_spark.operators.build import (
     BLOB_SCHEMA,
-    _keys_from_series,
+    FilterCodec,
+    emit_blob,
+    finish_filter,
+    fold_batches,
+    new_filter,
     tree_merge_blobs,
 )
 from cuckoofilter_spark.params import CuckooParams
@@ -65,19 +67,19 @@ def _manifest(params: CuckooParams, col: str, n_shards: int, dedup: bool) -> dic
 
 
 def _build_shard_udf(params: CuckooParams, dedup: bool):
-    ptuple = params.to_tuple()
+    """applyInArrow build of one shard: its key column (column 0) in one
+    batch — one insert, as the blobs on disk were built — into one blob."""
+    new_state = new_filter(params, dedup)
 
-    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key[0])
-        p = CuckooParams.from_tuple(ptuple)
-        filt = DynamicCuckooFilter(p, rng_seed=shard, dedup=dedup)
-        keys = _keys_from_series(pdf.iloc[:, 0])
-        if len(keys):
-            filt.insert(keys)
-        return pd.DataFrame(
-            {"pid": [shard], "blob": [serialize_filter(filt)],
-             "n_rows": [len(pdf)], "n_items": [len(keys)]}
-        )
+    def fn(key, table):
+        import pyarrow as pa
+
+        shard = key[0].as_py()
+        filt = new_state(shard)
+        n_rows, n_items = fold_batches(
+            filt, table.select([0]).combine_chunks().to_batches())
+        return pa.Table.from_batches(
+            [emit_blob(shard, FilterCodec.encode(filt), n_rows, n_items)])
 
     return fn
 
@@ -154,8 +156,8 @@ class CheckpointedBuild:
             blobs = (
                 sharded.filter(F.col("shard").isin(attempt))
                 .groupBy("shard")
-                .applyInPandas(_build_shard_udf(self.params, self.dedup),
-                               schema=BLOB_SCHEMA)
+                .applyInArrow(_build_shard_udf(self.params, self.dedup),
+                              schema=BLOB_SCHEMA)
             )
             blobs.write.mode("append").parquet(self._blobs_path)
             # the write action completed → every attempted shard (including
@@ -171,7 +173,7 @@ class CheckpointedBuild:
         return metrics
 
     # -- finalize ----------------------------------------------------------
-    def finalize(self, fanin: int = 8, compact: bool = True) -> DynamicCuckooFilter:
+    def finalize(self, compact: bool = True) -> DynamicCuckooFilter:
         """Tree-merge all shard blobs (ascending shard order — deterministic
         regardless of which runs produced them) and persist the result."""
         missing = set(range(self.n_shards)) - self.done_shards()
@@ -192,11 +194,8 @@ class CheckpointedBuild:
         blobs = (self.spark.read.parquet(self._blobs_path)
                  .withColumn("_rn", F.row_number().over(w))
                  .filter(F.col("_rn") == 1).drop("_rn"))
-        filt, _, _ = tree_merge_blobs(blobs, fanin=fanin)
-        if filt is None:
-            filt = DynamicCuckooFilter(self.params, dedup=self.dedup)
-        if compact:
-            filt.compact()
+        filt, _, _ = tree_merge_blobs(blobs)
+        filt = finish_filter(filt, self.params, self.dedup, compact)
         with open(os.path.join(self.ckpt_dir, "filter.bin"), "wb") as f:
             f.write(serialize_filter(filt))
         return filt
@@ -213,9 +212,9 @@ class CheckpointedBuild:
 
 def checkpointed_build_filter(spark: SparkSession, df: DataFrame, col: str,
                               params: CuckooParams, ckpt_dir: str,
-                              n_shards: int = 64, dedup: bool = True,
-                              fanin: int = 8) -> DynamicCuckooFilter:
+                              n_shards: int = 64,
+                              dedup: bool = True) -> DynamicCuckooFilter:
     """One-call convenience: resume-or-build all shards, then finalize."""
     cb = CheckpointedBuild(spark, ckpt_dir, params, col, n_shards, dedup)
     cb.run(df)
-    return cb.finalize(fanin=fanin)
+    return cb.finalize()

@@ -24,7 +24,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cuckoofilter_spark.core.dynamic_filter import DynamicCuckooFilter
-from cuckoofilter_spark.operators.build import build_filter
+from cuckoofilter_spark.operators.build import (
+    build_filter,
+    finish_filter,
+    fold_partitions,
+    new_filter,
+)
 from cuckoofilter_spark.params import CuckooParams
 
 #: odd multiplier for the rolling n-gram combine (Horner form)
@@ -114,46 +119,14 @@ def ngram_hash_df(df: DataFrame, col: str, n: int) -> DataFrame:
 
 
 def build_ngram_filter(df: DataFrame, col: str, n: int, params: CuckooParams,
-                       fanin: int = 8, dedup: bool = True) -> DynamicCuckooFilter:
+                       dedup: bool = True) -> DynamicCuckooFilter:
     """Distributed n-gram membership filter over an array<int> column —
     the FASTA workload end-to-end: every stride-1 token n-gram of the
     corpus becomes a filter member."""
-    import pyarrow as pa
-
-    from cuckoofilter_spark.operators.build import BLOB_SCHEMA, tree_merge_blobs
-    from cuckoofilter_spark.core.serde import serialize_filter
-
-    ptuple = params.to_tuple()
-
-    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        p = CuckooParams.from_tuple(ptuple)
-        filt = DynamicCuckooFilter(p, rng_seed=pid, dedup=dedup)
-        n_rows = 0
-        n_items = 0
-        for b in batches:
-            hashes = _batch_ngram_hashes(b.column(0), n)
-            n_rows += b.num_rows
-            n_items += len(hashes)
-            if len(hashes):
-                filt.insert(hashes.astype(np.int64))
-        yield pa.record_batch({
-            "pid": pa.array([pid], pa.int64()),
-            "blob": pa.array([serialize_filter(filt)], pa.binary()),
-            "n_rows": pa.array([n_rows], pa.int64()),
-            "n_items": pa.array([n_items], pa.int64()),
-        })
-
-    proj = df.select(col)
-    n_blobs = proj.rdd.getNumPartitions()
-    blobs = proj.mapInArrow(fn, schema=BLOB_SCHEMA)
-    filt, _, _ = tree_merge_blobs(blobs, fanin=fanin, n_blobs=n_blobs)
-    if filt is None:
-        filt = DynamicCuckooFilter(params, dedup=dedup)
-    filt.compact()
-    return filt
+    filt, _, _ = fold_partitions(
+        df, col, new_filter(params, dedup),
+        extract=lambda c: _batch_ngram_hashes(c, n).astype(np.int64))
+    return finish_filter(filt, params, dedup)
 
 
 def contains_ngrams(filt: DynamicCuckooFilter, tokens: np.ndarray, n: int) -> np.ndarray:

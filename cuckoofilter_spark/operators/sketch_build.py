@@ -1,23 +1,22 @@
-"""Generic distributed sketch build: the same per-partition-build →
-deterministic-tree-merge pipeline as ``operators/build.py``, parameterized
-over the ``Sketch`` protocol (Bloom/HLL/count-min/KLL/t-digest all ride it).
+"""Generic distributed sketch build: the build driver of
+``operators/build.py`` parameterized over the ``Sketch`` protocol
+(Bloom/HLL/count-min/KLL/t-digest all ride it).
 
 One partial aggregate per input partition; merge levels shrink the blob
-count by ``fanin``; fold order inside each group is ascending partition id —
-a pure function of partition ids, identical at any cluster size.
+count by ``build.FANIN``; fold order inside each group is ascending
+partition id — a pure function of partition ids, identical at any cluster
+size.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from cuckoofilter_spark.operators.build import BLOB_SCHEMA
-from cuckoofilter_spark.sketches.base import deserialize_sketch, serialize_sketch
+from cuckoofilter_spark.operators.build import _keys_from_arrow, fold_partitions
+from cuckoofilter_spark.sketches.base import SketchCodec
 
 
 def _numeric_from_arrow(col) -> np.ndarray:
@@ -43,8 +42,7 @@ def _strings_from_arrow(col) -> np.ndarray:
 
 
 def build_sketch(df: DataFrame, col: str, factory: Callable[[int], object],
-                 fanin: int = 64, num_partitions: int | None = None,
-                 values: str = "int"):
+                 num_partitions: int | None = None, values: str = "int"):
     """Build one global sketch over ``df[col]``.
 
     ``factory(partition_id)`` returns a fresh sketch (seed partition-local
@@ -52,64 +50,7 @@ def build_sketch(df: DataFrame, col: str, factory: Callable[[int], object],
     (Bloom/HLL/CMS), "float" for quantile sketches (KLL/t-digest),
     "str" for labeled sketches (space-saving top-k).
     """
-    import pyarrow as pa
-
-    from cuckoofilter_spark.operators.build import _keys_from_arrow
-
     extract = {"int": _keys_from_arrow, "float": _numeric_from_arrow,
                "str": _strings_from_arrow}[values]
-
-    def build_fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        sk = factory(pid)
-        n_rows = 0
-        n_items = 0
-        for b in batches:
-            vals = extract(b.column(0))
-            n_rows += b.num_rows
-            n_items += len(vals)
-            if len(vals):
-                sk.update(vals)
-        yield pa.record_batch({
-            "pid": pa.array([pid], pa.int64()),
-            "blob": pa.array([serialize_sketch(sk)], pa.binary()),
-            "n_rows": pa.array([n_rows], pa.int64()),
-            "n_items": pa.array([n_items], pa.int64()),
-        })
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("pid")
-        acc = None
-        for blob in pdf["blob"]:
-            s = deserialize_sketch(bytes(blob))
-            acc = s if acc is None else acc.merge(s)
-        return pd.DataFrame({"pid": [int(pdf["pid"].iloc[0])],
-                             "blob": [serialize_sketch(acc)],
-                             "n_rows": [int(pdf["n_rows"].sum())],
-                             "n_items": [int(pdf["n_items"].sum())]})
-
-    proj = df.select(col)
-    if num_partitions is not None:
-        proj = proj.repartition(num_partitions)
-        n = num_partitions
-    else:
-        n = proj.rdd.getNumPartitions()
-    blobs = proj.mapInArrow(build_fn, schema=BLOB_SCHEMA)
-    cur = blobs
-    while n > fanin:
-        cur = (
-            cur.withColumn("gid", (F.col("pid") / fanin).cast("long"))
-            .groupBy("gid")
-            .applyInPandas(lambda pdf: merge_group(pdf.drop(columns=["gid"])),
-                           schema=BLOB_SCHEMA)
-            .withColumn("pid", (F.col("pid") / fanin).cast("long"))
-        )
-        n = -(-n // fanin)
-    rows = sorted(cur.collect(), key=lambda r: r["pid"])
-    acc = None
-    for r in rows:
-        s = deserialize_sketch(bytes(r["blob"]))
-        acc = s if acc is None else acc.merge(s)
-    return acc
+    sk, _, _ = fold_partitions(df, col, factory, extract, SketchCodec, num_partitions)
+    return sk

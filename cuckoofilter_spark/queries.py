@@ -1807,20 +1807,23 @@ WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_size = 1)
 """
 
 
-#: overridable so the suite isn't coupled to this host's reference checkout
-FASTA_PATH = os.environ.get("SPARK_GRAFT_FASTA",
-                            "/root/reference/Data/ecoli_small.fna")
+#: overridable; defaults to the committed fixture genome (the shape of the
+#: reference's ``Data/ecoli_small.fna``), so both engines read a repo file
+FASTA_PATH = os.environ.get("SPARK_GRAFT_FASTA", os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "tests", "data", "synth_small.fna"))
 FASTA_K = 10
 
 
 def q_fasta_kmers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FASTA end-to-end parity (Tests/cf_fasta_test.cpp:25-55 as a driver
-    query): distributed k-mer filter build over the reference's own
-    ``ecoli_small.fna``, then probe every distinct k-mer through the
-    Spark-side UDF — all are true members (zero false negatives), so the
-    surviving rows equal the exact distinct k-mer set the oracle computes
-    by slicing the same file in SQL.  Both the build and the scan run the
-    CHUNKED byte-range path (chunk_bytes=256 fans this 1.1 kB file into
+    query): distributed k-mer filter build over ``FASTA_PATH`` (the shape
+    of the reference's ``ecoli_small.fna``), then probe every distinct
+    k-mer through the Spark-side UDF — all are true members (zero false
+    negatives), so the surviving rows equal the exact distinct k-mer set
+    the oracle computes by slicing the same file in SQL.  Both the build
+    and the scan run the CHUNKED byte-range path (chunk_bytes=256 fans this
+    1.1 kB file into
     ~5 tasks — the same multi-task shape a 3 GB genome gets at the 16 MiB
     default), so the oracle gates chunk-boundary k-mer reassembly, not
     just the whole-file parse; the scan side goes through the registered

@@ -6,15 +6,16 @@ Every sketch is a commutative monoid value:
     to_bytes() / from_bytes() / estimate(...)
 
 which is exactly what the distributed driver needs: per-partition ``update``
-inside ``mapInPandas`` (the partial aggregate), ``merge`` in the
+inside ``mapInArrow`` (the partial aggregate), ``merge`` in the
 deterministic tree (the final aggregate), ``to_bytes`` for the shuffle and
 broadcast.  The cuckoo/Bloom filters answer membership, HLL distinct counts,
-count-min frequencies, KLL/t-digest quantiles — all over the same build
-pipeline (``operators/sketch_build.py``).
+count-min frequencies, KLL/t-digest quantiles — all over the one build
+driver (``operators/build.py``, entered through
+``operators/sketch_build.build_sketch``).
 
 Wire format: 1-byte type tag + pickle-free struct/numpy payload per sketch
 (each class owns its layout); ``serialize_sketch``/``deserialize_sketch``
-dispatch on the tag.
+dispatch on the tag, and ``SketchCodec`` hands them to the build driver.
 """
 
 from __future__ import annotations
@@ -50,3 +51,11 @@ def serialize_sketch(s) -> bytes:
 def deserialize_sketch(data: bytes):
     cls = _REGISTRY[data[0]]
     return cls.from_bytes(data[1:])
+
+
+class SketchCodec:
+    """Blob codec of the build driver (``operators/build.py``): tagged
+    sketch bytes."""
+
+    encode = staticmethod(serialize_sketch)
+    decode = staticmethod(deserialize_sketch)

@@ -38,6 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cuckoofilter_spark.core.dynamic_filter import DynamicCuckooFilter
+from cuckoofilter_spark.operators.build import finish_filter, map_units, new_filter
 from cuckoofilter_spark.operators.kmers import ngram_hashes
 from cuckoofilter_spark.params import CuckooParams
 
@@ -313,8 +314,7 @@ def fasta_kmers_df(spark: SparkSession, paths: list[str], k: int,
 
 
 def build_fasta_filter(spark: SparkSession, paths: list[str], k: int,
-                       params: CuckooParams, fanin: int = 8,
-                       dedup: bool = False,
+                       params: CuckooParams, dedup: bool = False,
                        chunk_bytes: int | None = DEFAULT_CHUNK_BYTES,
                        ) -> DynamicCuckooFilter:
     """Distributed k-mer filter build over FASTA files: each task streams
@@ -327,15 +327,9 @@ def build_fasta_filter(spark: SparkSession, paths: list[str], k: int,
     ``dedup=False`` = the reference's insert-a-copy-per-occurrence
     (``insertKmers``, ``Tests/cf_fasta_test.cpp:11-24``), which is what
     makes the delete-all phase restore an empty filter."""
-    import pyarrow as pa
-
-    from cuckoofilter_spark.core.serde import serialize_filter
-    from cuckoofilter_spark.operators.build import BLOB_SCHEMA, tree_merge_blobs
-
     files = sorted(paths)
     if not files:
         raise ValueError("no FASTA files given")
-    ptuple = params.to_tuple()
 
     if chunk_bytes is None:
         units: list = files
@@ -351,28 +345,16 @@ def build_fasta_filter(spark: SparkSession, paths: list[str], k: int,
             own, look = _chunk_seq_bytes(path, start, end, k)
             return np.concatenate([own, look]) if len(look) else own
 
-    bc = spark.sparkContext.broadcast(units)
+    new_state = new_filter(params, dedup)
 
-    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        ulist = bc.value
-        p = CuckooParams.from_tuple(ptuple)
-        for b in batches:
-            for uid in b.column(0).to_pylist():
-                hashes = ngram_hashes(seq_bytes_of(ulist[uid]), k)
-                filt = DynamicCuckooFilter(p, rng_seed=uid, dedup=dedup)
-                if len(hashes):
-                    filt.insert(hashes.astype(np.int64))
-                yield pa.record_batch({
-                    "pid": pa.array([uid], pa.int64()),
-                    "blob": pa.array([serialize_filter(filt)], pa.binary()),
-                    "n_rows": pa.array([1], pa.int64()),
-                    "n_items": pa.array([len(hashes)], pa.int64()),
-                })
+    def build_unit(unit, uid):
+        hashes = ngram_hashes(seq_bytes_of(unit), k)
+        filt = new_state(uid)
+        filt.update(hashes.astype(np.int64))
+        return filt, 1, len(hashes)
 
-    ids = spark.range(0, len(units), numPartitions=len(units))
-    blobs = ids.mapInArrow(fn, schema=BLOB_SCHEMA)
-    filt, _, _ = tree_merge_blobs(blobs, fanin=fanin, n_blobs=len(units))
-    return filt if filt is not None else DynamicCuckooFilter(params, dedup=dedup)
+    filt, _, _ = map_units(spark, units, build_unit)
+    return finish_filter(filt, params, dedup, compact=False)
 
 
 def cf_contains_kmer_udf(spark: SparkSession, filt: DynamicCuckooFilter,

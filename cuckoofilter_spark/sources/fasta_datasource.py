@@ -63,7 +63,9 @@ def prewarm_python_datasource(spark) -> None:
     if spark.conf.get(key, None) == "1":
         return
     spark.dataSource.register(_WarmupDataSource)
-    assert spark.read.format("cuckoo_ds_warmup").load().count() == 1
+    n = spark.read.format("cuckoo_ds_warmup").load().count()
+    if n != 1:
+        raise RuntimeError(f"warm-up data source read {n} rows, expected 1")
     spark.conf.set(key, "1")
 
 

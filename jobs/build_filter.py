@@ -35,7 +35,6 @@ def parse_args(argv):
     ap.add_argument("--epb", type=int, default=4, choices=(2, 4))
     ap.add_argument("--multiset", action="store_true",
                     help="reference multiset semantics (default: set/dedup)")
-    ap.add_argument("--fanin", type=int, default=64)
     return ap.parse_args(argv)
 
 
@@ -55,7 +54,7 @@ def main(argv=None) -> None:
                            n_shards=args.shards, dedup=not args.multiset)
     t0 = time.time()
     metrics = cb.run(df)
-    filt = cb.finalize(fanin=args.fanin)
+    filt = cb.finalize()
     print(json.dumps({
         **metrics,
         "total_sec": round(time.time() - t0, 3),

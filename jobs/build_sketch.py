@@ -85,7 +85,6 @@ def parse_args(argv):
     ap.add_argument("--depth", type=int, default=5, help="count-min rows")
     ap.add_argument("--width", type=int, default=8192, help="count-min columns")
     ap.add_argument("--partitions", type=int, default=None)
-    ap.add_argument("--fanin", type=int, default=64)
     return ap.parse_args(argv)
 
 
@@ -102,7 +101,7 @@ def main(argv=None) -> None:
 
     t0 = time.time()
     sk = build_sketch(df, args.col, lambda pid: factory(args, pid),
-                      fanin=args.fanin, num_partitions=args.partitions,
+                      num_partitions=args.partitions,
                       values=values)
     blob = serialize_sketch(sk)
     os.makedirs(os.path.dirname(os.path.abspath(args.out)), exist_ok=True)

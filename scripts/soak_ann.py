@@ -87,27 +87,11 @@ def emb_table(spark, n: int):
     return spark.read.parquet(path)
 
 
-def _cpu_total(spark) -> float:
-    import urllib.request
-
-    url = spark.sparkContext.uiWebUrl
-    if not url:
-        return float("nan")
-    app = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(
-                f"{url}/api/v1/applications/{app}/stages?status=complete",
-                timeout=10) as r:
-            return sum(s.get("executorCpuTime", 0)
-                       for s in json.load(r)) / 1e9
-    except Exception:  # noqa: BLE001
-        return float("nan")
-
-
 def run_one(pipeline: str, n: int) -> dict:
     import pyspark.sql.functions as F
 
     from cuckoofilter_spark.operators import similarity as S
+    from cuckoofilter_spark.plans.profile import executor_cpu_s
     from cuckoofilter_spark.session import get_spark
 
     spark = get_spark(f"soak-ann-{pipeline}-{n}", master=f"local[{CPUS}]",
@@ -117,13 +101,13 @@ def run_one(pipeline: str, n: int) -> dict:
         emb = emb_table(spark, n)
         emb.count()  # warm scan + python workers
         if pipeline == "gemm":
-            t0, c0 = time.time(), _cpu_total(spark)
+            t0, c0 = time.time(), executor_cpu_s(spark)
             rows = S.neardup_pairs_blas(emb, tau_x1e4=TAU, block=512).count()
         elif pipeline == "lsh":
             # size nbits to a constant expected bucket occupancy
             # (target ~= BASE_VECS / 2^8 vectors per bucket)
             nbits = 8 + round(math.log2(n / BASE_VECS))
-            t0, c0 = time.time(), _cpu_total(spark)
+            t0, c0 = time.time(), executor_cpu_s(spark)
             rows = S.lsh_neardup_pairs(emb, tau_x1e4=TAU, nbits=nbits,
                                        tables=8, dim=DIM).count()
         elif pipeline == "ivf":
@@ -131,12 +115,12 @@ def run_one(pipeline: str, n: int) -> dict:
             n_clusters = max(8, int(math.sqrt(n)))
             cent = S.kmeans_centroids(emb, n_clusters=n_clusters, seed=SEED,
                                       sample=min(n, 2000))
-            t0, c0 = time.time(), _cpu_total(spark)
+            t0, c0 = time.time(), executor_cpu_s(spark)
             rows = S.ivf_topk(emb, queries, cent, k=5,
                               nprobe=max(4, n_clusters // 4)).count()
         else:
             raise ValueError(pipeline)
-        return {"sec": time.time() - t0, "cpu": _cpu_total(spark) - c0,
+        return {"sec": time.time() - t0, "cpu": executor_cpu_s(spark) - c0,
                 "rows": rows}
     finally:
         spark.stop()

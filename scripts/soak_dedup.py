@@ -102,28 +102,12 @@ def docs_table(spark, n_docs: int):
     return spark.read.parquet(path)
 
 
-def _cpu_total(spark) -> float:
-    import urllib.request
-
-    url = spark.sparkContext.uiWebUrl
-    if not url:
-        return float("nan")
-    app = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(
-                f"{url}/api/v1/applications/{app}/stages?status=complete",
-                timeout=10) as r:
-            return sum(s.get("executorCpuTime", 0)
-                       for s in json.load(r)) / 1e9
-    except Exception:  # noqa: BLE001
-        return float("nan")
-
-
 def run_one(pipeline: str, n_docs: int) -> dict:
     import pyspark.sql.functions as F
 
     from cuckoofilter_spark.operators import dedup as D
     from cuckoofilter_spark.operators import text as TX
+    from cuckoofilter_spark.plans.profile import executor_cpu_s
     from cuckoofilter_spark.session import get_spark
 
     spark = get_spark(f"soak-{pipeline}-{n_docs}", master=f"local[{CPUS}]",
@@ -149,20 +133,20 @@ def run_one(pipeline: str, n_docs: int) -> dict:
                             i % 37 == 0, (t + 1) % VOCAB).otherwise(t))
                         .alias("tokens"), "n_tok", "source"))
             corpus = base.unionByName(mutated)
-            t0, c0 = time.time(), _cpu_total(spark)
+            t0, c0 = time.time(), executor_cpu_s(spark)
             arrays = token_shingle_arrays(corpus, n=3).persist()
             try:
                 n = D.minhash_near_dups(corpus, tau_x1e4=7000,
                                         arrays=arrays).count()
             finally:
                 arrays.unpersist()
-            return {"sec": time.time() - t0, "cpu": _cpu_total(spark) - c0,
+            return {"sec": time.time() - t0, "cpu": executor_cpu_s(spark) - c0,
                     "rows": n}
 
         docs = docs_table(spark, n_docs)
         docs.count()  # warm: python workers + scan
         if pipeline == "minhash":
-            t0, c0 = time.time(), _cpu_total(spark)
+            t0, c0 = time.time(), executor_cpu_s(spark)
             arr = D.shingle_arrays(docs, 3).persist()
             try:
                 n = D.minhash_near_dups(docs, tau_x1e4=TAU, n=3,
@@ -174,7 +158,7 @@ def run_one(pipeline: str, n_docs: int) -> dict:
             # pipeline with MinHash-LSH candidates in place of the
             # verify-every-pair exact Jaccard (whose TRUE pair count grows
             # superlinearly on a fixed vocab — see the plain `clean` row)
-            t0, c0 = time.time(), _cpu_total(spark)
+            t0, c0 = time.time(), executor_cpu_s(spark)
             q = TX.quality_score(docs).filter(
                 F.col("len_ok") & F.col("has_stopwords"))
             kept = docs.join(q.select("doc_id"), "doc_id", "left_semi")
@@ -193,7 +177,7 @@ def run_one(pipeline: str, n_docs: int) -> dict:
             # q_simhash_dups's operator composition (signatures + pigeonhole
             # banding + exact popcount filter; the capped brute-force recall
             # audit is a fixture, not the operator, and is excluded)
-            t0, c0 = time.time(), _cpu_total(spark)
+            t0, c0 = time.time(), executor_cpu_s(spark)
             arr = D.shingle_arrays(docs, 3).persist()
             try:
                 sig = D.simhash_inrow(arr)
@@ -203,7 +187,7 @@ def run_one(pipeline: str, n_docs: int) -> dict:
         elif pipeline == "incremental":
             # continuous-ingestion path: batch (1/7 of docs) vs the
             # corpus bucket index, in-row array_intersect verification
-            t0, c0 = time.time(), _cpu_total(spark)
+            t0, c0 = time.time(), executor_cpu_s(spark)
             new = docs.filter(F.col("doc_id") % 7 == 0)
             corpus = docs.filter(F.col("doc_id") % 7 != 0)
             n = D.incremental_near_dups(corpus, new, tau_x1e4=TAU,
@@ -216,7 +200,7 @@ def run_one(pipeline: str, n_docs: int) -> dict:
                 cluster_representatives,
             )
 
-            t0, c0 = time.time(), _cpu_total(spark)
+            t0, c0 = time.time(), executor_cpu_s(spark)
             arr = D.shingle_arrays(docs, 3).persist()
             try:
                 pairs = D.minhash_near_dups(docs, tau_x1e4=TAU, n=3,
@@ -226,7 +210,7 @@ def run_one(pipeline: str, n_docs: int) -> dict:
             finally:
                 arr.unpersist()
         elif pipeline == "clean":
-            t0, c0 = time.time(), _cpu_total(spark)
+            t0, c0 = time.time(), executor_cpu_s(spark)
             q = TX.quality_score(docs).filter(
                 F.col("len_ok") & F.col("has_stopwords"))
             kept = docs.join(q.select("doc_id"), "doc_id", "left_semi")
@@ -238,7 +222,7 @@ def run_one(pipeline: str, n_docs: int) -> dict:
             n = kept.join(dups, "doc_id", "left_anti").count()
         else:
             raise ValueError(pipeline)
-        return {"sec": time.time() - t0, "cpu": _cpu_total(spark) - c0,
+        return {"sec": time.time() - t0, "cpu": executor_cpu_s(spark) - c0,
                 "rows": n}
     finally:
         spark.stop()

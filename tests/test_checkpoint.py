@@ -118,3 +118,51 @@ def test_finalize_dedupes_double_appended_shard(spark, tmp_path):
     assert got.contains(probes).all()
     # the double-appended multiset build must NOT double-count
     assert got.element_count == ref.element_count
+
+
+def test_null_keys_match_fast_build(spark, tmp_path):
+    """A null row adds no key and a null element inside an array<int> row is
+    key 0 — in the checkpointed shard build exactly as in ``build_filter``,
+    never INT64_MIN (what a NaN cast to int64 gives)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cuckoofilter_spark.operators.build import build_filter
+
+    path = str(tmp_path / "keys.parquet")
+    rows = [[1, 2, 3], None, [4, None, 5], [6, 7], [], [8, 9, 10]]
+    pq.write_table(pa.table({"k": pa.array(rows, pa.list_(pa.int64()))}), path)
+    df = spark.read.parquet(path)
+
+    ckpt = checkpointed_build_filter(spark, df, "k", PARAMS, str(tmp_path / "ck"),
+                                     n_shards=4)
+    fast = build_filter(df, "k", PARAMS)
+    probes = np.array([0, np.iinfo(np.int64).min, *range(1, 11)], dtype=np.int64)
+    assert fast.contains(probes[[0, *range(2, 12)]]).all()
+    assert np.array_equal(ckpt.contains(probes), fast.contains(probes))
+
+
+def test_golden_checkpoint_finalizes_to_recorded_filter(spark, tmp_path):
+    """Frozen wire format: a complete 8-shard checkpoint written by an
+    earlier version (``tests/data/golden_ckpt``, made by
+    ``tests/data/make_fixtures.py``) still opens against its manifest and
+    finalizes to the byte-identical ``filter.bin``."""
+    import hashlib
+    import shutil
+
+    golden = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                          "data", "golden_ckpt")
+    ckpt = str(shutil.copytree(golden, tmp_path / "ckpt"))
+    with open(os.path.join(ckpt, "manifest.json")) as f:
+        manifest = json.load(f)
+    with open(os.path.join(ckpt, "expected.json")) as f:
+        expected = json.load(f)
+
+    cb = CheckpointedBuild(spark, ckpt, CuckooParams.from_tuple(tuple(manifest["params"])),
+                           manifest["column"], n_shards=manifest["n_shards"],
+                           dedup=manifest["dedup"])
+    assert cb.done_shards() == set(range(8))
+    filt = cb.finalize()
+    with open(os.path.join(ckpt, "filter.bin"), "rb") as f:
+        assert hashlib.md5(f.read()).hexdigest() == expected["filter_bin_md5"]
+    assert filt.cf_count > 1  # the fold merged a chain, not one table

@@ -55,7 +55,8 @@ def test_incremental_near_dups_equals_full_recompute(spark, sf01_dir):
         shingle_arrays,
     )
 
-    docs = spark.read.parquet(f"{sf01_dir}/documents.parquet").limit(1500)
+    docs = (spark.read.parquet(f"{sf01_dir}/documents.parquet")
+            .filter(F.col("doc_id") < 1500))
     new = docs.filter(F.col("doc_id") % 7 == 0)
     corpus = docs.filter(F.col("doc_id") % 7 != 0)
 
