@@ -7,12 +7,14 @@ membership and estimation are queryable from ``spark.sql`` — the
     spark.sql("SELECT * FROM candidates WHERE corpus_contains(token)")
 
 Each registration broadcasts the serialized state once; executors
-deserialize lazily and cache per worker process (see operators/membership).
+deserialize lazily and cache per worker process, looked up once per task
+(see operators/membership).
 """
 
 from __future__ import annotations
 
 import hashlib
+from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import SparkSession
@@ -58,14 +60,16 @@ def register_sketch(spark: SparkSession, sketch, name: str):
 
     if kind == "BloomFilter":
         @pandas_udf("boolean")
-        def fn(keys: pd.Series) -> pd.Series:
+        def fn(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
             s = _get_sketch(bc.value)
-            return pd.Series(s.contains(keys.to_numpy(dtype=np.int64, na_value=0)))
+            for keys in batches:
+                yield pd.Series(s.contains(keys.to_numpy(dtype=np.int64, na_value=0)))
     elif kind == "CountMinSketch":
         @pandas_udf("long")
-        def fn(keys: pd.Series) -> pd.Series:
+        def fn(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
             s = _get_sketch(bc.value)
-            return pd.Series(s.estimate(keys.to_numpy(dtype=np.int64, na_value=0)))
+            for keys in batches:
+                yield pd.Series(s.estimate(keys.to_numpy(dtype=np.int64, na_value=0)))
     else:
         raise ValueError(f"no SQL point-query shape for {kind}")
     spark.udf.register(name, fn)

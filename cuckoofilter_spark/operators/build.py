@@ -18,9 +18,9 @@ of the library rides the three pieces defined here:
 ``fold_partitions`` runs the fold over the partitions of a DataFrame
 (``build_filter``, ``kmers.build_ngram_filter``,
 ``sketch_build.build_sketch``); ``map_units`` runs it over a driver-planned
-unit list, one task per unit (``build_filter_from_parquet``,
-``sources.fasta.build_fasta_filter``); the checkpointed shard build calls
-``fold_batches`` from its own grouped map.
+unit list, up to ``UNITS_PER_TASK`` units per task and one blob per unit
+(``build_filter_from_parquet``, ``sources.fasta.build_fasta_filter``); the
+checkpointed shard build calls ``fold_batches`` from its own grouped map.
 
 Unlike ``RDD.treeAggregate`` (whose reduce order follows task completion),
 the tree shape and fold order are pure functions of the partition ids — the
@@ -65,6 +65,12 @@ FANIN = 8
 #: split granularity is a pure function of the data layout, never of
 #: cluster size (the merge tree must be identical at N and 4N executors)
 ROW_GROUP_SPLIT_MAX_FILES = 48
+
+#: most units ``map_units`` packs into one task.  Packing pays a Python
+#: task's fixed cost once for several units; the cap keeps what a straggler
+#: or a retried task redoes to a few units, and keeps the task count of a
+#: long unit list independent of how many cores are up at submit time.
+UNITS_PER_TASK = 4
 
 
 class FilterCodec:
@@ -237,10 +243,18 @@ def fold_partitions(df: DataFrame, col: str, new_state,
 
 
 def map_units(spark, units: list, build_unit):
-    """One task per unit of a driver-planned list: ``spark.range`` hands
-    task ``uid`` its id, the task builds the filter ``build_unit(units[uid],
-    uid) -> (filter, n_rows, n_items)`` and emits its blob; returns what
-    ``tree_merge_blobs`` returns.  The unit list is broadcast once."""
+    """One blob per unit of a driver-planned list, several units per task:
+    ``spark.range`` hands each task a contiguous run of unit ids; for each
+    ``uid`` in order the task builds ``build_unit(units[uid], uid) ->
+    (filter, n_rows, n_items)`` and emits its blob with pid ``uid``; returns
+    what ``tree_merge_blobs`` returns.  The unit list is broadcast once.
+
+    The task count is ``ceil(n / UNITS_PER_TASK)``, raised to
+    ``defaultParallelism`` (capped at ``n``) so every core seen at submit
+    time gets a task.  Runs are static, so with uneven units a task can
+    finish up to ``UNITS_PER_TASK - 1`` units behind the others.  Blobs,
+    merge tree and result depend only on the unit list; parallelism decides
+    only how units are packed into tasks."""
     bc = spark.sparkContext.broadcast(units)
 
     def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
@@ -250,17 +264,19 @@ def map_units(spark, units: list, build_unit):
                 filt, n_rows, n_items = build_unit(ulist[uid], uid)
                 yield emit_blob(uid, FilterCodec.encode(filt), n_rows, n_items)
 
-    ids = spark.range(0, len(units), numPartitions=len(units))
-    return tree_merge_blobs(ids.mapInArrow(fn, schema=BLOB_SCHEMA), FilterCodec, len(units))
+    n = len(units)
+    n_tasks = max(-(-n // UNITS_PER_TASK), spark.sparkContext.defaultParallelism)
+    ids = spark.range(0, n, numPartitions=min(n, n_tasks))
+    return tree_merge_blobs(ids.mapInArrow(fn, schema=BLOB_SCHEMA), FilterCodec, n)
 
 
 def build_filter_from_parquet(spark, path: str, col: str, params: CuckooParams,
                               compact: bool = True,
                               dedup: bool = True) -> DynamicCuckooFilter:
     """Scale-path build: Spark distributes parquet *file splits*; each task
-    reads its files directly with pyarrow (column-pruned, zero-copy list
-    flatten) and builds a partition filter — the JVM never materializes the
-    token column.
+    reads its splits directly with pyarrow (column-pruned, zero-copy list
+    flatten) and builds one filter per split — the JVM never materializes
+    the token column.
 
     Why: the generic path ships every token through parquet→InternalRow→
     Arrow-IPC→Python (measured ~3× slower than the kernel+IO cost).  For a
@@ -269,16 +285,17 @@ def build_filter_from_parquet(spark, path: str, col: str, params: CuckooParams,
     readers (Petastorm etc.).  Works against any pyarrow filesystem
     (local/HDFS/S3) since executors read their own splits.
 
-    The file→task assignment is sorted-deterministic, so the merge tree is
-    pinned regardless of cluster size (north_rule invariance)."""
+    The split list is sorted-deterministic and each split is its own blob,
+    so the merge tree is pinned regardless of cluster size (north_rule
+    invariance)."""
     files = sorted(_list_parquet_files(path))
     if not files:
         # an empty filter answers "non-member" to everything — a silent
         # wrong-path/permissions bug must not masquerade as that
         raise ValueError(f"no parquet files found under {path!r}")
-    # Split granularity: one task per FILE by default.  When the file
-    # count is small (single-file tables, small imports), split per ROW
-    # GROUP instead — the footer reads that requires are one per file,
+    # Split granularity: one split (one blob) per FILE by default.  When
+    # the file count is small (single-file tables, small imports), split per
+    # ROW GROUP instead — the footer reads that requires are one per file,
     # affordable exactly when files are few.  The cutoff is a CONSTANT,
     # i.e. a pure function of the data layout — never of cluster size —
     # so the split list, per-split rng seeds and the merge tree are

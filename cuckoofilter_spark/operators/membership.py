@@ -6,12 +6,14 @@ bloom-filter runtime join pruning (broadcast sketch + ``might_contain``).
 The broadcast ships the zlib-packed wire blob once per executor; each Python
 worker deserializes lazily on first batch and caches it process-wide, so the
 cost is O(executors), not O(tasks) — the pattern that survives a
-1000-executor fan-out.
+1000-executor fan-out.  The UDFs are iterator pandas UDFs, so the cache
+lookup (an md5 of the whole blob) runs once per task, not once per batch.
 """
 
 from __future__ import annotations
 
 import hashlib
+from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -44,13 +46,14 @@ def cf_contains_udf(spark: SparkSession, filt) -> "callable":
     bc = spark.sparkContext.broadcast(serialize_filter(filt))
 
     @pandas_udf("boolean")
-    def contains(keys: pd.Series) -> pd.Series:
+    def contains(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         f = _get_filter(bc.value)
-        res = f.contains(keys.to_numpy(dtype="int64", na_value=0))
-        null_mask = keys.isna().to_numpy()
-        if null_mask.any():
-            res = res & ~null_mask  # NULL is never a member (SQL-ish)
-        return pd.Series(res)
+        for keys in batches:
+            res = f.contains(keys.to_numpy(dtype="int64", na_value=0))
+            null_mask = keys.isna().to_numpy()
+            if null_mask.any():
+                res = res & ~null_mask  # NULL is never a member (SQL-ish)
+            yield pd.Series(res)
 
     return contains
 

@@ -359,8 +359,9 @@ def build_fasta_filter(spark: SparkSession, paths: list[str], k: int,
 
 def cf_contains_kmer_udf(spark: SparkSession, filt: DynamicCuckooFilter,
                          k: int):
-    """Vectorized ``contains(kmer_string) -> boolean`` pandas UDF bound to
-    a broadcast of *filt* — probe side of the FASTA workload."""
+    """Vectorized ``contains(kmer_string) -> boolean`` iterator pandas UDF
+    bound to a broadcast of *filt* — probe side of the FASTA workload; the
+    filter is looked up once per task."""
     from pyspark.sql.functions import pandas_udf
 
     from cuckoofilter_spark.core.serde import serialize_filter
@@ -369,14 +370,16 @@ def cf_contains_kmer_udf(spark: SparkSession, filt: DynamicCuckooFilter,
     bc = spark.sparkContext.broadcast(serialize_filter(filt))
 
     @pandas_udf("boolean")
-    def contains(kmers: pd.Series) -> pd.Series:
+    def contains(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         f = _get_filter(bc.value)
-        # NULLs and wrong-length strings are never k-mers → never members;
-        # substitute a k-length placeholder so one bad row doesn't knock the
-        # whole batch off the concatenate-and-reshape fast path
-        valid = (kmers.notna() & (kmers.str.len() == k)).to_numpy()
-        vals = kmers.where(valid, "\x00" * k).to_numpy()
-        h = hash_kmer_batch(vals, k).astype(np.int64)
-        return pd.Series(f.contains(h) & valid)
+        for kmers in batches:
+            # NULLs and wrong-length strings are never k-mers → never
+            # members; substitute a k-length placeholder so one bad row
+            # doesn't knock the whole batch off the concatenate-and-reshape
+            # fast path
+            valid = (kmers.notna() & (kmers.str.len() == k)).to_numpy()
+            vals = kmers.where(valid, "\x00" * k).to_numpy()
+            h = hash_kmer_batch(vals, k).astype(np.int64)
+            yield pd.Series(f.contains(h) & valid)
 
     return contains

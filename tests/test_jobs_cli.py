@@ -7,6 +7,7 @@ import json
 import os
 import subprocess
 import sys
+import zipfile
 
 import pytest
 
@@ -77,3 +78,37 @@ def test_build_resume_query_roundtrip(tmp_path, spark, sf_dir):
     # every probe is a true member — no false negatives through the CLI path
     n_orders = spark.read.parquet(f"{sf_dir}/orders.parquet").count()
     assert probe["rows_out"] == n_orders
+
+
+def test_build_job_with_package_only_in_py_files(tmp_path):
+    """The documented cluster deployment: ``spark-submit --py-files
+    cuckoofilter_spark.zip jobs/build_filter.py`` from a directory outside
+    the repo, so executors get the package only through the py-files zip,
+    which pyspark adds to a worker's path per task, not when the worker
+    daemon starts.  Every Python task must still run."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pyspark
+
+    pkg_zip = tmp_path / "cuckoofilter_spark.zip"
+    with zipfile.ZipFile(pkg_zip, "w") as zf:
+        for root, _dirs, files in os.walk(os.path.join(REPO, "cuckoofilter_spark")):
+            for f in files:
+                if f.endswith(".py"):
+                    p = os.path.join(root, f)
+                    zf.write(p, os.path.relpath(p, REPO))
+    table = str(tmp_path / "keys.parquet")
+    pq.write_table(pa.table({"k": pa.array(range(5000), pa.int64())}), table)
+
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEM="1g",
+               PYSPARK_PYTHON=sys.executable, PYSPARK_DRIVER_PYTHON=sys.executable)
+    submit = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
+    out = subprocess.run(
+        [submit, "--py-files", str(pkg_zip), os.path.join(REPO, "jobs", "build_filter.py"),
+         "--input", table, "--col", "k", "--ckpt", str(tmp_path / "ckpt"),
+         "--shards", "2", "--table-size", "4096", "--bits", "16"],
+        capture_output=True, text=True, cwd=str(tmp_path), timeout=420, env=env)
+    assert out.returncode == 0, out.stderr[-2000:]
+    line = next(l for l in reversed(out.stdout.splitlines()) if l.startswith("{"))
+    assert json.loads(line)["element_count"] == 5000
