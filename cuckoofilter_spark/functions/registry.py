@@ -89,10 +89,11 @@ def register_sketch_aggs(spark: SparkSession, name_ndv: str = "hll_ndv",
 
     Scale note: Spark executes grouped-agg pandas UDAFs by shuffling each
     group's raw values to its reducer (no partial aggregation) — same
-    movement as ``sketch_groupby``'s direct path, with the same bounded
-    O(2^p)/O(k·log n) reducer state once there.  For skewed keys prefer
-    ``sketch_groupby.ndv_by_key(salt_buckets=...)``, which pre-merges
-    per-salt partials.
+    movement as the unsalted path of ``operators/sketch_groupby``'s one
+    per-key driver, with the same bounded O(2^p)/O(k·log n) reducer state
+    once there and the same NULL rule.  For skewed keys prefer
+    ``sketch_groupby.ndv_by_key(salt_buckets=...)``, which builds one
+    partial per (key, salt) and folds them per key in salt order.
     """
     import numpy as np
 

@@ -1464,33 +1464,15 @@ FROM events GROUP BY event_type
 """
 
 
-def q_streaming_windowed_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked event-time windows under the gate: per-day distinct
-    users via the windowed stateful HLL operator
-    (``streaming/windowed.py``, applyInPandasWithState + EventTimeTimeout),
-    checked against the exact per-window batch answer within the 3σ HLL
-    bound.  Window starts are emitted as epoch seconds so the oracle's
-    ``date_trunc('day')`` arithmetic is engine-neutral (session tz is
-    pinned UTC)."""
-    import uuid
-
-    from cuckoofilter_spark.streaming.windowed import windowed_distinct
-
-    # the whole computation happens inside this function, so pin the
-    # session tz for its duration: with any other tz the NTZ→LTZ cast
-    # shifts instants and day-window boundaries stop matching the
-    # oracle's naive date_trunc('day') (our own sessions are already UTC;
-    # this guards a driver-created session)
-    tz_key = "spark.sql.session.timeZone"
-    old_tz = spark.conf.get(tz_key)
-    spark.conf.set(tz_key, "UTC")
-    try:
-        return _windowed_ndv_utc(spark, sf_dir)
-    finally:
-        spark.conf.set(tz_key, old_tz)
-
-
 def _windowed_ndv_utc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Watermarked event-time windows under the gate: per-day distinct
+    users via the windowed stateful HLL operator (``streaming/windowed.py``,
+    applyInPandasWithState + EventTimeTimeout), checked against the exact
+    per-window batch answer within the 3σ HLL bound.  Window starts are
+    epoch seconds.  The caller pins the session tz to UTC
+    (``q_streaming_sketches``): under any other tz the NTZ→LTZ cast shifts
+    instants and day windows stop matching the oracle's
+    ``date_trunc('day')``."""
     import uuid
 
     from cuckoofilter_spark.streaming.windowed import windowed_distinct

@@ -109,6 +109,23 @@ def test_sql_hll_ndv_ignores_nulls(spark):
     assert [(r["k"], r["ndv"]) for r in got] == [("a", 1), ("b", 0)]
 
 
+
+def test_ndv_by_key_ignores_nulls(spark):
+    """The per-key sketches follow the same rule: NULL is not a value, so
+    ndv_by_key agrees with COUNT(DISTINCT), salted or not, and an all-NULL
+    key still gets quantiles_by_key's rows, with NULL estimates."""
+    from cuckoofilter_spark.operators.sketch_groupby import quantiles_by_key
+
+    df = spark.sql(
+        "SELECT * FROM VALUES ('a', 1), ('a', CAST(NULL AS BIGINT)), ('a', 1),"
+        " ('b', CAST(NULL AS BIGINT)) t(k, v)")
+    for salt in (None, 4):
+        got = ndv_by_key(df, "k", "v", salt_buckets=salt).orderBy("k").collect()
+        assert [(r["k"], r["ndv_estimate"]) for r in got] == [("a", 1), ("b", 0)]
+    q = quantiles_by_key(df, "k", "v").filter("k = 'b'").orderBy("q_x100")
+    assert [(r["q_x100"], r["quantile_estimate"]) for r in q.collect()] == [
+        (25, None), (50, None), (75, None)]
+
 def _topk_exact(ex):
     return {(r["source"], str(r["tok"])): r["c"] for r in
             ex.groupBy("source", "tok").agg(F.count("*").alias("c")).collect()}
@@ -150,6 +167,42 @@ def test_topk_by_key_salted_guarantee_holds(spark):
         true = exact[(r["source"], r["item"])]
         assert 0 < r["est"] <= true <= r["est"] + r["err"]
 
+
+
+def test_topk_by_key_salted_partials_fold_in_salt_order(spark):
+    """Space-saving merge depends on order, so the salted per-key merge
+    folds the (key, salt) partials in ascending salt order, never in
+    shuffle-arrival order: a local fold of the same partials by ascending
+    salt reproduces the operator's rows exactly, and the reverse order
+    gives a different answer on this data."""
+    from cuckoofilter_spark.operators.sketch_groupby import topk_by_key
+    from cuckoofilter_spark.sketches.spacesaving import SpaceSavingSketch
+    from cuckoofilter_spark.sources.tokens import synth_tokens_df
+
+    ex = (synth_tokens_df(spark, 300, seed=11, num_partitions=4)
+          .select("source", F.explode("tokens").alias("tok")))
+    parts = {}
+    for r in (ex.groupBy("source", F.pmod(F.xxhash64("tok"), F.lit(4)).alias("salt"))
+              .agg(F.collect_list("tok").alias("vs")).collect()):
+        parts.setdefault(r["source"], {})[r["salt"]] = r["vs"]
+
+    def fold(reverse):
+        rows = []
+        for src, by_salt in parts.items():
+            acc = None
+            for salt in sorted(by_salt, reverse=reverse):
+                sk = SpaceSavingSketch(k=8)
+                sk.update(np.asarray(by_salt[salt]))
+                acc = sk if acc is None else acc.merge(sk)
+            rows += [(src, str(i), c, acc.err) for i, c in acc.top(8)]
+        return sorted(rows)
+
+    got = sorted((r["source"], r["item"], r["est"], r["err"]) for r in
+                 topk_by_key(ex, "source", "tok", k=8, m=8,
+                             salt_buckets=4).collect())
+    assert any(err > 0 for *_, err in got)  # prunes actually happened
+    assert got == fold(reverse=False)
+    assert got != fold(reverse=True)
 
 def test_topk_by_key_no_prune_is_exact(spark):
     """k larger than the key's value cardinality → est == true, err == 0."""
