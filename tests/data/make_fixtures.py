@@ -2,6 +2,7 @@
 
     python tests/data/make_fixtures.py fasta        # FASTA genome + probe list
     python tests/data/make_fixtures.py checkpoint   # golden checkpoint (needs Spark)
+    python tests/data/make_fixtures.py blobs        # golden filter bytes per config
 
 ``fasta`` writes ``synth_small.fna`` — one record, 1,000 bases of seeded
 ACGT with a few ``N`` runs, wrapped at 70 columns (the shape of a small
@@ -16,6 +17,15 @@ rebuild's md5 is checked against it.  The committed copy was made by an
 earlier version of the code: the blob wire format is frozen, so checkpoints
 on disk must keep resuming (``tests/test_checkpoint.py`` finalizes it and
 requires the same md5).
+
+``blobs`` writes ``golden_blobs/<epb>x<bits>_<set|multiset>.bin``: one
+``serialize_filter`` blob per legal configuration and mode, built by
+``golden_blob`` from a fixed 2,000-key Zipf int32 stream (765 distinct
+keys, the hottest one 346 times) into 64-bucket tables, so every case
+chains to at least two tables and takes kicks.  Existing blobs are left
+alone and checked instead.  They pin placement, dedup and merge to the
+bytes the kernels produced when the blobs were written
+(``tests/test_cuckoo_core.py`` rebuilds each one).
 """
 
 from __future__ import annotations
@@ -36,6 +46,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(HERE)))
 FNA = os.path.join(HERE, "synth_small.fna")
 KMERS_10 = os.path.join(HERE, "synth_small_kmers_10.txt")
 GOLDEN = os.path.join(HERE, "golden_ckpt")
+GOLDEN_BLOBS = os.path.join(HERE, "golden_blobs")
 
 FASTA_IDENT = "SYNTH0001.1 synthetic test genome, seed 2718"
 FASTA_BASES = 1000
@@ -43,6 +54,41 @@ FASTA_WIDTH = 70
 
 CKPT_KEYS = 6000
 CKPT_SHARDS = 8
+
+BLOB_KEYS = 2000
+BLOB_ZIPF_A = 1.2
+BLOB_MAX_TABLE_SIZE = 100  # -> 64 buckets per table
+
+
+def golden_stream() -> np.ndarray:
+    """The fixed Zipf int32 stream behind every golden blob."""
+    z = np.random.default_rng(4242).zipf(BLOB_ZIPF_A, BLOB_KEYS).astype(np.uint64)
+    with np.errstate(over="ignore"):
+        mixed = (z * np.uint64(0x9E3779B1)) & np.uint64(0xFFFFFFFF)
+    return mixed.astype(np.uint32).view(np.int32)
+
+
+def golden_blob_name(epb: int, bits: int, dedup: bool) -> str:
+    return f"{epb}x{bits}_{'set' if dedup else 'multiset'}.bin"
+
+
+def golden_blob(epb: int, bits: int, dedup: bool) -> bytes:
+    """Insert the first half of the stream in three batches, build the
+    second half in a second filter, merge it in, and serialize."""
+    from cuckoofilter_spark.core.dynamic_filter import DynamicCuckooFilter
+    from cuckoofilter_spark.core.serde import serialize_filter
+    from cuckoofilter_spark.params import CuckooParams
+
+    keys = golden_stream()
+    params = CuckooParams(max_table_size=BLOB_MAX_TABLE_SIZE,
+                          entries_per_bucket=epb, bits_per_fp=bits)
+    filt = DynamicCuckooFilter(params, rng_seed=7, dedup=dedup)
+    half = len(keys) // 2
+    for batch in np.array_split(keys[:half], 3):
+        filt.insert(batch)
+    other = DynamicCuckooFilter(params, rng_seed=8, dedup=dedup)
+    other.insert(keys[half:])
+    return serialize_filter(filt.merge(other))
 
 
 def make_fasta() -> None:
@@ -100,9 +146,33 @@ def make_checkpoint() -> None:
         spark.stop()
 
 
+def make_blobs() -> None:
+    from cuckoofilter_spark.params import LEGAL_CONFIGS
+
+    os.makedirs(GOLDEN_BLOBS, exist_ok=True)
+    bad = []
+    for epb, bits in LEGAL_CONFIGS:
+        for dedup in (True, False):
+            path = os.path.join(GOLDEN_BLOBS, golden_blob_name(epb, bits, dedup))
+            blob = golden_blob(epb, bits, dedup)
+            if not os.path.exists(path):
+                with open(path, "wb") as f:
+                    f.write(blob)
+            else:
+                with open(path, "rb") as f:
+                    if f.read() != blob:
+                        bad.append(os.path.basename(path))
+            print(json.dumps({"blob": os.path.basename(path), "bytes": len(blob),
+                              "md5": hashlib.md5(blob).hexdigest()}))
+    if bad:
+        raise SystemExit(f"rebuild does not reproduce golden blobs: {bad}")
+
+
 if __name__ == "__main__":
-    what = sys.argv[1:] or ["fasta", "checkpoint"]
+    what = sys.argv[1:] or ["fasta", "checkpoint", "blobs"]
     if "fasta" in what:
         make_fasta()
     if "checkpoint" in what:
         make_checkpoint()
+    if "blobs" in what:
+        make_blobs()

@@ -4,14 +4,23 @@ fill-to-failure load factor, DCF growth + compaction, plus our additional
 obligations: serde round-trip, merge associativity, 12/4-bit packing.
 """
 
+import importlib.util
 import itertools
+import os
 
 import numpy as np
 import pytest
 
 from cuckoofilter_spark.core import CuckooFilter, DynamicCuckooFilter
+from cuckoofilter_spark.core.cuckoo_table import CuckooTable
 from cuckoofilter_spark.core.serde import deserialize_filter, serialize_filter
-from cuckoofilter_spark.params import CuckooParams, highest_power_of_two
+from cuckoofilter_spark.params import LEGAL_CONFIGS, CuckooParams, highest_power_of_two
+
+_spec = importlib.util.spec_from_file_location(
+    "make_fixtures", os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                                  "data", "make_fixtures.py"))
+fixtures = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(fixtures)
 
 
 def test_power_of_two_rounding():
@@ -148,6 +157,26 @@ def test_serde_roundtrip_all_configs(epb, bits):
     # packed wire width: 12-bit blob must be smaller than 16-bit lanes
     if bits == 12:
         assert len(serialize_filter(f)) < p.slots * 2
+
+
+@pytest.mark.parametrize("dedup", [True, False], ids=["set", "multiset"])
+@pytest.mark.parametrize("epb,bits", sorted(LEGAL_CONFIGS))
+def test_golden_blob_bytes_per_config(epb, bits, dedup, monkeypatch):
+    """Placement, dedup and merge reproduce the committed filter bytes
+    (``tests/data/golden_blobs``, written by ``make_fixtures.py blobs``),
+    and every committed blob survives a deserialize -> serialize trip."""
+    name = fixtures.golden_blob_name(epb, bits, dedup)
+    with open(os.path.join(fixtures.GOLDEN_BLOBS, name), "rb") as f:
+        want = f.read()
+    kicks = []
+    kick_insert = CuckooTable.kick_insert
+    monkeypatch.setattr(CuckooTable, "kick_insert",
+                        lambda self, *a: kicks.append(1) or kick_insert(self, *a))
+    assert fixtures.golden_blob(epb, bits, dedup) == want
+    assert kicks, "the golden stream must exercise the kick loop"
+    filt = deserialize_filter(want)
+    assert filt.cf_count >= 2
+    assert serialize_filter(filt) == want
 
 
 def test_cf_serde_preserves_victim():
