@@ -14,19 +14,33 @@ because it turns bulk insertion into a fully vectorized
 sort → rank → scatter, with identical membership semantics (slot position
 within a bucket is unobservable through the filter API).
 
-Where the reference probes one bucket with a 64-bit SWAR word trick
-(``CF/cuckoo_table.h:244-263``, ``Utils/bit_manager.cpp``), we compare the
-whole probe batch against all candidate buckets in one broadcasted NumPy
-``==`` — vectorized across the batch, not just within a bucket.
+Probing follows the reference's SWAR word test (``containsFingerprint``,
+``CF/cuckoo_table.h:244-263``), vectorized across the probe batch: each
+bucket is viewed as one machine word (4×8 and 4×16 lanes, 2×32 lanes —
+every legal config is 32 or 64 bits) and all of its lanes are tested for
+the fingerprint at once with the has-zero trick.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from cuckoofilter_spark.params import KICKS_MAX_COUNT, MURMUR_CONST, CuckooParams
+from cuckoofilter_spark.params import KICKS_MAX_COUNT, LEGAL_CONFIGS, MURMUR_CONST, CuckooParams
 
 _U32_MASK = np.uint64(0xFFFFFFFF)
+
+
+def _swar_lanes(epb: int, lane: type) -> tuple[type, np.unsignedinteger, np.unsignedinteger]:
+    """(word dtype, 1 in every lane, top bit of every lane) for a bucket
+    of ``epb`` lanes of dtype ``lane``."""
+    width = np.dtype(lane).itemsize * 8
+    word = np.uint32 if epb * width == 32 else np.uint64
+    ones = sum(1 << (width * k) for k in range(epb))
+    return word, word(ones), word(ones << (width - 1))
+
+
+#: (entries_per_bucket, bits_per_fp) -> ``_swar_lanes`` of its bucket word
+_SWAR = {cfg: _swar_lanes(cfg[0], lane) for cfg, lane in LEGAL_CONFIGS.items()}
 
 
 class CuckooTable:
@@ -40,7 +54,7 @@ class CuckooTable:
             self.table = np.zeros((params.table_size, params.entries_per_bucket), dtype=params.dtype)
         else:
             assert table.shape == (params.table_size, params.entries_per_bucket)
-            self.table = table
+            self.table = np.ascontiguousarray(table)  # one bucket = one word
         self.occ = np.count_nonzero(self.table, axis=1).astype(np.int8)
         self.element_count = int(self.occ.sum())
 
@@ -134,10 +148,16 @@ class CuckooTable:
     def contains_at(self, idx: np.ndarray, fps: np.ndarray) -> np.ndarray:
         """Vectorized bucket probe: for each (bucket, fp) pair, does the
         bucket hold fp?  (batch analog of ``containsFingerprint``,
-        ``CF/cuckoo_table.h:244-263``)."""
+        ``CF/cuckoo_table.h:244-263``).  ``x = word ^ (fp · ones)`` has a
+        zero lane exactly where the bucket holds fp, and
+        ``(x - ones) & ~x & high`` is non-zero exactly when some lane of x
+        is zero.  Empty slots never match: fingerprints are non-zero."""
         if len(idx) == 0:
             return np.zeros(0, dtype=bool)
-        return (self.table[idx] == fps[:, None].astype(self.table.dtype)).any(axis=1)
+        word, ones, high = _SWAR[(self.params.entries_per_bucket, self.params.bits_per_fp)]
+        x = self.table.view(word)[idx, 0]
+        x ^= fps.astype(self.table.dtype).astype(word) * ones
+        return ((x - ones) & ~x & high) != 0
 
     # -- deletion ------------------------------------------------------------
     def delete_at(self, idx: int, fp: int) -> bool:

@@ -33,10 +33,27 @@ per-partition → tree-merge build correct.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from cuckoofilter_spark.core.cuckoo_table import CuckooTable
 from cuckoofilter_spark.hashing import hash64
 from cuckoofilter_spark.params import CuckooParams
+
+
+def _first_occurrence(a: np.ndarray) -> np.ndarray:
+    """Mask of the first occurrence of each distinct value of ``a``, by
+    hashing rather than sorting: ``dictionary_encode`` numbers values in
+    order of first appearance, so position i is a first occurrence exactly
+    when ``codes[i] > max(codes[:i])``."""
+    if len(a) == 0:
+        return np.zeros(0, dtype=bool)
+    codes = pc.dictionary_encode(pa.array(a)).indices.to_numpy()
+    seen = np.maximum.accumulate(codes)
+    first = np.empty(len(a), dtype=bool)
+    first[0] = True
+    np.greater(codes[1:], seen[:-1], out=first[1:])
+    return first
 
 
 class DynamicCuckooFilter:
@@ -78,8 +95,9 @@ class DynamicCuckooFilter:
 
     # -- insert ------------------------------------------------------------------
     #: insert chunk: temporaries for 2^18 keys are ~6 MB — L3-resident, so
-    #: the hash/dedup/sort scratch never round-trips DRAM.  Matters hugely
-    #: when many workers share one memory bus (measured ~10× on 32 procs).
+    #: the hash/dedup/placement scratch never round-trips DRAM.  Matters
+    #: hugely when many workers share one memory bus (measured ~10× on 32
+    #: procs).
     INSERT_CHUNK = 1 << 18
 
     def insert(self, keys: np.ndarray) -> int:
@@ -87,13 +105,18 @@ class DynamicCuckooFilter:
 
         Processed in cache-sized chunks; semantics are unchanged (dedup
         mode is idempotent across chunks via the chain-contains check;
-        multiset mode appends every occurrence either way)."""
+        multiset mode appends every occurrence either way).  Dedup mode
+        drops repeated keys before hashing: the first occurrence of a
+        (bucket pair, fp) is always the first occurrence of its key, so
+        the stored bytes are the same."""
         keys = np.asarray(keys)
         n = len(keys)
         if n == 0:
             return 0
         for s in range(0, n, self.INSERT_CHUNK):
             chunk = keys[s:s + self.INSERT_CHUNK]
+            if self.dedup:
+                chunk = chunk[_first_occurrence(chunk)]
             fp, i1 = self.first_pass(chunk)
             self._insert_fps(fp, i1)
         return n
@@ -116,15 +139,16 @@ class DynamicCuckooFilter:
         """Set-mode admission: drop pairs already present in the chain, and
         collapse in-batch duplicates, keyed by (canonical bucket pair, fp).
         The canonical key is (min(i, partner), fp) — identical whichever of
-        its two buckets a fingerprint arrives or is stored at."""
+        its two buckets a fingerprint arrives or is stored at.  In-batch
+        duplicates go by hashing (``_first_occurrence``), keeping each
+        pair's first occurrence in batch order."""
         if len(fps) == 0:
             return fps, bidx
         alt = self.tables[0].complement(bidx, fps)
         canon = np.minimum(bidx, alt)
         # in-batch dedup
         key = (canon.astype(np.uint64) << np.uint64(32)) | fps.astype(np.uint64)
-        _, first = np.unique(key, return_index=True)
-        first.sort()
+        first = _first_occurrence(key)
         fps, bidx = fps[first], bidx[first]
         # in-chain dedup (contains checks both buckets)
         present = self.contains_fps(fps, bidx)

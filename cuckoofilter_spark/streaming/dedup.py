@@ -30,7 +30,7 @@ from typing import Any
 import numpy as np
 import pandas as pd
 
-from cuckoofilter_spark.core.dynamic_filter import DynamicCuckooFilter
+from cuckoofilter_spark.core.dynamic_filter import DynamicCuckooFilter, _first_occurrence
 from cuckoofilter_spark.core.serde import deserialize_filter, serialize_filter
 from cuckoofilter_spark.params import CuckooParams
 
@@ -65,12 +65,9 @@ def streaming_dedup_by_key(stream_df, key_col: str,
             if len(keys) == 0:
                 continue
             # first occurrence within the batch...
-            _, first_idx = np.unique(keys, return_index=True)
-            first = np.zeros(len(keys), dtype=bool)
-            first[first_idx] = True
+            fresh = _first_occurrence(keys)
             # ...and not already in the seen-set filter
-            fresh = first.copy()
-            fresh[first_idx] = ~filt.contains(keys[first_idx])
+            fresh[fresh] = ~filt.contains(keys[fresh])
             if fresh.any():
                 filt.insert(keys[fresh])
                 yield pdf.loc[fresh, cols]

@@ -13,6 +13,7 @@ import pytest
 
 from cuckoofilter_spark.core import CuckooFilter, DynamicCuckooFilter
 from cuckoofilter_spark.core.cuckoo_table import CuckooTable
+from cuckoofilter_spark.core.dynamic_filter import _first_occurrence
 from cuckoofilter_spark.core.serde import deserialize_filter, serialize_filter
 from cuckoofilter_spark.params import LEGAL_CONFIGS, CuckooParams, highest_power_of_two
 
@@ -227,6 +228,64 @@ def test_merge_then_compact_preserves_membership():
     a.merge(b)
     a.compact()
     assert a.contains(keys).all()
+
+
+def _first_occurrence_by_sort(a):
+    """Reference for ``_first_occurrence``: the sort-based mask it replaced."""
+    _, first = np.unique(a, return_index=True)
+    first.sort()
+    mask = np.zeros(len(a), dtype=bool)
+    mask[first] = True
+    return mask
+
+
+_I64 = np.iinfo(np.int64)
+
+
+@pytest.mark.parametrize("a", [
+    np.zeros(0, dtype=np.int64),
+    np.array([42], dtype=np.int64),
+    np.full(1000, 7, dtype=np.int32),
+    (np.random.default_rng(3).zipf(1.3, 50_000) % (1 << 31)).astype(np.int32),
+    np.random.default_rng(4).choice(
+        np.array([_I64.min, _I64.max, -1, 0, 1, _I64.min + 1, _I64.max - 1]), 5000),
+    np.random.default_rng(5).choice(
+        np.array([1 << 63, (1 << 64) - 1, 0, 1, (1 << 63) + 1], dtype=np.uint64), 5000),
+], ids=["empty", "one", "all_equal", "zipf_int32", "int64_extremes", "uint64_high_bit"])
+def test_first_occurrence_matches_sort_reference(a):
+    got = _first_occurrence(a)
+    assert got.dtype == bool and len(got) == len(a)
+    assert (got == _first_occurrence_by_sort(a)).all()
+
+
+@pytest.mark.parametrize("epb,bits", sorted(LEGAL_CONFIGS))
+def test_swar_contains_at_matches_broadcast_reference(epb, bits):
+    """The SWAR word probe answers exactly as the broadcast ``==`` over
+    every slot, with empty slots, full buckets and fingerprints whose lane
+    top bit or every bit is set."""
+    p = CuckooParams(max_table_size=2048, entries_per_bucket=epb, bits_per_fp=bits)
+    rng = np.random.default_rng(bits)
+    top, full = 1 << (bits - 1), (1 << bits) - 1
+    special = np.array([1, 2, top - 1, top, top + 1, full - 1, full], dtype=np.uint64)
+    random_fps = rng.integers(1, full, 64, endpoint=True, dtype=np.uint64)
+    pool = np.concatenate([special, random_fps]).astype(np.uint32)
+    occ = rng.integers(0, epb, p.table_size, endpoint=True)
+    occ[:16] = epb                                   # some full buckets...
+    occ[16:32] = 0                                   # ...and some empty ones
+    cells = rng.choice(pool, (p.table_size, epb)).astype(p.dtype)
+    cells[np.arange(epb)[None, :] >= occ[:, None]] = 0   # left-packed
+    cells[:8] = np.array(special[-1], dtype=p.dtype)     # full of all-ones
+    cells[8:16] = np.array(special[3], dtype=p.dtype)    # full of top bit
+    t = CuckooTable(p, cells)
+    idx = rng.integers(0, p.table_size, 20_000)
+    fps = rng.choice(pool, 20_000)
+    idx[:32 * len(special)] = np.repeat(np.arange(32), len(special))
+    fps[:32 * len(special)] = np.tile(special, 32).astype(np.uint32)
+    want = (t.table[idx] == fps[:, None].astype(t.table.dtype)).any(axis=1)
+    got = t.contains_at(idx, fps)
+    assert got.dtype == bool
+    assert (got == want).all()
+    assert 0 < want.sum() < len(want)
 
 
 def test_determinism_across_runs():
