@@ -6,10 +6,12 @@ source), synthesized deterministically and cached as parquet so the timing
 measures build+merge, not generation.  Also times the query suite at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1).
 
-Prints ONE JSON line:
+Prints the full result as one JSON line:
   {"metric": "cf_build_merge_tokens_per_sec", "value": N,
    "unit": "tokens/sec", "queries": {...per-query sec...}, "sf": ...,
    "build_sec": ..., "n_tokens": ..., "scaling": {...}}
+then ends with one compact headline line (``headline``), so a capture of
+only the output's tail still holds the headline.
 
 Set SPARK_GRAFT_SCALING=1 to additionally run the same build at
 local[N/4] and local[N] (same input, same merge tree) and report
@@ -220,6 +222,18 @@ def run_queries_isolated() -> dict[str, float]:
                        f"{out.stderr[-500:]}")
 
 
+#: the result fields of the last line; ``suite_sec_min`` is
+#: ``queries_band.suite_sec_min``
+HEADLINE_KEYS = ("metric", "unit", "value", "cpus", "n_tokens", "build_sec")
+
+
+def headline(result: dict) -> str:
+    """The compact last line of a run: the headline fields of *result*."""
+    line = {k: result.get(k) for k in HEADLINE_KEYS}
+    line["suite_sec_min"] = result.get("queries_band", {}).get("suite_sec_min")
+    return json.dumps(line, separators=(",", ":"))
+
+
 def main() -> None:
     sf = sf_of(SF_DIR)
     result: dict = {"metric": "cf_build_merge_tokens_per_sec", "unit": "tokens/sec",
@@ -289,6 +303,7 @@ def main() -> None:
                               "suite_sec_min": round(sum(merged.values()), 1)}
 
     print(json.dumps(result))
+    print(headline(result))
 
 
 if __name__ == "__main__":

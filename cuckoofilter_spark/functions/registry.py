@@ -6,45 +6,37 @@ membership and estimation are queryable from ``spark.sql`` — the
     register_filter(spark, filt, "corpus_contains")
     spark.sql("SELECT * FROM candidates WHERE corpus_contains(token)")
 
-Each registration broadcasts the serialized state once; executors
-deserialize lazily and cache per worker process, looked up once per task
-(see operators/membership).
+Point queries go through ``operators/membership``'s one Arrow probe UDF
+(state broadcast once, loaded once per task, NULL answers ``False``/``0``);
+the aggregates are grouped-agg Arrow UDAFs.
 """
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator
-
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import SparkSession
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
-from cuckoofilter_spark.operators.membership import _get_filter
-from cuckoofilter_spark.sketches.base import deserialize_sketch, serialize_sketch
+from cuckoofilter_spark.operators.build import _keys_from_arrow
+from cuckoofilter_spark.operators.membership import _contains, _probe_udf, cf_contains_udf
+from cuckoofilter_spark.sketches.base import SketchCodec, serialize_sketch
 
 
 def register_filter(spark: SparkSession, filt, name: str = "cf_contains"):
     """Register ``name(key) -> boolean`` membership UDF for SQL use."""
-    from cuckoofilter_spark.operators.membership import cf_contains_udf
-
     udf = cf_contains_udf(spark, filt)
     spark.udf.register(name, udf)
     return udf
 
 
-# full-blob digest key: a prefix-hash key aliases two same-param sketches
-# whose headers match but whose payloads diverge (see operators/membership)
-_SKETCH_CACHE: dict[bytes, object] = {}
+def _cms_estimate(s, keys):
+    return s.estimate(_keys_from_arrow(keys))
 
 
-def _get_sketch(blob: bytes):
-    key = hashlib.md5(blob).digest()
-    s = _SKETCH_CACHE.get(key)
-    if s is None:
-        s = deserialize_sketch(blob)
-        _SKETCH_CACHE[key] = s
-    return s
+#: sketch class name -> (SQL return type, answer(sketch, keys))
+_POINT_QUERIES = {"BloomFilter": ("boolean", _contains),
+                  "CountMinSketch": ("long", _cms_estimate)}
 
 
 def register_sketch(spark: SparkSession, sketch, name: str):
@@ -53,25 +45,12 @@ def register_sketch(spark: SparkSession, sketch, name: str):
     - CountMinSketch → ``name(key) -> bigint`` (frequency estimate)
     - BloomFilter    → ``name(key) -> boolean``
     """
-    import numpy as np
-
-    bc = spark.sparkContext.broadcast(serialize_sketch(sketch))
     kind = type(sketch).__name__
-
-    if kind == "BloomFilter":
-        @pandas_udf("boolean")
-        def fn(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-            s = _get_sketch(bc.value)
-            for keys in batches:
-                yield pd.Series(s.contains(keys.to_numpy(dtype=np.int64, na_value=0)))
-    elif kind == "CountMinSketch":
-        @pandas_udf("long")
-        def fn(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-            s = _get_sketch(bc.value)
-            for keys in batches:
-                yield pd.Series(s.estimate(keys.to_numpy(dtype=np.int64, na_value=0)))
-    else:
+    if kind not in _POINT_QUERIES:
         raise ValueError(f"no SQL point-query shape for {kind}")
+    return_type, answer = _POINT_QUERIES[kind]
+    fn = _probe_udf(spark, serialize_sketch(sketch), SketchCodec, return_type,
+                    answer)
     spark.udf.register(name, fn)
     return fn
 
@@ -80,14 +59,14 @@ def register_sketch_aggs(spark: SparkSession, name_ndv: str = "hll_ndv",
                          name_quantile: str = "kll_quantile",
                          p: int = 12, k: int = 200, seed: int = 7):
     """Register the sketches as SQL AGGREGATE functions (grouped-agg
-    pandas UDAFs), so approximate aggregation is plain SQL text::
+    Arrow UDAFs), so approximate aggregation is plain SQL text::
 
         SELECT event_type, hll_ndv(user_id), kll_quantile(value, 0.5)
         FROM events GROUP BY event_type
 
     They also work over windows (``hll_ndv(x) OVER (PARTITION BY k)``).
 
-    Scale note: Spark executes grouped-agg pandas UDAFs by shuffling each
+    Scale note: Spark executes grouped-agg Arrow UDAFs by shuffling each
     group's raw values to its reducer (no partial aggregation) — same
     movement as the unsalted path of ``operators/sketch_groupby``'s one
     per-key driver, with the same bounded O(2^p)/O(k·log n) reducer state
@@ -95,31 +74,29 @@ def register_sketch_aggs(spark: SparkSession, name_ndv: str = "hll_ndv",
     ``sketch_groupby.ndv_by_key(salt_buckets=...)``, which builds one
     partial per (key, salt) and folds them per key in salt order.
     """
-    import numpy as np
-
     from cuckoofilter_spark.sketches.hll import HyperLogLog
     from cuckoofilter_spark.sketches.kll import KLLSketch
 
-    @pandas_udf("long")
-    def ndv_agg(v: pd.Series) -> int:
+    @arrow_udf("long")
+    def ndv_agg(v: pa.Array) -> int:
         hll = HyperLogLog(p=p, seed=seed)
         # COUNT(DISTINCT) semantics: NULLs are not values — drop them
         # instead of conflating them with a genuine 0 (an all-NULL group
         # estimates 0, matching countDistinct)
-        vals = v.dropna().to_numpy(dtype=np.int64)
+        vals = v.drop_null().to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
         if len(vals):
             hll.update(vals)
         return int(hll.estimate())
 
-    @pandas_udf("double")
-    def quantile_agg(v: pd.Series, q: pd.Series) -> float:
+    @arrow_udf("double")
+    def quantile_agg(v: pa.Array, q: pa.Array) -> float:
         kll = KLLSketch(k=k, seed=seed)
-        vals = v.to_numpy(dtype=np.float64, na_value=np.nan)
+        vals = v.drop_null().to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
         vals = vals[~np.isnan(vals)]
         if not len(vals):
-            return float("nan")
+            return None  # an all-NULL group is NULL, as in quantiles_by_key
         kll.update(vals)
-        return float(kll.quantile(float(q.iloc[0])))
+        return float(kll.quantile(float(q[0].as_py())))
 
     spark.udf.register(name_ndv, ndv_agg)
     spark.udf.register(name_quantile, quantile_agg)

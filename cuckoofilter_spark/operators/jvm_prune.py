@@ -1,7 +1,7 @@
 """JVM-only membership pruning — the zero-Python alternative probe path.
 
 Our cuckoo/broadcast probe (``operators/membership.py``) crosses into an
-Arrow pandas UDF; it is vectorized and cached, but some users want a
+Arrow Python UDF; it is vectorized and cached, but some users want a
 pruning path that never leaves the JVM and are happy with *Bloom*
 semantics (no delete, no counting).  Spark 4 does not register
 ``bloom_filter_agg``/``might_contain`` as callable SQL functions — they

@@ -1,13 +1,16 @@
 """Query side: broadcast the global filter, probe columns with a vectorized
-pandas UDF — the distributed analog of ``containsElement``
+Arrow UDF — the distributed analog of ``containsElement``
 (``CF/cuckoo_filter.h:274-289``) and the same shape as Spark's own
 bloom-filter runtime join pruning (broadcast sketch + ``might_contain``).
 
-The broadcast ships the zlib-packed wire blob once per executor; each Python
-worker deserializes lazily on first batch and caches it process-wide, so the
-cost is O(executors), not O(tasks) — the pattern that survives a
-1000-executor fan-out.  The UDFs are iterator pandas UDFs, so the cache
-lookup (an md5 of the whole blob) runs once per task, not once per batch.
+Every point query — ``cf_contains_udf``, ``sources/fasta.cf_contains_kmer_udf``
+and ``functions/registry.register_sketch`` — is one call to ``_probe_udf``.
+The broadcast ships the serialized state once per executor; each Python
+worker deserializes lazily and caches it process-wide (``_get_filter``), so
+the cost is O(executors), not O(tasks) — the pattern that survives a
+1000-executor fan-out.  The UDF is an iterator ``arrow_udf``: the cache
+lookup (an md5 of the whole blob) runs once per task, not once per batch,
+and keys reach the kernel as Arrow arrays with no pandas conversion.
 """
 
 from __future__ import annotations
@@ -15,14 +18,15 @@ from __future__ import annotations
 import hashlib
 from collections.abc import Iterator
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from cuckoofilter_spark.core.serde import deserialize_filter, serialize_filter
+from cuckoofilter_spark.operators.build import _keys_from_arrow
 
-# per-worker-process cache: full-blob digest -> deserialized filter.
+# per-worker-process cache: full-blob digest -> deserialized filter or sketch.
 # The digest costs one pass over the (zlib-packed, ~100s of KB) blob on a
 # cache miss/hit — microseconds vs the deserialize it saves; a truncated
 # prefix key could alias two filters sharing a header (same params, payloads
@@ -30,32 +34,46 @@ from cuckoofilter_spark.core.serde import deserialize_filter, serialize_filter
 _FILTER_CACHE: dict[bytes, object] = {}
 
 
-def _get_filter(blob: bytes):
+def _get_filter(blob: bytes, codec=None):
+    """The cached state of *blob*: a cuckoo filter, or ``codec.decode(blob)``
+    when a codec class (e.g. ``SketchCodec``) is given."""
     key = hashlib.md5(blob).digest()
-    f = _FILTER_CACHE.get(key)
-    if f is None:
-        f = deserialize_filter(blob)
-        _FILTER_CACHE[key] = f
-    return f
+    s = _FILTER_CACHE.get(key)
+    if s is None:
+        s = deserialize_filter(blob) if codec is None else codec.decode(blob)
+        _FILTER_CACHE[key] = s
+    return s
+
+
+def _probe_udf(spark: SparkSession, blob: bytes, codec, return_type: str,
+               answer):
+    """The one point-query UDF: ``answer(state, keys)`` over each Arrow batch
+    of keys, *state* being *blob* broadcast once and loaded through
+    ``_get_filter(blob, codec)`` once per task.  Every build drops NULLs, so
+    a NULL key answers what an absent key answers: ``False`` / ``0``."""
+    bc = spark.sparkContext.broadcast(blob)
+
+    @arrow_udf(return_type)
+    def probe(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        state = _get_filter(bc.value, codec)
+        for keys in batches:
+            res = answer(state, keys)
+            if keys.null_count:
+                res = res * keys.is_valid().to_numpy(zero_copy_only=False)
+            yield pa.array(res)
+
+    return probe
+
+
+def _contains(f, keys):
+    return f.contains(_keys_from_arrow(keys))
 
 
 def cf_contains_udf(spark: SparkSession, filt) -> "callable":
-    """Return a pandas UDF ``contains(col) -> boolean`` bound to a broadcast
+    """Return an Arrow UDF ``contains(col) -> boolean`` bound to a broadcast
     of *filt*.  Usable in DataFrame code and registrable for SQL:
     ``spark.udf.register("cf_contains", cf_contains_udf(spark, f))``."""
-    bc = spark.sparkContext.broadcast(serialize_filter(filt))
-
-    @pandas_udf("boolean")
-    def contains(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        f = _get_filter(bc.value)
-        for keys in batches:
-            res = f.contains(keys.to_numpy(dtype="int64", na_value=0))
-            null_mask = keys.isna().to_numpy()
-            if null_mask.any():
-                res = res & ~null_mask  # NULL is never a member (SQL-ish)
-            yield pd.Series(res)
-
-    return contains
+    return _probe_udf(spark, serialize_filter(filt), None, "boolean", _contains)
 
 
 def membership_df(spark: SparkSession, filt, probes: DataFrame, col: str,

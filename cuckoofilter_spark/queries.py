@@ -2280,7 +2280,7 @@ WHERE substr(md5(CAST(doc_id AS VARCHAR) || '|v1'), 1, 8) <
 
 
 def q_sql_sketch_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The sketches as plain SQL TEXT: grouped-agg pandas UDAFs
+    """The sketches as plain SQL TEXT: grouped-agg Arrow UDAFs
     (functions.register_sketch_aggs) make ``hll_ndv(col)`` and
     ``kll_quantile(col, q)`` first-class SQL aggregates —
     ``spark.sql("SELECT key, hll_ndv(v), kll_quantile(v, .5) …GROUP BY

@@ -359,27 +359,21 @@ def build_fasta_filter(spark: SparkSession, paths: list[str], k: int,
 
 def cf_contains_kmer_udf(spark: SparkSession, filt: DynamicCuckooFilter,
                          k: int):
-    """Vectorized ``contains(kmer_string) -> boolean`` iterator pandas UDF
-    bound to a broadcast of *filt* — probe side of the FASTA workload; the
-    filter is looked up once per task."""
-    from pyspark.sql.functions import pandas_udf
+    """Vectorized ``contains(kmer_string) -> boolean`` Arrow UDF bound to a
+    broadcast of *filt* — probe side of the FASTA workload, through
+    ``operators/membership``'s one probe helper."""
+    import pyarrow.compute as pc
 
     from cuckoofilter_spark.core.serde import serialize_filter
-    from cuckoofilter_spark.operators.membership import _get_filter
+    from cuckoofilter_spark.operators.membership import _probe_udf
 
-    bc = spark.sparkContext.broadcast(serialize_filter(filt))
+    def answer(f, kmers):
+        # wrong-length strings are never k-mers → never members; substitute
+        # a k-length placeholder so one bad row doesn't knock the whole
+        # batch off the concatenate-and-reshape fast path
+        valid = pc.equal(pc.utf8_length(kmers), k).fill_null(False)
+        vals = pc.if_else(valid, kmers, "\x00" * k).to_numpy(zero_copy_only=False)
+        h = hash_kmer_batch(vals, k).astype(np.int64)
+        return f.contains(h) & valid.to_numpy(zero_copy_only=False)
 
-    @pandas_udf("boolean")
-    def contains(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        f = _get_filter(bc.value)
-        for kmers in batches:
-            # NULLs and wrong-length strings are never k-mers → never
-            # members; substitute a k-length placeholder so one bad row
-            # doesn't knock the whole batch off the concatenate-and-reshape
-            # fast path
-            valid = (kmers.notna() & (kmers.str.len() == k)).to_numpy()
-            vals = kmers.where(valid, "\x00" * k).to_numpy()
-            h = hash_kmer_batch(vals, k).astype(np.int64)
-            yield pd.Series(f.contains(h) & valid)
-
-    return contains
+    return _probe_udf(spark, serialize_filter(filt), None, "boolean", answer)

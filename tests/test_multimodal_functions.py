@@ -102,24 +102,87 @@ def test_register_sketch_sql(spark, sf_dir):
 
 
 def test_sketch_udf_cache_does_not_alias_same_header_sketches(spark):
-    """Two same-param Bloom filters share their serialized header; the
-    per-process UDF cache must key on the FULL blob or one silently
-    serves the other's answers."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
+    """Two same-param Bloom (or cuckoo) filters share their serialized
+    header; the one per-process probe cache must key on the FULL blob or
+    one silently serves the other's answers."""
+    from cuckoofilter_spark.core.dynamic_filter import DynamicCuckooFilter
     from cuckoofilter_spark.functions.registry import register_sketch
+    from cuckoofilter_spark.operators.membership import cf_contains_udf
+    from cuckoofilter_spark.params import CuckooParams
     from cuckoofilter_spark.sketches.bloom import BloomFilter
 
     a = BloomFilter.for_capacity(10_000, fpp=1e-4, seed=11)
     b = BloomFilter.for_capacity(10_000, fpp=1e-4, seed=11)
-    a.update(np.arange(0, 1000, dtype=np.int64))
-    b.update(np.arange(50_000, 51_000, dtype=np.int64))
-    ua = register_sketch(spark, a, "alias_a")
-    ub = register_sketch(spark, b, "alias_b")
+    ca = DynamicCuckooFilter(CuckooParams(max_table_size=4096))
+    cb = DynamicCuckooFilter(CuckooParams(max_table_size=4096))
+    for s, lo in ((a, 0), (b, 50_000), (ca, 0), (cb, 50_000)):
+        s.update(np.arange(lo, lo + 1000, dtype=np.int64))
     probes = spark.range(0, 1000)
-    assert probes.filter(ua(F.col("id"))).count() == 1000
-    assert probes.filter(ub(F.col("id"))).count() <= 3  # FP noise only
+    for ua, ub in ((register_sketch(spark, a, "alias_a"),
+                    register_sketch(spark, b, "alias_b")),
+                   (cf_contains_udf(spark, ca), cf_contains_udf(spark, cb))):
+        assert probes.filter(ua(F.col("id"))).count() == 1000
+        assert probes.filter(ub(F.col("id"))).count() <= 3  # FP noise only
+
+
+def _point_query(spark, shape):
+    """(UDF, the probed value that is in its state) for each point-query
+    shape; every state holds key 0 (the k-mer placeholder hashes to 0)."""
+    from cuckoofilter_spark.core.dynamic_filter import DynamicCuckooFilter
+    from cuckoofilter_spark.functions.registry import register_sketch
+    from cuckoofilter_spark.operators.membership import cf_contains_udf
+    from cuckoofilter_spark.params import CuckooParams
+    from cuckoofilter_spark.sketches.bloom import BloomFilter
+    from cuckoofilter_spark.sketches.countmin import CountMinSketch
+    from cuckoofilter_spark.sources.fasta import cf_contains_kmer_udf
+
+    zeros = np.zeros(7, dtype=np.int64)
+    if shape in ("cf_contains", "kmer"):
+        f = DynamicCuckooFilter(CuckooParams(max_table_size=1024))
+        f.update(zeros)
+        if shape == "kmer":
+            return cf_contains_kmer_udf(spark, f, 4), "\x00" * 4
+        return cf_contains_udf(spark, f), 0
+    s = (BloomFilter.for_capacity(1000, seed=3) if shape == "bloom"
+         else CountMinSketch(depth=4, width=256, seed=3))
+    s.update(zeros)
+    return register_sketch(spark, s, f"nulltest_{shape}"), 0
+
+
+@pytest.mark.parametrize("shape", ["cf_contains", "kmer", "bloom", "cms"])
+def test_point_query_null_answers_absent(spark, shape):
+    """Every build drops NULLs, so every point query answers a NULL probe
+    as an absent key — False / 0 — even when its state holds key 0."""
+    udf, member = _point_query(spark, shape)
+    absent = 0 if shape == "cms" else False
+    present = 7 if shape == "cms" else True
+    if shape == "cf_contains":
+        spark.udf.register("cf_contains_nulltest", udf)
+        got = spark.sql(
+            "SELECT cf_contains_nulltest(k) AS a FROM VALUES (1, 0L),"
+            " (2, CAST(NULL AS BIGINT)), (3, CAST(NULL AS BIGINT)) t(i, k)"
+            " ORDER BY i").collect()
+    else:
+        ktype = "string" if shape == "kmer" else "long"
+        df = spark.createDataFrame([(1, member), (2, None), (3, None)],
+                                   f"i long, k {ktype}")
+        got = df.select(udf(F.col("k")).alias("a")).orderBy("i").collect()
+    assert [r["a"] for r in got] == [present, absent, absent]
+
+
+def test_point_queries_and_aggs_are_arrow_udfs(spark):
+    """One Arrow path: every point query is an iterator Arrow UDF and the
+    SQL sketch aggregates are grouped-agg Arrow UDAFs — no pandas UDF."""
+    from pyspark.util import PythonEvalType
+
+    from cuckoofilter_spark.functions import register_sketch_aggs
+
+    for shape in ("cf_contains", "kmer", "bloom", "cms"):
+        udf, _ = _point_query(spark, shape)
+        assert udf.evalType == PythonEvalType.SQL_SCALAR_ARROW_ITER_UDF, shape
+    for agg in register_sketch_aggs(spark, name_ndv="hll_ndv_evaltest",
+                                    name_quantile="kll_q_evaltest"):
+        assert agg.evalType == PythonEvalType.SQL_GROUPED_AGG_ARROW_UDF
 
 
 def test_resize_media_plumbing(spark):

@@ -68,7 +68,7 @@ def test_quantiles_by_key_within_rank_bound(spark, sf01_dir):
 
 
 def test_sql_udaf_surface(spark, sf01_dir):
-    """Grouped-agg pandas UDAFs registered for SQL: hll_ndv / kll_quantile
+    """Grouped-agg Arrow UDAFs registered for SQL: hll_ndv / kll_quantile
     usable in plain SQL GROUP BY text, estimates within bound."""
     from cuckoofilter_spark.functions import register_sketch_aggs
     from pyspark.sql import functions as F
@@ -101,12 +101,20 @@ def test_sql_hll_ndv_ignores_nulls(spark):
 
     register_sketch_aggs(spark, name_ndv="hll_ndv_nulltest",
                          name_quantile="kll_q_nulltest")
+    rows = ("VALUES ('a', 1), ('a', CAST(NULL AS BIGINT)), ('a', 1),"
+            " ('b', CAST(NULL AS BIGINT)) t(k, v)")
     got = spark.sql(
-        "SELECT k, hll_ndv_nulltest(v) AS ndv FROM VALUES"
-        " ('a', 1), ('a', CAST(NULL AS BIGINT)), ('a', 1),"
-        " ('b', CAST(NULL AS BIGINT))"
-        " t(k, v) GROUP BY k ORDER BY k").collect()
+        "SELECT k, hll_ndv_nulltest(v) AS ndv, kll_q_nulltest(v, 0.5) AS q"
+        f" FROM {rows} GROUP BY k ORDER BY k").collect()
     assert [(r["k"], r["ndv"]) for r in got] == [("a", 1), ("b", 0)]
+    # an all-NULL group has no quantile: NULL, as in quantiles_by_key
+    assert [(r["k"], r["q"]) for r in got] == [("a", 1.0), ("b", None)]
+    # the same answers over a window
+    win = spark.sql(
+        "SELECT DISTINCT k, hll_ndv_nulltest(v) OVER (PARTITION BY k) AS ndv,"
+        f" kll_q_nulltest(v, 0.5) OVER (PARTITION BY k) AS q FROM {rows}"
+        " ORDER BY k").collect()
+    assert [(r["k"], r["ndv"], r["q"]) for r in win] == [("a", 1, 1.0), ("b", 0, None)]
 
 
 
