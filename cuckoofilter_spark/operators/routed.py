@@ -63,40 +63,33 @@ class RoutedCuckooFilter:
     # -- build -------------------------------------------------------------
     @classmethod
     def build(cls, df: DataFrame, col: str, params: CuckooParams,
-              n_routes: int = 64, dedup: bool = True,
-              pre_dedup: bool | None = None) -> "RoutedCuckooFilter":
+              n_routes: int = 64, dedup: bool = True) -> "RoutedCuckooFilter":
         """One shuffle by route; each route group builds its sub-filter.
         ``params`` sizes each SUB-filter — size for ndv/n_routes keys.
 
-        ``pre_dedup`` (dedup-semantics builds only): insert a map-side-
-        combined ``distinct()`` before the route shuffle.  The plain build
-        shuffles every OCCURRENCE; a Zipf token stream whose hottest key
-        repeats 10^6× then moves 10^6 copies of one 8-byte key.  With
-        pre-dedup the heavy shuffle carries only distinct keys (partial
-        dedup happens map-side inside the distinct aggregation), at the
-        cost of one extra shuffle of the distinct set — a win whenever the
-        duplication factor exceeds ~2, which is every real corpus.  Filter
-        answers are identical either way (set semantics), so it DEFAULTS
-        ON whenever set semantics are requested (``None`` → ``dedup``);
-        pass ``pre_dedup=False`` explicitly for near-unique key streams
-        where the extra aggregation buys nothing."""
-        if pre_dedup is None:
-            pre_dedup = dedup
-        assert not (pre_dedup and not dedup), "pre_dedup requires set semantics"
+        Set-semantics builds (``dedup``) insert a map-side-combined
+        ``distinct()`` before the route shuffle.  Shuffling every
+        OCCURRENCE would move 10^6 copies of one 8-byte key for a Zipf
+        stream's hottest key; the heavy shuffle then carries only distinct
+        keys, at the cost of one extra shuffle of the distinct set — a win
+        whenever the duplication factor exceeds ~2, which is every real
+        corpus.  Under set semantics the distinct changes no answer;
+        multiset builds keep every occurrence."""
         ptuple = params.to_tuple()
 
         def build_route(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             route = int(key[0])
             p = CuckooParams.from_tuple(ptuple)
             filt = DynamicCuckooFilter(p, rng_seed=route, dedup=dedup)
-            keys = pdf.iloc[:, 0].to_numpy(dtype=np.int64, na_value=0)
+            keys = pdf.iloc[:, 0].to_numpy(dtype=np.int64)
             if len(keys):
                 filt.insert(keys)
             return pd.DataFrame({"route": [route], "blob": [serialize_filter(filt)],
                                  "n_keys": [filt.element_count]})
 
-        keyed = df.select(F.col(col))
-        if pre_dedup:
+        # NULL is not a key: it is never inserted (nor deleted, nor a member)
+        keyed = df.select(F.col(col)).where(F.col(col).isNotNull())
+        if dedup:
             keyed = keyed.distinct()
         state = (
             keyed.select(F.col(col), _route_col(col, n_routes))
@@ -105,17 +98,12 @@ class RoutedCuckooFilter:
         )
         return cls(state, params, n_routes, dedup)
 
-    def persist(self, path: str, partition_by_route: bool = True) -> "RoutedCuckooFilter":
+    def persist(self, path: str) -> "RoutedCuckooFilter":
         """Materialize the state table as parquet PARTITIONED BY route
         (the Iceberg-style layout): a probe job that touches a subset of
         routes — point lookups, route-sliced audits — prunes every other
-        route's state at the scan instead of reading all blobs.  Pass
-        ``partition_by_route=False`` for a flat layout (tiny states where
-        per-partition file overhead dominates)."""
-        w = self.state.write.mode("overwrite")
-        if partition_by_route:
-            w = w.partitionBy("route")
-        w.parquet(path)
+        route's state at the scan instead of reading all blobs."""
+        self.state.write.mode("overwrite").partitionBy("route").parquet(path)
         spark = self.state.sparkSession
         return self.load(spark, path, self.params, self.n_routes, self.dedup)
 
@@ -137,12 +125,13 @@ class RoutedCuckooFilter:
 
         def probe_route(key: tuple, probe_pdf: pd.DataFrame,
                         state_pdf: pd.DataFrame) -> pd.DataFrame:
-            keys = probe_pdf[col].to_numpy(dtype=np.int64, na_value=0)
-            if len(state_pdf) == 0:
-                member = np.zeros(len(keys), dtype=bool)  # empty route
-            else:
+            keys = probe_pdf[col]
+            member = np.zeros(len(keys), dtype=bool)  # empty route / NULL
+            valid = keys.notna().to_numpy()
+            if len(state_pdf) and valid.any():
                 filt = deserialize_filter(bytes(state_pdf["blob"].iloc[0]))
-                member = filt.contains(keys)
+                member[valid] = filt.contains(
+                    keys[valid].to_numpy(dtype=np.int64))
             return pd.DataFrame({col: keys, "member": member})
 
         p = probes.select(F.col(col).cast("long").alias(col),
@@ -184,14 +173,15 @@ class RoutedCuckooFilter:
                                      "n_keys": pd.Series([], dtype="int64")})
             filt = deserialize_filter(bytes(state_pdf["blob"].iloc[0]))
             if len(del_pdf):
-                ks = del_pdf[col].to_numpy(dtype=np.int64, na_value=0)
+                ks = del_pdf[col].to_numpy(dtype=np.int64)
                 filt.delete(ks)
             return pd.DataFrame({"route": [int(key[0])],
                                  "blob": [serialize_filter(filt)],
                                  "n_keys": [filt.element_count]})
 
-        k = keys.select(F.col(col).cast("long").alias(col),
-                        _route_col(col, self.n_routes))
+        k = (keys.where(F.col(col).isNotNull())
+             .select(F.col(col).cast("long").alias(col),
+                     _route_col(col, self.n_routes)))
         state = (
             k.groupBy("route")
             .cogroup(self.state.groupBy("route"))

@@ -1803,23 +1803,22 @@ def q_fasta_kmers(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the reference's ``ecoli_small.fna``), then probe every distinct
     k-mer through the Spark-side UDF — all are true members (zero false
     negatives), so the surviving rows equal the exact distinct k-mer set
-    the oracle computes by slicing the same file in SQL.  Both the build
-    and the scan run the CHUNKED byte-range path (chunk_bytes=256 fans this
-    1.1 kB file into
-    ~5 tasks — the same multi-task shape a 3 GB genome gets at the 16 MiB
-    default), so the oracle gates chunk-boundary k-mer reassembly, not
-    just the whole-file parse; the scan side goes through the registered
+    the oracle computes by slicing the same file in SQL.  Build and scan
+    both go through the one FASTA reader, the ``plan_chunks`` byte ranges:
+    chunk_bytes=256 fans this 1.1 kB file into ~5 tasks (the multi-task
+    shape a 3 GB genome gets at the 16 MiB default), so the oracle gates
+    chunk-boundary k-mer reassembly.  The scan side is the registered
     `spark.read.format("fasta")` Python Data Source (the FastaIterator
     adapter, SURVEY §2 #30), giving the source its own driver row."""
     from cuckoofilter_spark.sources.fasta import (
         build_fasta_filter,
         cf_contains_kmer_udf,
         parse_fasta,
-        _read_text,
     )
     from cuckoofilter_spark.sources.fasta_datasource import FastaDataSource
 
-    _, seq = parse_fasta(_read_text(FASTA_PATH))
+    with open(FASTA_PATH, "rb") as fh:
+        _, seq = parse_fasta(fh.read().decode("utf-8", errors="replace"))
     n = max(1, len(seq) - FASTA_K + 1)
     params = CuckooParams(max_table_size=2 * n, bits_per_fp=16)
     filt = build_fasta_filter(spark, [FASTA_PATH], FASTA_K, params,

@@ -11,31 +11,31 @@ Reference semantics, reproduced exactly:
 - k-mers are stride-1 windows of length k over that buffer
   (``nextKMere``, ``fasta_reader.cpp:66-75``), crossing line boundaries.
 
-Spark mapping: the unit of parallelism is a fixed-size BYTE RANGE of a
-file (``chunk_bytes``, default 16 MiB), so one monster genome fans out
-across tasks instead of serializing into one task's memory: a tiny header
-scan finds where sequence bytes start, each task streams its range,
-strips newlines, and reads ahead exactly k-1 sequence bytes so windows
-crossing the cut are emitted by the chunk they START in — the k-mer
-stream is provably identical to the whole-file parse (pytest-gated).
-Chunk byte-offsets are CHAR offsets only for ASCII payloads (every real
-genome); the whole-file path stays the reference-exact fallback for
-exotic encodings.  K-mer hashing is the vectorized byte-Horner
-kernel shared with the token n-gram path (``operators/kmers.py``): the
-window hash is computed over the raw sequence bytes with NumPy
-``sliding_window_view`` — no per-window string materialization, no per-row
-Python — standing in for the reference's CityHash64-over-string
-(``Utils/hash_function.cpp:64-68``; the FPR bound is hash-agnostic,
-SURVEY §2.4 #25).
+One reader: the unit of parallelism is a fixed-size BYTE RANGE of a file
+(``chunk_bytes``, default 16 MiB), so one monster genome fans out across
+tasks instead of serializing into one task's memory.  ``plan_chunks`` does
+a tiny header scan to find where sequence bytes start and cuts the rest
+into ranges; ``_chunk_seq_bytes`` reads one range, strips LF bytes and
+reads ahead exactly k-1 sequence bytes, so a window crossing a cut is
+emitted by the chunk it STARTS in.  That pair is the only way bytes leave a
+FASTA file: the filter build hashes the buffers, the ``fasta`` Data Source
+(``sources/fasta_datasource.py``) decodes them into k-mer rows.  K-mers are
+byte windows and lines split on LF only, so a CR stays in the sequence (as
+``std::getline`` keeps it on Linux, and as the DuckDB oracle keeps it);
+``parse_fasta``/``kmer_strings``/``kmer_hashes`` are the in-memory
+reference the tests compare the chunked stream against.  K-mer hashing is
+the vectorized byte-Horner kernel shared with the token n-gram path
+(``operators/kmers.py``): the window hash is computed over the raw
+sequence bytes with NumPy ``sliding_window_view`` — no per-window string
+materialization, no per-row Python — standing in for the reference's
+CityHash64-over-string (``Utils/hash_function.cpp:64-68``; the FPR bound is
+hash-agnostic, SURVEY §2.4 #25).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from cuckoofilter_spark.core.dynamic_filter import DynamicCuckooFilter
 from cuckoofilter_spark.operators.build import finish_filter, map_units, new_filter
@@ -57,16 +57,6 @@ def parse_fasta(text: str) -> tuple[str, str]:
             ident = line[1:]
             break
     return ident, "".join(l for l in lines[i:])
-
-
-def _read_text(path: str) -> str:
-    if "://" in path:
-        from pyarrow import fs as pafs
-
-        f, p = pafs.FileSystem.from_uri(path)
-        return f.open_input_file(p).read().decode("utf-8", errors="replace")
-    with open(path, encoding="utf-8", errors="replace") as fh:
-        return fh.read()
 
 
 def _open_stream(path: str):
@@ -110,8 +100,7 @@ def header_scan(path: str, block: int = 65536) -> tuple[str, int]:
                 line = buf[start:nl]
                 if line.startswith(b">"):
                     ident = line[1:].decode("utf-8", errors="replace")
-                    # strip a windows CR the same way split("\n") would NOT —
-                    # parse_fasta keeps it in the ident, so keep it here too
+                    # a CRLF header keeps its CR, as parse_fasta's LF split does
                     return ident, base + nl + 1
                 start = nl + 1
             if not chunk:  # EOF
@@ -129,6 +118,8 @@ def plan_chunks(paths: list[str],
     entry per ``chunk_bytes`` byte range of each file's sequence region.
     Metadata only (two small reads per file); the data itself is read by
     the tasks."""
+    if chunk_bytes < 1:
+        raise ValueError(f"chunk_bytes must be >= 1, got {chunk_bytes}")
     out = []
     cid = 0
     for path in sorted(paths):
@@ -147,77 +138,33 @@ def plan_chunks(paths: list[str],
     return out
 
 
-def _chunk_seq_bytes(path: str, start: int, end: int,
-                     k: int) -> tuple[np.ndarray, np.ndarray]:
-    """(chunk's own sequence bytes, k-1 lookahead sequence bytes) — newline
-    bytes stripped; the own range is one bounded read (≤ CHUNK_BYTES, sized
-    by the planner), the lookahead keeps reading past ``end`` until k-1
-    sequence bytes are gathered or EOF."""
+def _seq_only(blk: bytes) -> np.ndarray:
+    arr = np.frombuffer(blk, dtype=np.uint8)
+    return arr[arr != 0x0A]
+
+
+def _chunk_seq_bytes(path: str, start: int, end: int, k: int) -> np.ndarray:
+    """A chunk's window buffer: its own sequence bytes (LF bytes stripped)
+    plus up to k-1 lookahead sequence bytes past ``end`` (fewer only at
+    EOF), so it holds exactly the windows that START in the chunk.  The own
+    range is one bounded read (≤ ``chunk_bytes``, sized by the planner)."""
     with _open_stream(path) as fh:
         fh.seek(start)
-        own = np.frombuffer(fh.read(end - start), dtype=np.uint8)
-        own = own[own != 0x0A]
+        parts = [_seq_only(fh.read(end - start))]
         need = k - 1
-        ahead = []
-        got = 0
-        while got < need:
-            blk = fh.read(max(4096, 2 * need))
+        while need > 0:
+            blk = fh.read(max(4096, 2 * (k - 1)))
             if not blk:
                 break
-            arr = np.frombuffer(blk, dtype=np.uint8)
-            arr = arr[arr != 0x0A]
-            ahead.append(arr)
-            got += len(arr)
-        look = (np.concatenate(ahead)[:need] if ahead
-                else np.empty(0, dtype=np.uint8))
-    return own, look
+            parts.append(_seq_only(blk)[:need])
+            need -= len(parts[-1])
+    return np.concatenate(parts) if len(parts) > 1 else parts[0]
 
 
 #: 16 MiB sequence bytes per task — small enough that own+lookahead plus the
 #: emitted windows fit executor memory, large enough that a 3 GB genome is
 #: only ~200 tasks of split-plan metadata
 DEFAULT_CHUNK_BYTES = 16 << 20
-
-
-def _chunk_counts(spark: SparkSession,
-                  chunks: list[tuple[int, str, str, int, int]]) -> dict[int, int]:
-    """{chunk_id: own sequence-byte count} via one distributed pass (the
-    counts are what global k-mer positions are computed from; newline
-    density is unknowable from byte offsets alone).  Result is
-    metadata-scale: one int per chunk."""
-    bc = spark.sparkContext.broadcast(chunks)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        plan = bc.value
-        for pdf in batches:
-            cids = [int(i) for i in pdf["id"]]
-            ns = []
-            for i in cids:
-                cid, path, _, start, end = plan[i]
-                own, _ = _chunk_seq_bytes(path, start, end, k=1)
-                ns.append(len(own))
-            yield pd.DataFrame({"cid": [plan[i][0] for i in cids], "n": ns})
-
-    ids = spark.range(0, len(chunks), numPartitions=max(1, len(chunks)))
-    rows = ids.mapInPandas(fn, schema="cid long, n long").collect()
-    return {r["cid"]: r["n"] for r in rows}
-
-
-def _chunk_offsets(chunks: list[tuple[int, str, str, int, int]],
-                   counts: dict[int, int]) -> dict[int, int]:
-    """{chunk_id: global sequence position of the chunk's first byte} —
-    prefix sum of own-byte counts within each file (chunk ids are assigned
-    in (path, byte-range) order by plan_chunks)."""
-    offsets = {}
-    pos = 0
-    prev_path = None
-    for cid, path, _, _, _ in chunks:
-        if path != prev_path:
-            pos = 0
-            prev_path = path
-        offsets[cid] = pos
-        pos += counts[cid]
-    return offsets
 
 
 def kmer_strings(seq: str, k: int) -> list[str]:
@@ -258,102 +205,33 @@ def hash_kmer_batch(kmers: "np.ndarray | list[str]", k: int) -> np.ndarray:
     return acc
 
 
-def fasta_kmers_df(spark: SparkSession, paths: list[str], k: int,
-                   chunk_bytes: int | None = DEFAULT_CHUNK_BYTES) -> DataFrame:
-    """DataFrame of (seq_id, pos, kmer) — every stride-1 k-mer of every
-    file.  Default path: one task per ``chunk_bytes`` byte range with k-1
-    lookahead (a monster genome fans out; a windows crossing a cut belongs
-    to the chunk it STARTS in), preceded by one counting pass that fixes
-    each chunk's global sequence offset (newline density is unknowable
-    from byte offsets).  ``chunk_bytes=None``: the reference-exact
-    whole-file parse, one task per file — the fallback for non-ASCII
-    payloads where byte offsets aren't char offsets."""
-    if chunk_bytes is None:
-        files = sorted(paths)
-        bc = spark.sparkContext.broadcast(files)
-
-        def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            flist = bc.value
-            for pdf in batches:
-                for fid in pdf["id"]:
-                    ident, seq = parse_fasta(_read_text(flist[int(fid)]))
-                    kmers = kmer_strings(seq, k)
-                    if kmers:
-                        yield pd.DataFrame({
-                            "seq_id": ident,
-                            "pos": np.arange(len(kmers), dtype=np.int64),
-                            "kmer": kmers,
-                        })
-
-        ids = spark.range(0, len(files), numPartitions=max(1, len(files)))
-        return ids.mapInPandas(fn, schema="seq_id string, pos long, kmer string")
-
-    chunks = plan_chunks(sorted(paths), chunk_bytes)
-    offsets = _chunk_offsets(chunks, _chunk_counts(spark, chunks))
-    bc = spark.sparkContext.broadcast((chunks, offsets))
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        plan, offs = bc.value
-        for pdf in batches:
-            for i in pdf["id"]:
-                cid, path, ident, start, end = plan[int(i)]
-                own, look = _chunk_seq_bytes(path, start, end, k)
-                buf = np.concatenate([own, look]) if len(look) else own
-                w = len(buf) - k + 1
-                if w <= 0:
-                    continue
-                text = buf.tobytes().decode("utf-8", errors="replace")
-                yield pd.DataFrame({
-                    "seq_id": ident,
-                    "pos": offs[cid] + np.arange(w, dtype=np.int64),
-                    "kmer": [text[j:j + k] for j in range(w)],
-                })
-
-    ids = spark.range(0, len(chunks), numPartitions=max(1, len(chunks)))
-    return ids.mapInPandas(fn, schema="seq_id string, pos long, kmer string")
-
-
 def build_fasta_filter(spark: SparkSession, paths: list[str], k: int,
                        params: CuckooParams, dedup: bool = False,
-                       chunk_bytes: int | None = DEFAULT_CHUNK_BYTES,
+                       chunk_bytes: int = DEFAULT_CHUNK_BYTES,
                        ) -> DynamicCuckooFilter:
-    """Distributed k-mer filter build over FASTA files: each task streams
-    its ``chunk_bytes`` byte range (plus k-1 lookahead, so every window is
-    hashed exactly once, by the chunk it starts in), Horner-hashes the
-    windows straight off the raw bytes — no string materialization at all
-    on this path — and folds them into a partition filter; blobs
-    tree-merge as usual.  No counting pass: the build needs hashes, not
-    positions.  ``chunk_bytes=None`` = whole-file-per-task fallback.
-    ``dedup=False`` = the reference's insert-a-copy-per-occurrence
-    (``insertKmers``, ``Tests/cf_fasta_test.cpp:11-24``), which is what
-    makes the delete-all phase restore an empty filter."""
+    """Distributed k-mer filter build over FASTA files: one unit per
+    ``plan_chunks`` byte range, whose window buffer (``_chunk_seq_bytes``:
+    own bytes plus k-1 lookahead, so every window is hashed exactly once,
+    by the chunk it starts in) is Horner-hashed straight off the raw bytes
+    — no string materialization — and folded into a filter through
+    ``map_units``; blobs tree-merge as usual.  ``dedup=False`` = the
+    reference's insert-a-copy-per-occurrence (``insertKmers``,
+    ``Tests/cf_fasta_test.cpp:11-24``), which is what makes the delete-all
+    phase restore an empty filter."""
     files = sorted(paths)
     if not files:
         raise ValueError("no FASTA files given")
-
-    if chunk_bytes is None:
-        units: list = files
-
-        def seq_bytes_of(unit) -> np.ndarray:
-            _, seq = parse_fasta(_read_text(unit))
-            return np.frombuffer(seq.encode("utf-8"), dtype=np.uint8)
-    else:
-        units = plan_chunks(files, chunk_bytes)
-
-        def seq_bytes_of(unit) -> np.ndarray:
-            _, path, _, start, end = unit
-            own, look = _chunk_seq_bytes(path, start, end, k)
-            return np.concatenate([own, look]) if len(look) else own
-
     new_state = new_filter(params, dedup)
 
     def build_unit(unit, uid):
-        hashes = ngram_hashes(seq_bytes_of(unit), k)
+        _, path, _, start, end = unit
+        hashes = ngram_hashes(_chunk_seq_bytes(path, start, end, k), k)
         filt = new_state(uid)
         filt.update(hashes.astype(np.int64))
         return filt, 1, len(hashes)
 
-    filt, _, _ = map_units(spark, units, build_unit)
+    filt, _, _ = map_units(spark, plan_chunks(files, chunk_bytes),
+                          build_unit)
     return finish_filter(filt, params, dedup, compact=False)
 
 

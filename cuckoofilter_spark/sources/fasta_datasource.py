@@ -16,11 +16,12 @@ works like any other source.
           .option("path", "/data/genome.fna").option("k", 10).load())
     # seq_id string, kmer string
 
-Rows stream out as Arrow batches (one per chunk); the k-mer stream equals
-``fasta_kmers_df`` / the reference iterator order-insensitively
-(per-occurrence multiset parity is pytest-gated).  Positions are not part
-of the iterator contract (the reference's isn't positional either); use
-``fasta_kmers_df`` when global positions are needed.
+Rows stream out as Arrow batches, sliced per chunk (``batch_windows``).
+This is the one k-mer relation: its per-occurrence multiset equals the
+reference iterator's stream over ``parse_fasta`` of the file's raw bytes
+(pytest-gated, LF and CRLF; lines split on LF only, so a CR stays in the
+k-mers as ``std::getline`` keeps it).  Positions are not part of the
+iterator contract, the reference's isn't positional either.
 """
 
 from __future__ import annotations
@@ -92,6 +93,8 @@ class FastaDataSource(DataSource):
 
 class FastaChunkReader(DataSourceReader):
     def __init__(self, options):
+        from cuckoofilter_spark.sources.fasta import DEFAULT_CHUNK_BYTES
+
         path = options.get("path")
         if not path:
             raise ValueError("fasta source requires option 'path'")
@@ -99,7 +102,7 @@ class FastaChunkReader(DataSourceReader):
             raise ValueError("fasta source requires option 'k'")
         self.paths = [p for p in str(path).split(",") if p]
         self.k = int(options["k"])
-        self.chunk_bytes = int(options.get("chunk_bytes", 16 << 20))
+        self.chunk_bytes = int(options.get("chunk_bytes", DEFAULT_CHUNK_BYTES))
         self.batch_windows = int(options.get("batch_windows",
                                              self.BATCH_WINDOWS))
         if self.k < 1:
@@ -117,14 +120,12 @@ class FastaChunkReader(DataSourceReader):
     BATCH_WINDOWS = 65536
 
     def read(self, partition: FastaChunk):
-        import numpy as np
         import pyarrow as pa
 
         from cuckoofilter_spark.sources.fasta import _chunk_seq_bytes
 
-        own, look = _chunk_seq_bytes(partition.path, partition.start,
-                                     partition.end, self.k)
-        buf = np.concatenate([own, look]) if len(look) else own
+        buf = _chunk_seq_bytes(partition.path, partition.start,
+                               partition.end, self.k)
         w = len(buf) - self.k + 1
         if w <= 0:
             return

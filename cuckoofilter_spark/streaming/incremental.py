@@ -136,7 +136,7 @@ def streaming_distinct_by_key(stream_df, key_col: str, value_col: str,
         else:
             hll = HyperLogLog(p=p, seed=seed)
         for pdf in pdfs:
-            vals = pdf[value_col].to_numpy(dtype=np.int64, na_value=0)
+            vals = pdf[value_col].dropna().to_numpy(dtype=np.int64)
             if len(vals):
                 hll.update(vals)
         state.update((hll.to_bytes(),))

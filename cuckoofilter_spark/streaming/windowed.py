@@ -81,7 +81,7 @@ def windowed_distinct(stream_df, ts_col: str, value_col: str,
         hll = (HyperLogLog.from_bytes(bytes(state.get[0]))
                if state.exists else HyperLogLog(p=p, seed=seed))
         for pdf in pdfs:
-            vals = pdf[value_col].to_numpy(dtype=np.int64, na_value=0)
+            vals = pdf[value_col].dropna().to_numpy(dtype=np.int64)
             if len(vals):
                 hll.update(vals)
         end_ms = _epoch_ms(end)

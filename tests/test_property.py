@@ -177,12 +177,10 @@ def test_chunk_plan_reassembles_exact_kmer_stream(junk, ident, lines,
     """For ANY file shape (junk pre-header lines, ragged sequence lines,
     any chunk size ≥ 1 byte, any k): concatenating each chunk's windows in
     chunk order equals the whole-file parse's window list exactly —
-    order, count, and content (the invariant behind fasta_kmers_df /
-    build_fasta_filter / the fasta data source)."""
+    order, count, and content (the invariant behind the one FASTA reader,
+    which build_fasta_filter and the fasta data source share)."""
     import os
     import tempfile
-
-    import numpy as np
 
     from cuckoofilter_spark.sources.fasta import (
         _chunk_seq_bytes,
@@ -202,11 +200,8 @@ def test_chunk_plan_reassembles_exact_kmer_stream(junk, ident, lines,
         got = []
         for _, p, got_ident, start, end in plan_chunks([path], chunk_bytes):
             assert got_ident == want_ident
-            own, look = _chunk_seq_bytes(p, start, end, k)
-            buf = np.concatenate([own, look]) if len(look) else own
-            s = buf.tobytes().decode()
-            got.extend(s[j:j + k] for j in range(len(own))
-                       if j + k <= len(s))
+            buf = _chunk_seq_bytes(p, start, end, k)
+            got.extend(kmer_strings(buf.tobytes().decode(), k))
         assert got == want
     finally:
         os.unlink(path)

@@ -120,7 +120,7 @@ def test_partitioned_persist_prunes_routes(spark, routed, keys_df, tmp_path_fact
     from cuckoofilter_spark.plans import read_schema_columns
 
     path = str(tmp_path_factory.mktemp("routedp") / "state")
-    saved = routed.persist(path, partition_by_route=True)
+    saved = routed.persist(path)
     assert saved.contains(keys_df, "k").filter(~F.col("member")).count() == 0
     one = saved.state.filter(F.col("route") == 3)
     # partition pruning: route is a partition column, not data read
@@ -129,17 +129,33 @@ def test_partitioned_persist_prunes_routes(spark, routed, keys_df, tmp_path_fact
 
 
 def test_pre_dedup_build_same_answers(spark):
-    """Map-side-deduped build = plain build on a duplicate-heavy (Zipf-ish)
-    stream: identical membership answers, shuffle carries distinct keys."""
-    from pyspark.sql import functions as F
-
+    """Set-semantics builds dedup map-side before the route shuffle; on a
+    duplicate-heavy (Zipf-ish) stream every distinct key is a member,
+    held-out probes stay within the FP bound, and each key is stored once
+    at most (n_keys ≤ distinct keys; a kicked-out key may be lost only
+    into the FP budget, never counted twice)."""
     keys = (spark.range(0, 200_000)
             .select(F.pmod(F.col("id") * F.col("id"), F.lit(5000)).alias("k")))
     params = CuckooParams(max_table_size=2048, bits_per_fp=16)
-    plain = RoutedCuckooFilter.build(keys, "k", params, n_routes=8,
-                                     pre_dedup=False)
-    deduped = RoutedCuckooFilter.build(keys, "k", params, n_routes=8)  # auto-on
-    probes = spark.range(0, 10_000).select(F.col("id").alias("k"))
-    a = {r["k"]: r["member"] for r in plain.contains(probes, "k").collect()}
-    b = {r["k"]: r["member"] for r in deduped.contains(probes, "k").collect()}
-    assert a == b
+    routed = RoutedCuckooFilter.build(keys, "k", params, n_routes=8)
+    distinct = keys.distinct()
+    n_distinct = distinct.count()
+    assert routed.contains(distinct, "k").filter(~F.col("member")).count() == 0
+    held_out = spark.range(10_000, 20_000).select(F.col("id").alias("k"))
+    n_fp = routed.contains(held_out, "k").filter(F.col("member")).count()
+    assert n_fp <= max(3, int(3 * params.fpr_bound * 10_000))
+    assert routed.stats()["n_keys"] <= n_distinct
+
+
+def test_null_key_is_never_a_member(spark):
+    """A NULL probe answers what an absent key answers: the probe row keeps
+    its NULL and member=False; a NULL build key is not inserted (so 0,
+    never inserted, stays a non-member)."""
+    keys = spark.createDataFrame([(1,), (2,), (None,)], "k long")
+    params = CuckooParams(max_table_size=1024, bits_per_fp=16)
+    routed = RoutedCuckooFilter.build(keys, "k", params, n_routes=4)
+    assert routed.stats()["n_keys"] == 2
+    probes = spark.createDataFrame([(None,), (0,), (1,), (5,)], "k long")
+    got = {r["k"]: r["member"]
+           for r in routed.contains(probes, "k").collect()}
+    assert got == {None: False, 0: False, 1: True, 5: False}

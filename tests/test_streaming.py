@@ -91,6 +91,44 @@ def test_streaming_distinct_by_key(spark, token_files, tmp_path):
         assert abs(got[k] - e) / e <= rel, (k, got[k], e)
 
 
+def test_streaming_distinct_drops_nulls(spark, tmp_path):
+    """NULL is not a value: key a = {1, 2, NULL} counts 2 and an all-NULL
+    key counts 0 through both streaming HLL operators, exactly as
+    countDistinct does (an error of +1 hides inside the HLL bound of the
+    ~1000-distinct tests above)."""
+    import pyspark.sql.functions as F
+
+    from cuckoofilter_spark.streaming.windowed import windowed_distinct
+
+    src = str(tmp_path / "nulls")
+    t0 = 1_700_000_000
+    rows = [("a", t0, 1), ("a", t0 + 1, 2), ("a", t0 + 2, None),
+            ("b", t0 + 3600, None), ("b", t0 + 3601, None)]
+    (spark.createDataFrame(rows, "key string, t long, v long")
+     .select("key", F.timestamp_seconds("t").alias("ts"), "v")
+     .coalesce(1).write.parquet(src))
+    batch = spark.read.parquet(src)
+    stream = spark.readStream.schema(batch.schema).parquet(src)
+
+    def run(df, name):
+        q = (df.writeStream.format("memory").queryName(name)
+             .option("checkpointLocation", str(tmp_path / name))
+             .outputMode("update").trigger(availableNow=True).start())
+        q.awaitTermination(300)
+        return spark.sql(f"SELECT * FROM {name}").collect()
+
+    exact = {r["key"]: r["n"] for r in
+             batch.groupBy("key").agg(F.countDistinct("v").alias("n")).collect()}
+    assert exact == {"a": 2, "b": 0}
+    by_key = {r["key"]: r["ndv_estimate"] for r in
+              run(streaming_distinct_by_key(stream, "key", "v"), "null_by_key")}
+    assert by_key == exact
+    by_window = {r["window_start"]: r["ndv_estimate"] for r in
+                 run(windowed_distinct(stream, "ts", "v", window="10 minutes",
+                                       watermark="6 hours"), "null_by_window")}
+    assert sorted(by_window.values()) == [0, 2]
+
+
 def test_windowed_distinct_with_watermark(spark, tmp_path):
     """Tumbling 10-min windows over event time: per-window streaming NDV
     matches exact distinct counts within the HLL bound."""
