@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from cuckoofilter_spark.core.cuckoo_table import CuckooTable
+from cuckoofilter_spark.core.cuckoo_table import CuckooTable, KickDraws
 from cuckoofilter_spark.hashing import hash64
 from cuckoofilter_spark.params import CuckooParams
 
@@ -28,14 +28,15 @@ from cuckoofilter_spark.params import CuckooParams
 class CuckooFilter:
     """Single-table cuckoo filter over integer keys."""
 
-    __slots__ = ("params", "table", "victim", "rng")
+    __slots__ = ("params", "table", "victim", "draws")
 
     def __init__(self, params: CuckooParams, table: CuckooTable | None = None,
                  victim: tuple[int, int] | None = None, rng_seed: int = 0):
         self.params = params
         self.table = table if table is not None else CuckooTable(params)
         self.victim = victim  # (index, fp) or None
-        self.rng = np.random.default_rng(np.uint64(params.seed) ^ np.uint64(rng_seed) ^ np.uint64(0xC0FFEE))
+        self.draws = KickDraws(np.uint64(params.seed) ^ np.uint64(rng_seed) ^ np.uint64(0xC0FFEE),
+                               params.entries_per_bucket)
 
     # -- hashing ------------------------------------------------------------
     def first_pass(self, keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -70,10 +71,10 @@ class CuckooFilter:
             ok[np.nonzero(pend)[0][placed2]] = True
             res_pos = np.nonzero(pend)[0][~placed2]
             res_i2 = i2[~placed2]
-            for k, pos in enumerate(res_pos):
+            for pos, fp, i in zip(res_pos.tolist(), fps[res_pos].tolist(), res_i2.tolist()):
                 if self.victim is not None:
                     break
-                leftover = self.table.kick_insert(int(fps[pos]), int(res_i2[k]), self.rng)
+                leftover = self.table.kick_insert(fp, i, self.draws)
                 ok[pos] = True
                 if leftover is not None:
                     self.victim = leftover
@@ -121,7 +122,7 @@ class CuckooFilter:
             if self.victim is not None:
                 vi, vfp = self.victim
                 self.victim = None
-                leftover = self.table.kick_insert(vfp, vi, self.rng)
+                leftover = self.table.kick_insert(vfp, vi, self.draws)
                 if leftover is not None:
                     self.victim = leftover
         return out

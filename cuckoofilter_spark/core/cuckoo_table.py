@@ -28,6 +28,7 @@ import numpy as np
 from cuckoofilter_spark.params import KICKS_MAX_COUNT, LEGAL_CONFIGS, MURMUR_CONST, CuckooParams
 
 _U32_MASK = np.uint64(0xFFFFFFFF)
+_MC = int(MURMUR_CONST)
 
 
 def _swar_lanes(epb: int, lane: type) -> tuple[type, np.unsignedinteger, np.unsignedinteger]:
@@ -41,6 +42,36 @@ def _swar_lanes(epb: int, lane: type) -> tuple[type, np.unsignedinteger, np.unsi
 
 #: (entries_per_bucket, bits_per_fp) -> ``_swar_lanes`` of its bucket word
 _SWAR = {cfg: _swar_lanes(cfg[0], lane) for cfg, lane in LEGAL_CONFIGS.items()}
+
+
+class KickDraws:
+    """The eviction-slot draws of one filter's kick loops: a seeded
+    ``np.random.Generator`` read ``BUFFER`` draws at a time.
+
+    ``Generator.integers(epb, size=n)`` yields exactly the values (and
+    leaves exactly the generator state) of ``n`` scalar
+    ``integers(epb)`` calls, for every legal ``epb`` (2 and 4: a
+    power-of-two bound never rejects a 32-bit draw).  The filter's
+    generator is read by nothing but its kicks and is not serialized, so
+    the draws a build consumes, and therefore its bytes, are those of one
+    scalar draw per kick; a scalar draw costs ~2 µs, the buffered one tens
+    of ns."""
+
+    __slots__ = ("gen", "epb", "buf", "pos")
+
+    BUFFER = 1024
+
+    def __init__(self, seed: np.uint64, epb: int):
+        self.gen = np.random.default_rng(seed)
+        self.epb = epb
+        self.buf: list[int] = []
+        self.pos = 0
+
+    def refill(self) -> list[int]:
+        """Draw the next ``BUFFER`` slots; returns the new buffer."""
+        self.buf = self.gen.integers(self.epb, size=self.BUFFER).tolist()
+        self.pos = 0
+        return self.buf
 
 
 class CuckooTable:
@@ -104,44 +135,53 @@ class CuckooTable:
         return placed
 
     # -- kick loop ---------------------------------------------------------
-    def kick_insert(self, fp: int, idx: int, rng: np.random.Generator):
+    def kick_insert(self, fp: int, idx: int, draws: KickDraws):
         """Eviction chain for one residual item, reference
         ``CF/cuckoo_filter.h:199-223``: bounded at KICKS_MAX_COUNT (500),
-        random in-bucket eviction (``CF/cuckoo_table.h:236``; our RNG is a
-        seeded ``np.random.Generator`` for determinism and resume-safety).
+        random in-bucket eviction (``CF/cuckoo_table.h:236``; the slot is
+        the next draw of the filter's seeded ``KickDraws``, for determinism
+        and resume-safety).
 
         Returns ``None`` on success, else the ``(index, fp)`` pair left over
         when the bound is hit (the reference parks it in the victim cache).
+
+        The chain is sequential, so it runs on plain Python ints: the table
+        and the occupancy are read and written through flat memoryviews
+        (slot ``i * epb + j``), never through NumPy scalars.
         """
         epb = self.params.entries_per_bucket
+        mask = self.params.table_size - 1
+        tbl = memoryview(self.table.reshape(-1))
+        occ = memoryview(self.occ)
         cur_fp = int(fp)
         cur_i = int(idx)
-        mask = self.params.table_size - 1
-        mc = int(MURMUR_CONST)
-        tbl = self.table
-        occ = self.occ
         # Futile-eviction fast path: when BOTH candidate buckets are full
         # of this very fingerprint (multiset mode piling copies of one hot
         # key), every kick swaps fp for fp and the complement bounces
         # between the same two buckets — 500 iterations that provably
         # cannot place anything.  Park it immediately instead (measured:
         # 500 duplicate inserts 38 s → linear without this).
-        alt = (cur_i ^ ((cur_fp * mc) & 0xFFFFFFFF)) & mask
+        alt = (cur_i ^ ((cur_fp * _MC) & 0xFFFFFFFF)) & mask
         if (occ[cur_i] == epb and occ[alt] == epb
-                and (tbl[cur_i] == cur_fp).all() and (tbl[alt] == cur_fp).all()):
+                and tbl[cur_i * epb:(cur_i + 1) * epb].tolist() == [cur_fp] * epb
+                and tbl[alt * epb:(alt + 1) * epb].tolist() == [cur_fp] * epb):
             return (cur_i, cur_fp)
+        buf, pos = draws.buf, draws.pos
         for _ in range(KICKS_MAX_COUNT):
             o = occ[cur_i]
             if o < epb:
-                tbl[cur_i, o] = cur_fp
+                tbl[cur_i * epb + o] = cur_fp
                 occ[cur_i] = o + 1
                 self.element_count += 1
+                draws.pos = pos
                 return None
-            j = int(rng.integers(epb))
-            prev = int(tbl[cur_i, j])
-            tbl[cur_i, j] = cur_fp
-            cur_fp = prev
-            cur_i = (cur_i ^ ((cur_fp * mc) & 0xFFFFFFFF)) & mask
+            if pos == len(buf):
+                buf, pos = draws.refill(), 0
+            s = cur_i * epb + buf[pos]
+            pos += 1
+            cur_fp, tbl[s] = tbl[s], cur_fp
+            cur_i = (cur_i ^ ((cur_fp * _MC) & 0xFFFFFFFF)) & mask
+        draws.pos = pos
         return (cur_i, cur_fp)
 
     # -- probing ------------------------------------------------------------
@@ -175,6 +215,34 @@ class CuckooTable:
         self.occ[idx] = last
         self.element_count -= 1
         return True
+
+    def delete_stored(self, rows: np.ndarray, fps: np.ndarray) -> None:
+        """Remove stored copies, one per (row, fp) pair, leaving the exact
+        bytes of calling ``delete_at(row, fp)`` on each pair in order.
+
+        Every pair must name a stored copy, and ``rows`` must be
+        non-decreasing (``nonzero_entries`` order, so each bucket's pairs
+        are one run).  Buckets are independent, so pass k replays every
+        bucket's k-th ``delete_at`` at once: first lane holding the fp ←
+        last occupied lane, last lane ← 0, occ −= 1.  A bucket has at most
+        ``entries_per_bucket`` pairs, which bounds the passes."""
+        n = len(rows)
+        if n == 0:
+            return
+        start = np.flatnonzero(np.r_[True, rows[1:] != rows[:-1]])
+        rank = np.arange(n) - np.repeat(start, np.diff(np.r_[start, n]))
+        tbl = self.table
+        for k in range(int(rank.max()) + 1):
+            sel = rank == k
+            r = rows[sel]
+            hit = tbl[r] == fps[sel].astype(tbl.dtype)[:, None]
+            assert hit.any(axis=1).all(), "delete_stored: pair not stored"
+            j = hit.argmax(axis=1)
+            last = self.occ[r].astype(np.int64) - 1
+            tbl[r, j] = tbl[r, last]
+            tbl[r, last] = 0
+            self.occ[r] = last
+        self.element_count -= n
 
     def bulk_delete_at(self, bidx: np.ndarray, fps: np.ndarray) -> np.ndarray:
         """Vectorized batch of ``delete_at``: for each (bucket, fp) request

@@ -22,6 +22,13 @@ Ours differs in two deliberate, semantics-preserving ways:
   is valid — the partner is recoverable from (i, fp), which also lets us
   relocate).  Strictly more effective compaction, same membership answers.
 
+The driver tail of a chained build (the last merge fold, then ``compact``)
+runs no per-fingerprint NumPy-scalar loop: kick chains, sequential by the
+reference's semantics, run on plain Python ints and take their eviction
+slots from the filter's one buffered ``KickDraws``; ``compact`` removes a
+donor's moved fingerprints in one vectorized ``delete_stored`` call.  Both
+leave the bytes the per-element loops left.
+
 ``merge`` is the DCF chain/compaction machinery turned into a distributed
 combiner: merging two filters = re-inserting every stored (bucket, fp) pair
 of one into the other, chain-appending on overflow.  The stored fingerprint
@@ -36,7 +43,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from cuckoofilter_spark.core.cuckoo_table import CuckooTable
+from cuckoofilter_spark.core.cuckoo_table import CuckooTable, KickDraws
 from cuckoofilter_spark.hashing import hash64
 from cuckoofilter_spark.params import CuckooParams
 
@@ -73,16 +80,15 @@ class DynamicCuckooFilter:
     default.  One delete removes membership (set semantics, documented).
     """
 
-    __slots__ = ("params", "tables", "rng", "dedup")
+    __slots__ = ("params", "tables", "draws", "dedup")
 
     def __init__(self, params: CuckooParams, tables: list[CuckooTable] | None = None,
                  rng_seed: int = 0, dedup: bool = False):
         self.params = params
         self.tables = tables if tables is not None else [CuckooTable(params)]
         self.dedup = dedup
-        self.rng = np.random.default_rng(
-            np.uint64(params.seed) ^ np.uint64(rng_seed) ^ np.uint64(0xD1CE)
-        )
+        self.draws = KickDraws(np.uint64(params.seed) ^ np.uint64(rng_seed) ^ np.uint64(0xD1CE),
+                               params.entries_per_bucket)
 
     # -- hashing (shared with CF) --------------------------------------------
     def first_pass(self, keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -171,11 +177,9 @@ class DynamicCuckooFilter:
                 i2 = t.complement(take_i[pend], take_fp[pend])
                 placed2 = t.bulk_place(take_fp[pend], i2)
                 res = ~placed2
-                res_fp = take_fp[pend][res]
-                res_i2 = i2[res]
                 spill_fp, spill_i = [], []
-                for k in range(len(res_fp)):
-                    leftover = t.kick_insert(int(res_fp[k]), int(res_i2[k]), self.rng)
+                for fp, i in zip(take_fp[pend][res].tolist(), i2[res].tolist()):
+                    leftover = t.kick_insert(fp, i, self.draws)
                     if leftover is not None:
                         spill_i.append(leftover[0])
                         spill_fp.append(leftover[1])
@@ -244,7 +248,13 @@ class DynamicCuckooFilter:
         drop emptied tables (``compact``/``moveElements``,
         ``DCF/dynamic_cuckoo_filter.h:435-493``, ``DCF/cuckoo_filter.h:286-305``).
         Donor order: ascending element count (the reference bubble-sorts the
-        same way, ``:477-493``) — canonical order keeps merges deterministic."""
+        same way, ``:477-493``) — canonical order keeps merges deterministic.
+
+        Each donor's fingerprints go to the recipients by ``bulk_place``
+        (own bucket, then partner).  A fully moved donor is dropped; a
+        partly moved one loses its moved copies in one
+        ``CuckooTable.delete_stored``, which leaves the bytes of one
+        ``delete_at`` per moved copy."""
         if len(self.tables) <= 1:
             return
         order = sorted(range(len(self.tables)), key=lambda i: (self.tables[i].element_count, i))
@@ -276,8 +286,7 @@ class DynamicCuckooFilter:
                 d.element_count = 0
             elif moved_mask.any():
                 # physically remove the moved copies from the donor
-                for pos in np.nonzero(moved_mask)[0]:
-                    d.delete_at(int(rows[pos]), int(fps[pos]))
+                d.delete_stored(rows[moved_mask], fps[moved_mask])
         self.tables = survivors if survivors else [CuckooTable(self.params)]
 
     # -- merge ------------------------------------------------------------------------

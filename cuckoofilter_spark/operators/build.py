@@ -91,8 +91,10 @@ def _keys_from_arrow(col) -> np.ndarray:
     """Flatten an Arrow scalar-int or list<int> column to int64 — zero-copy
     offsets arithmetic, no per-row Python.  This path is ~10× faster than
     pandas list-of-array handling and is where "vectorized Arrow UDFs, no
-    per-row Python" (north_star) is actually won or lost.  Null rows add no
-    key; a null element becomes key 0."""
+    per-row Python" (north_star) is actually won or lost.  A null list row
+    adds no key; a null scalar row or list element becomes key 0, which
+    keeps a probe batch row-aligned.  Builds drop null rows before this
+    (``fold_batches``)."""
     import pyarrow as pa
 
     if pa.types.is_list(col.type) or pa.types.is_large_list(col.type):
@@ -117,12 +119,14 @@ def emit_blob(pid: int, blob: bytes, n_rows: int, n_items: int):
 
 
 def fold_batches(state, batches, extract=_keys_from_arrow) -> tuple[int, int]:
-    """Fold record batches into ``state``: column 0 of each batch goes
-    through ``extract`` into ``state.update``.  Returns (n_rows, n_items)."""
+    """Fold record batches into ``state``: column 0 of each batch, its
+    null rows dropped (NULL is not a value), goes through ``extract`` into
+    ``state.update``.  Returns (n_rows, n_items); n_rows counts null rows."""
     n_rows = 0
     n_items = 0
     for b in batches:
-        keys = extract(b.column(0))
+        col = b.column(0)
+        keys = extract(col.drop_null() if col.null_count else col)
         n_rows += b.num_rows
         n_items += len(keys)
         if len(keys):

@@ -3,6 +3,7 @@
     python tests/data/make_fixtures.py fasta        # FASTA genome + probe list
     python tests/data/make_fixtures.py checkpoint   # golden checkpoint (needs Spark)
     python tests/data/make_fixtures.py blobs        # golden filter bytes per config
+    python tests/data/make_fixtures.py compacted    # the same chains, compacted
 
 ``fasta`` writes ``synth_small.fna`` — one record, 1,000 bases of seeded
 ACGT with a few ``N`` runs, wrapped at 70 columns (the shape of a small
@@ -26,6 +27,13 @@ chains to at least two tables and takes kicks.  Existing blobs are left
 alone and checked instead.  They pin placement, dedup and merge to the
 bytes the kernels produced when the blobs were written
 (``tests/test_cuckoo_core.py`` rebuilds each one).
+
+``compacted`` writes ``golden_compacted/<epb>x<bits>_<set|multiset>.bin``:
+the chain behind each golden blob, run through
+``DynamicCuckooFilter.compact`` and serialized.  Every case leaves at least
+one donor table holding fewer fingerprints than before (the partial-donor
+branch), so these blobs pin ``compact``'s removal order as well as its
+placement.  Like ``blobs``, existing files are checked, never rewritten.
 """
 
 from __future__ import annotations
@@ -47,6 +55,7 @@ FNA = os.path.join(HERE, "synth_small.fna")
 KMERS_10 = os.path.join(HERE, "synth_small_kmers_10.txt")
 GOLDEN = os.path.join(HERE, "golden_ckpt")
 GOLDEN_BLOBS = os.path.join(HERE, "golden_blobs")
+GOLDEN_COMPACTED = os.path.join(HERE, "golden_compacted")
 
 FASTA_IDENT = "SYNTH0001.1 synthetic test genome, seed 2718"
 FASTA_BASES = 1000
@@ -72,11 +81,10 @@ def golden_blob_name(epb: int, bits: int, dedup: bool) -> str:
     return f"{epb}x{bits}_{'set' if dedup else 'multiset'}.bin"
 
 
-def golden_blob(epb: int, bits: int, dedup: bool) -> bytes:
+def golden_filter(epb: int, bits: int, dedup: bool):
     """Insert the first half of the stream in three batches, build the
-    second half in a second filter, merge it in, and serialize."""
+    second half in a second filter, and merge it in."""
     from cuckoofilter_spark.core.dynamic_filter import DynamicCuckooFilter
-    from cuckoofilter_spark.core.serde import serialize_filter
     from cuckoofilter_spark.params import CuckooParams
 
     keys = golden_stream()
@@ -88,7 +96,23 @@ def golden_blob(epb: int, bits: int, dedup: bool) -> bytes:
         filt.insert(batch)
     other = DynamicCuckooFilter(params, rng_seed=8, dedup=dedup)
     other.insert(keys[half:])
-    return serialize_filter(filt.merge(other))
+    return filt.merge(other)
+
+
+def golden_blob(epb: int, bits: int, dedup: bool) -> bytes:
+    """The serialized ``golden_filter``."""
+    from cuckoofilter_spark.core.serde import serialize_filter
+
+    return serialize_filter(golden_filter(epb, bits, dedup))
+
+
+def golden_compacted(epb: int, bits: int, dedup: bool) -> bytes:
+    """The ``golden_filter`` chain after ``compact``, serialized."""
+    from cuckoofilter_spark.core.serde import serialize_filter
+
+    filt = golden_filter(epb, bits, dedup)
+    filt.compact()
+    return serialize_filter(filt)
 
 
 def make_fasta() -> None:
@@ -146,15 +170,17 @@ def make_checkpoint() -> None:
         spark.stop()
 
 
-def make_blobs() -> None:
+def make_blobs(out_dir: str = GOLDEN_BLOBS, build=golden_blob) -> None:
+    """Write ``build(epb, bits, dedup)`` for every legal config and mode
+    into ``out_dir``; check (never rewrite) the files already there."""
     from cuckoofilter_spark.params import LEGAL_CONFIGS
 
-    os.makedirs(GOLDEN_BLOBS, exist_ok=True)
+    os.makedirs(out_dir, exist_ok=True)
     bad = []
     for epb, bits in LEGAL_CONFIGS:
         for dedup in (True, False):
-            path = os.path.join(GOLDEN_BLOBS, golden_blob_name(epb, bits, dedup))
-            blob = golden_blob(epb, bits, dedup)
+            path = os.path.join(out_dir, golden_blob_name(epb, bits, dedup))
+            blob = build(epb, bits, dedup)
             if not os.path.exists(path):
                 with open(path, "wb") as f:
                     f.write(blob)
@@ -165,14 +191,16 @@ def make_blobs() -> None:
             print(json.dumps({"blob": os.path.basename(path), "bytes": len(blob),
                               "md5": hashlib.md5(blob).hexdigest()}))
     if bad:
-        raise SystemExit(f"rebuild does not reproduce golden blobs: {bad}")
+        raise SystemExit(f"rebuild does not reproduce {out_dir}: {bad}")
 
 
 if __name__ == "__main__":
-    what = sys.argv[1:] or ["fasta", "checkpoint", "blobs"]
+    what = sys.argv[1:] or ["fasta", "checkpoint", "blobs", "compacted"]
     if "fasta" in what:
         make_fasta()
     if "checkpoint" in what:
         make_checkpoint()
     if "blobs" in what:
         make_blobs()
+    if "compacted" in what:
+        make_blobs(GOLDEN_COMPACTED, golden_compacted)

@@ -142,6 +142,26 @@ def test_null_keys_match_fast_build(spark, tmp_path):
     assert np.array_equal(ckpt.contains(probes), fast.contains(probes))
 
 
+def test_null_rows_of_scalar_key_column_add_no_key(spark, tmp_path):
+    """A NULL row of a scalar ``long`` key column adds no key — not key 0 —
+    in ``build_filter``, in ``build_sketch`` and in the checkpointed build."""
+    from cuckoofilter_spark.operators.build import build_filter
+    from cuckoofilter_spark.operators.sketch_build import build_sketch
+    from cuckoofilter_spark.sketches import HyperLogLog
+
+    df = spark.createDataFrame([(1,), (None,), (2,), (None,)], "k long")
+    fast = build_filter(df, "k", PARAMS)
+    probes = np.array([0, 1, 2], dtype=np.int64)
+    assert fast.contains(probes).tolist() == [False, True, True]
+    assert fast.element_count == 2
+    hll = build_sketch(df, "k", lambda pid: HyperLogLog(12))
+    assert round(hll.estimate()) == 2
+    ckpt = checkpointed_build_filter(spark, df, "k", PARAMS, str(tmp_path / "ck"),
+                                     n_shards=4)
+    assert ckpt.contains(probes).tolist() == [False, True, True]
+    assert ckpt.element_count == 2
+
+
 def test_golden_checkpoint_finalizes_to_recorded_filter(spark, tmp_path):
     """Frozen wire format: a complete 8-shard checkpoint written by an
     earlier version (``tests/data/golden_ckpt``, made by

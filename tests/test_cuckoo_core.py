@@ -4,6 +4,7 @@ fill-to-failure load factor, DCF growth + compaction, plus our additional
 obligations: serde round-trip, merge associativity, 12/4-bit packing.
 """
 
+import hashlib
 import importlib.util
 import itertools
 import os
@@ -12,7 +13,7 @@ import numpy as np
 import pytest
 
 from cuckoofilter_spark.core import CuckooFilter, DynamicCuckooFilter
-from cuckoofilter_spark.core.cuckoo_table import CuckooTable
+from cuckoofilter_spark.core.cuckoo_table import CuckooTable, KickDraws
 from cuckoofilter_spark.core.dynamic_filter import _first_occurrence
 from cuckoofilter_spark.core.serde import deserialize_filter, serialize_filter
 from cuckoofilter_spark.params import LEGAL_CONFIGS, CuckooParams, highest_power_of_two
@@ -180,13 +181,115 @@ def test_golden_blob_bytes_per_config(epb, bits, dedup, monkeypatch):
     assert serialize_filter(filt) == want
 
 
-def test_cf_serde_preserves_victim():
-    p = CuckooParams(max_table_size=128, bits_per_fp=16)
-    cf = CuckooFilter(p)
+@pytest.mark.parametrize("dedup", [True, False], ids=["set", "multiset"])
+@pytest.mark.parametrize("epb,bits", sorted(LEGAL_CONFIGS))
+def test_golden_compacted_bytes_per_config(epb, bits, dedup):
+    """``compact`` reproduces the committed compacted chains
+    (``tests/data/golden_compacted``, written by ``make_fixtures.py
+    compacted``) byte for byte, so its removal order is pinned too: every
+    case leaves a donor holding fewer fingerprints than before (the
+    partial-donor branch)."""
+    name = fixtures.golden_blob_name(epb, bits, dedup)
+    with open(os.path.join(fixtures.GOLDEN_COMPACTED, name), "rb") as f:
+        want = f.read()
+    filt = fixtures.golden_filter(epb, bits, dedup)
+    before = {id(t): t.element_count for t in filt.tables}
+    filt.compact()
+    assert serialize_filter(filt) == want
+    assert any(t.element_count < before[id(t)] for t in filt.tables), \
+        "no donor took the partial-donor branch"
+
+
+@pytest.mark.parametrize("epb,bits", [(4, 4), (4, 16), (2, 32)])
+def test_delete_stored_matches_delete_at_loop(epb, bits):
+    """The vectorized removal of ``compact`` leaves the bytes of calling
+    ``delete_at`` once per pair, in ``nonzero_entries`` order — duplicate
+    fingerprints in one bucket included."""
+    rng = np.random.default_rng(epb * 100 + bits)
+    p = CuckooParams(max_table_size=256, entries_per_bucket=epb, bits_per_fp=bits)
+    table = rng.integers(1, 4, size=(p.table_size, epb)).astype(p.dtype)
+    table[rng.random(table.shape) < 0.3] = 0
+    table = -np.sort(-table.astype(np.int64), axis=1)  # left-packed
+    a = CuckooTable(p, table.astype(p.dtype))
+    b = CuckooTable(p, table.astype(p.dtype))
+    rows, fps = a.nonzero_entries()
+    pick = rng.random(len(rows)) < 0.6
+    a.delete_stored(rows[pick], fps[pick])
+    for r, f in zip(rows[pick].tolist(), fps[pick].tolist()):
+        assert b.delete_at(r, f)
+    assert np.array_equal(a.table, b.table)
+    assert np.array_equal(a.occ, b.occ)
+    assert a.element_count == b.element_count
+
+
+@pytest.mark.parametrize("buffer", [7, KickDraws.BUFFER])
+@pytest.mark.parametrize("epb", [2, 4])
+def test_kick_draws_reproduce_scalar_stream(epb, buffer, monkeypatch):
+    """Buffered eviction-slot draws are the scalar ``integers(epb)``
+    stream, across refills, and leave the generator where the scalar
+    draws leave it."""
+    monkeypatch.setattr(KickDraws, "BUFFER", buffer)
+    seed = np.uint64(0xD1CE) ^ np.uint64(17)
+    draws = KickDraws(seed, epb)
+    got = [j for _ in range(3) for j in draws.refill()]
+    g = np.random.default_rng(seed)
+    assert got == [int(g.integers(epb)) for _ in range(3 * buffer)]
+    assert draws.gen.bit_generator.state == g.bit_generator.state
+
+
+def _filled_to_failure() -> tuple[CuckooFilter, int]:
+    """A static filter fed 256-key batches until it parks a victim."""
+    cf = CuckooFilter(CuckooParams(max_table_size=128, bits_per_fp=16))
     i = 0
     while not cf.is_full():
         cf.insert(np.arange(i, i + 256, dtype=np.int64))
         i += 256
+    return cf, i
+
+
+def test_static_filter_filled_to_failure_bytes():
+    """Kicks (and the draws they consume) up to the victim reproduce the
+    bytes recorded before the draws were buffered."""
+    cf, _ = _filled_to_failure()
+    assert cf.victim == (23, 44996)
+    assert hashlib.md5(serialize_filter(cf)).hexdigest() == "70e6a050225040261407bcd9f0404fd1"
+
+
+@pytest.mark.parametrize("dedup", [True, False], ids=["set", "multiset"])
+def test_kick_exhaustion_spills_to_another_table(dedup, monkeypatch):
+    """Two-slot buckets loaded to the 0.9 watermark exhaust the 500-kick
+    bound: every pair a ``kick_insert`` hands back is stored in another
+    chain table, no key is lost, and the element count is the distinct
+    (bucket pair, fp) count in set mode and the insert count in multiset."""
+    p = CuckooParams(max_table_size=100, entries_per_bucket=2, bits_per_fp=32)
+    leftovers = []
+    kick_insert = CuckooTable.kick_insert
+
+    def counted(self, *a):
+        r = kick_insert(self, *a)
+        if r is not None:
+            leftovers.append((self, *r))
+        return r
+
+    monkeypatch.setattr(CuckooTable, "kick_insert", counted)
+    keys = np.random.default_rng(9).integers(0, 1500, 3000)
+    f = DynamicCuckooFilter(p, dedup=dedup)
+    for batch in np.array_split(keys, 4):
+        f.insert(batch)
+    assert leftovers, "the load must exhaust the kick bound"
+    for src, i, fp in leftovers:
+        alt = int(src.complement(np.array([i]), np.array([fp]))[0])
+        assert any((t.table[i] == fp).any() or (t.table[alt] == fp).any()
+                   for t in f.tables if t is not src)
+    assert f.contains(keys).all()
+    fp, i1 = f.first_pass(keys)
+    canon = np.minimum(i1, f.tables[0].complement(i1, fp))
+    pairs = np.unique((canon.astype(np.uint64) << np.uint64(32)) | fp.astype(np.uint64))
+    assert f.element_count == (len(pairs) if dedup else len(keys))
+
+
+def test_cf_serde_preserves_victim():
+    cf, i = _filled_to_failure()
     g = deserialize_filter(serialize_filter(cf))
     assert g.victim == cf.victim
     probes = np.arange(0, i, dtype=np.int64)
