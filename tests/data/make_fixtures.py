@@ -4,6 +4,7 @@
     python tests/data/make_fixtures.py checkpoint   # golden checkpoint (needs Spark)
     python tests/data/make_fixtures.py blobs        # golden filter bytes per config
     python tests/data/make_fixtures.py compacted    # the same chains, compacted
+    python tests/data/make_fixtures.py sketches     # golden order-free sketch bytes
 
 ``fasta`` writes ``synth_small.fna`` — one record, 1,000 bases of seeded
 ACGT with a few ``N`` runs, wrapped at 70 columns (the shape of a small
@@ -34,6 +35,17 @@ the chain behind each golden blob, run through
 one donor table holding fewer fingerprints than before (the partial-donor
 branch), so these blobs pin ``compact``'s removal order as well as its
 placement.  Like ``blobs``, existing files are checked, never rewritten.
+
+``sketches`` writes ``golden_sketches/<sketch>_<stream>.bin``: the
+``serialize_sketch`` bytes of each order-free sketch (HLL at p = 4, 14 and
+18, count-min, Bloom, KMV) after ``update`` over each ``SKETCH_STREAMS``
+stream.  The streams cover both ``base.dense_counts`` outcomes: dense
+Zipf and negative int32 batches, dense int64 next to INT64_MIN and
+INT64_MAX, dense uint64 just below 2^64, a sparse random int64 stream, and
+single batches whose span is n - 1 (dense), n and n + 1 (hashed as they
+are).  Like ``blobs``, existing files are checked, never rewritten; the
+committed ones were written by the per-occurrence kernels, so the
+distinct-key kernels must reproduce them.
 """
 
 from __future__ import annotations
@@ -56,6 +68,7 @@ KMERS_10 = os.path.join(HERE, "synth_small_kmers_10.txt")
 GOLDEN = os.path.join(HERE, "golden_ckpt")
 GOLDEN_BLOBS = os.path.join(HERE, "golden_blobs")
 GOLDEN_COMPACTED = os.path.join(HERE, "golden_compacted")
+GOLDEN_SKETCHES = os.path.join(HERE, "golden_sketches")
 
 FASTA_IDENT = "SYNTH0001.1 synthetic test genome, seed 2718"
 FASTA_BASES = 1000
@@ -115,6 +128,70 @@ def golden_compacted(epb: int, bits: int, dedup: bool) -> bytes:
     return serialize_filter(filt)
 
 
+INT64_MIN, INT64_MAX = -(1 << 63), (1 << 63) - 1
+SPAN_N = 1000
+
+
+def _span_batch(span: int) -> np.ndarray:
+    """``SPAN_N`` int64 keys whose max - min is ``span``: a shuffled
+    ``arange`` with its largest key moved to ``span``."""
+    a = np.random.default_rng(span).permutation(SPAN_N).astype(np.int64) + 5000
+    a[a.argmax()] = 5000 + span
+    return a
+
+
+def _sketch_streams() -> dict:
+    """Name -> list of update batches, each batch a seeded NumPy array."""
+    rng = np.random.default_rng(1618)
+    zipf = np.minimum(rng.zipf(1.3, 6000), 1000).astype(np.int32)
+    low = rng.integers(0, 1000, 4000)
+    return {
+        "zipf_int32": np.array_split(zipf, 3),
+        "neg_int32": np.array_split(-(zipf + 7), 3),
+        "int64_min": np.array_split(np.int64(INT64_MIN) + low, 3),
+        "int64_max": np.array_split(np.int64(INT64_MAX) - low, 3),
+        "uint64_top": np.array_split(np.uint64((1 << 64) - 1) - low.astype(np.uint64), 3),
+        "sparse_int64": np.array_split(
+            rng.integers(INT64_MIN, INT64_MAX, 3000, endpoint=True), 3),
+        "span_n_minus_1": [_span_batch(SPAN_N - 1)],
+        "span_n": [_span_batch(SPAN_N)],
+        "span_n_plus_1": [_span_batch(SPAN_N + 1)],
+    }
+
+
+def _sketch_factories() -> dict:
+    from cuckoofilter_spark.sketches import BloomFilter, CountMinSketch, HyperLogLog
+    from cuckoofilter_spark.sketches.kmv import KMVSketch
+
+    return {
+        "hll4": lambda: HyperLogLog(p=4, seed=3),
+        "hll14": lambda: HyperLogLog(p=14, seed=3),
+        "hll18": lambda: HyperLogLog(p=18, seed=3),
+        "cms": lambda: CountMinSketch(depth=5, width=1024, seed=3),
+        "bloom": lambda: BloomFilter(m_bits=1 << 14, k=7, seed=3),
+        "kmv": lambda: KMVSketch(k=256, seed=3),
+    }
+
+
+SKETCH_STREAMS = tuple(_sketch_streams())
+SKETCH_KINDS = ("hll4", "hll14", "hll18", "cms", "bloom", "kmv")
+
+
+def golden_sketch_name(kind: str, stream: str) -> str:
+    return f"{kind}_{stream}.bin"
+
+
+def golden_sketch(kind: str, stream: str) -> bytes:
+    """The serialized sketch ``kind`` after updating it with every batch
+    of ``stream`` in order."""
+    from cuckoofilter_spark.sketches import serialize_sketch
+
+    sk = _sketch_factories()[kind]()
+    for batch in _sketch_streams()[stream]:
+        sk.update(batch)
+    return serialize_sketch(sk)
+
+
 def make_fasta() -> None:
     rng = np.random.default_rng(2718)
     seq = np.array(list("ACGT"))[rng.integers(0, 4, FASTA_BASES)]
@@ -170,32 +247,36 @@ def make_checkpoint() -> None:
         spark.stop()
 
 
-def make_blobs(out_dir: str = GOLDEN_BLOBS, build=golden_blob) -> None:
-    """Write ``build(epb, bits, dedup)`` for every legal config and mode
-    into ``out_dir``; check (never rewrite) the files already there."""
+def make_blobs(out_dir: str = GOLDEN_BLOBS, build=golden_blob, cases=None,
+               name=golden_blob_name) -> None:
+    """Write ``build(*case)`` for every case (by default every legal config
+    in set and multiset mode) into ``out_dir`` as ``name(*case)``; check
+    (never rewrite) the files already there."""
     from cuckoofilter_spark.params import LEGAL_CONFIGS
 
+    if cases is None:
+        cases = [(epb, bits, dedup) for epb, bits in LEGAL_CONFIGS
+                 for dedup in (True, False)]
     os.makedirs(out_dir, exist_ok=True)
     bad = []
-    for epb, bits in LEGAL_CONFIGS:
-        for dedup in (True, False):
-            path = os.path.join(out_dir, golden_blob_name(epb, bits, dedup))
-            blob = build(epb, bits, dedup)
-            if not os.path.exists(path):
-                with open(path, "wb") as f:
-                    f.write(blob)
-            else:
-                with open(path, "rb") as f:
-                    if f.read() != blob:
-                        bad.append(os.path.basename(path))
-            print(json.dumps({"blob": os.path.basename(path), "bytes": len(blob),
-                              "md5": hashlib.md5(blob).hexdigest()}))
+    for case in cases:
+        path = os.path.join(out_dir, name(*case))
+        blob = build(*case)
+        if not os.path.exists(path):
+            with open(path, "wb") as f:
+                f.write(blob)
+        else:
+            with open(path, "rb") as f:
+                if f.read() != blob:
+                    bad.append(os.path.basename(path))
+        print(json.dumps({"blob": os.path.basename(path), "bytes": len(blob),
+                          "md5": hashlib.md5(blob).hexdigest()}))
     if bad:
         raise SystemExit(f"rebuild does not reproduce {out_dir}: {bad}")
 
 
 if __name__ == "__main__":
-    what = sys.argv[1:] or ["fasta", "checkpoint", "blobs", "compacted"]
+    what = sys.argv[1:] or ["fasta", "checkpoint", "blobs", "compacted", "sketches"]
     if "fasta" in what:
         make_fasta()
     if "checkpoint" in what:
@@ -204,3 +285,7 @@ if __name__ == "__main__":
         make_blobs()
     if "compacted" in what:
         make_blobs(GOLDEN_COMPACTED, golden_compacted)
+    if "sketches" in what:
+        make_blobs(GOLDEN_SKETCHES, golden_sketch,
+                   [(k, s) for k in SKETCH_KINDS for s in SKETCH_STREAMS],
+                   golden_sketch_name)
