@@ -253,8 +253,12 @@ class CuckooTable:
         with multiplicities; per pair ``min(requested, stored)`` copies are
         cleared (different fps in one bucket occupy disjoint slots, so the
         scatter is conflict-free), then touched buckets re-left-pack in one
-        argsort.  Semantically identical to looping ``delete_at`` — copies
-        of one (bucket, fp) are interchangeable."""
+        argsort.  Against a loop of ``delete_at`` over the same requests,
+        the deleted mask, each bucket's multiset of fingerprints, ``occ``
+        and so membership are the same, but the slot order is not: this
+        keeps survivors in their order, ``delete_at`` moves the last lane
+        into the hole (bucket ``[5, 6, 7, 8]`` minus 5 is ``[6, 7, 8, 0]``
+        here, ``[8, 6, 7, 0]`` there)."""
         n = len(bidx)
         out = np.zeros(n, dtype=bool)
         if n == 0:

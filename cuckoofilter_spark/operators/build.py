@@ -224,10 +224,13 @@ def fold_partitions(df: DataFrame, col: str, new_state,
     ``tree_merge_blobs`` returns.
 
     ``num_partitions``: fix the build parallelism explicitly.  Fixing it
-    (rather than inheriting the scan's split count) pins the merge tree, so
-    results are bit-identical across cluster sizes — the north_rule's
-    N-vs-4N invariance.  Salting/skew is irrelevant here because the build
-    is a narrow map (no shuffle by key); repartition only balances bytes."""
+    (rather than inheriting the scan's split count) pins the shape of the
+    merge tree, not what each partition holds: ``repartition`` deals rows
+    round-robin from the upstream layout, which the scan's split size
+    decides.  Order-free states and membership answers come out identical
+    either way; the bytes of order-sensitive states (KLL) do not.
+    Salting/skew is irrelevant here because the build is a narrow map (no
+    shuffle by key); repartition only balances bytes."""
     proj = df.select(col)  # column pruning reaches the scan
     if num_partitions is not None:
         proj = proj.repartition(num_partitions)

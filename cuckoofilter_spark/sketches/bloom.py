@@ -2,6 +2,9 @@
 against (no deletes, no load-factor cliff; merge = bitwise OR, perfectly
 commutative).  k index functions derived from one 64-bit hash by the
 Kirsch-Mitzenmacher double-hashing construction; everything batch-NumPy.
+A bit OR is idempotent, so ``update`` takes positions from each distinct
+key of a batch once (``base.dense_counts``); ``n_items`` counts
+occurrences.
 """
 
 from __future__ import annotations
@@ -12,7 +15,7 @@ import zlib
 import numpy as np
 
 from cuckoofilter_spark.hashing import hash64
-from cuckoofilter_spark.sketches.base import register
+from cuckoofilter_spark.sketches.base import dense_counts, register
 
 _HDR = struct.Struct("<qiiq")  # m_bits, k, seed, n_items
 
@@ -45,7 +48,8 @@ class BloomFilter:
         batch = np.asarray(batch)
         if len(batch) == 0:
             return
-        pos = self._positions(batch).reshape(-1)
+        dc = dense_counts(batch)
+        pos = self._positions(batch if dc is None else dc[0]).reshape(-1)
         np.bitwise_or.at(self.bits, pos >> 6, np.uint64(1) << (pos & 63).astype(np.uint64))
         self.n_items += len(batch)
 

@@ -1,7 +1,9 @@
 """Count-min sketch: point frequency estimation with one-sided error —
 ``estimate(x) >= true(x)``, and ``estimate(x) <= true(x) + εN`` with
 probability 1-δ for ε = e/width, δ = e^-depth.  Merge = element-wise add
-(commutative).  Cross-checked against exact GROUP BY counts of the Zipf head
+(commutative), so ``update`` hashes each distinct key of a batch once and
+adds its count (``base.dense_counts``); ``n_items`` counts occurrences.
+Cross-checked against exact GROUP BY counts of the Zipf head
 and Spark's built-in ``count_min_sketch``.
 """
 
@@ -13,7 +15,7 @@ import zlib
 import numpy as np
 
 from cuckoofilter_spark.hashing import hash64
-from cuckoofilter_spark.sketches.base import register
+from cuckoofilter_spark.sketches.base import dense_counts, register
 
 _HDR = struct.Struct("<iiiq")  # depth, width, seed, n_items
 
@@ -36,15 +38,16 @@ class CountMinSketch:
             rows.append((h % np.uint64(self.width)).astype(np.int64))
         return np.stack(rows)  # (depth, n)
 
-    def update(self, batch: np.ndarray, weights: np.ndarray | None = None) -> None:
+    def update(self, batch: np.ndarray) -> None:
         batch = np.asarray(batch)
         if len(batch) == 0:
             return
-        idx = self._idx(batch)
-        w = np.ones(len(batch), dtype=np.int64) if weights is None else np.asarray(weights, np.int64)
+        dc = dense_counts(batch)
+        keys, w = (batch, 1) if dc is None else dc
+        idx = self._idx(keys)
         for d in range(self.depth):
             np.add.at(self.counts[d], idx[d], w)
-        self.n_items += int(w.sum())
+        self.n_items += len(batch)
 
     def estimate(self, keys: np.ndarray) -> np.ndarray:
         keys = np.asarray(keys)

@@ -5,6 +5,10 @@ Standard HLL with the HLL++ small-range correction (linear counting below
 (max rank ≤ 64 - p).  Merge = element-wise max — commutative, associative.
 Relative error ≈ 1.04/√m; p=14 → m=16384 → ~0.81%.
 
+``update`` hashes each distinct key of a batch once (``base.dense_counts``;
+a register max does not care how often a key repeats) and takes the rank
+from a branch-free bit length (``_rank``).
+
 Cross-checked in tests against exact ``COUNT(DISTINCT ...)`` and against
 Spark's built-in HLL++ (``approx_count_distinct``).
 """
@@ -17,9 +21,20 @@ import zlib
 import numpy as np
 
 from cuckoofilter_spark.hashing import hash64
-from cuckoofilter_spark.sketches.base import register
+from cuckoofilter_spark.sketches.base import dense_counts, register
 
 _HDR = struct.Struct("<ii")  # p, seed
+
+
+def _rank(rest: np.ndarray, p: int) -> np.ndarray:
+    """Leading zeros of each ``rest = h << p``, plus one, capped at
+    ``64 - p + 1`` (the rank of ``rest == 0``).  The bit length comes from
+    the float64 exponents of the high and low 32-bit halves, both exact,
+    and ``frexp(0)`` has exponent 0 — no per-bit loop or branch."""
+    e_hi = np.frexp((rest >> np.uint64(32)).astype(np.float64))[1]
+    e_lo = np.frexp((rest & np.uint64(0xFFFFFFFF)).astype(np.float64))[1]
+    bitlen = np.where(e_hi > 0, e_hi + 32, e_lo)
+    return np.minimum(65 - bitlen, 64 - p + 1).astype(np.uint8)
 
 
 @register
@@ -37,25 +52,10 @@ class HyperLogLog:
         batch = np.asarray(batch)
         if len(batch) == 0:
             return
-        h = hash64(batch, seed=self.seed)
+        dc = dense_counts(batch)
+        h = hash64(batch if dc is None else dc[0], seed=self.seed)
         idx = (h >> np.uint64(64 - self.p)).astype(np.int64)
-        rest = h << np.uint64(self.p)
-        # rank = leading zeros of the remaining 64-p bits, +1
-        nbits = 64 - self.p
-        rank = np.full(len(h), nbits + 1, dtype=np.uint8)
-        nz = rest != 0
-        if nz.any():
-            # leading zero count via float64 exponent trick is unsafe at 64
-            # bits; use a halving loop (6 iterations, fully vectorized)
-            x = rest[nz]
-            lz = np.zeros(x.shape, dtype=np.uint8)
-            for shift in (32, 16, 8, 4, 2, 1):
-                mask = x < (np.uint64(1) << np.uint64(64 - shift))
-                lz[mask] += shift
-                x[mask] <<= np.uint64(shift)
-            rank_nz = np.minimum(lz + 1, nbits + 1).astype(np.uint8)
-            rank[nz] = rank_nz
-        np.maximum.at(self.registers, idx, rank)
+        np.maximum.at(self.registers, idx, _rank(h << np.uint64(self.p), self.p))
 
     def merge(self, other: "HyperLogLog") -> "HyperLogLog":
         assert (self.p, self.seed) == (other.p, other.seed)

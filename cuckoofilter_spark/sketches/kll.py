@@ -6,9 +6,12 @@ promoted.  Normalized rank error ≈ 2.21/k… ~1% at k=200 (single-sided w.h.p.
 tests assert with slack).  Merge = level-wise concatenation + re-compress.
 
 Determinism: the compaction parity comes from a counter-free seeded RNG, so
-a pinned merge tree (operators/build.py) yields identical estimates at any
-cluster size — merge *order* sensitivity is inherent to KLL, which is
-exactly why the deterministic tree matters (north_rule).
+the same partitions folded through the same merge tree (operators/build.py)
+give the same bytes on every run.  KLL is sensitive to update and merge
+*order*, so its bytes follow the partition layout: a different scan split
+size (``spark.sql.files.maxPartitionBytes``) gives different bytes, even
+with ``num_partitions`` fixed; the rank-error guarantee does not depend on
+the layout.
 """
 
 from __future__ import annotations

@@ -16,7 +16,8 @@ The error scales with the sample agreement — tight even when the
 intersection is tiny relative to the union, exactly where HLL's
 inclusion–exclusion degrades (its absolute error is on the UNION's
 scale).  This is the theta-sketch trick (Apache DataSketches) on the
-simplest possible state: one sorted uint64 array.
+simplest possible state: one sorted uint64 array.  ``update`` hashes each
+distinct key of a batch once (``base.dense_counts``).
 
 Merge = union of value sets, keep k smallest — commutative, associative,
 idempotent (a set union), so it rides the same deterministic tree as
@@ -31,7 +32,7 @@ import zlib
 import numpy as np
 
 from cuckoofilter_spark.hashing import hash64
-from cuckoofilter_spark.sketches.base import register
+from cuckoofilter_spark.sketches.base import dense_counts, register
 
 _HDR = struct.Struct("<iiq")  # k, seed, n_values
 _FULL = float(2**64)
@@ -51,7 +52,8 @@ class KMVSketch:
         batch = np.asarray(batch)
         if len(batch) == 0:
             return
-        h = hash64(batch, seed=self.seed)
+        dc = dense_counts(batch)
+        h = hash64(batch if dc is None else dc[0], seed=self.seed)
         self.values = np.unique(np.concatenate([self.values, h]))[:self.k]
 
     def merge(self, other: "KMVSketch") -> "KMVSketch":

@@ -401,6 +401,36 @@ def test_determinism_across_runs():
     assert build() == build()
 
 
+def test_bulk_delete_at_matches_delete_at_loop_up_to_slot_order():
+    """``bulk_delete_at`` on a filled table leaves each bucket the multiset
+    and ``occ`` of a ``delete_at`` loop over the same requests, with the
+    same deleted mask; only the slot order differs (survivors keep their
+    order, ``delete_at`` moves the last lane into the hole)."""
+    p = CuckooParams(max_table_size=256, entries_per_bucket=4, bits_per_fp=8)
+    rng = np.random.default_rng(21)
+    a = CuckooTable(p, rng.integers(1, 6, size=(p.table_size, 4)).astype(p.dtype))
+    b = CuckooTable(p, a.table.copy())
+    assert (a.occ == 4).all()
+    n = 2 * p.table_size
+    bidx = rng.integers(0, p.table_size, n)
+    fps = rng.integers(1, 7, n).astype(p.dtype)   # 6 is never stored
+    got = a.bulk_delete_at(bidx, fps)
+    want = np.array([b.delete_at(int(i), int(f)) for i, f in zip(bidx, fps)])
+    assert np.array_equal(got, want) and 0 < want.sum() < len(want)
+    assert np.array_equal(np.sort(a.table, axis=1), np.sort(b.table, axis=1))
+    assert np.array_equal(a.occ, b.occ)
+    assert a.element_count == b.element_count
+    assert not np.array_equal(a.table, b.table)
+
+    one = np.array([[5, 6, 7, 8]], dtype=np.uint8)
+    p1 = CuckooParams(max_table_size=1, entries_per_bucket=4, bits_per_fp=8)
+    bulk, loop = CuckooTable(p1, one.copy()), CuckooTable(p1, one.copy())
+    bulk.bulk_delete_at(np.array([0]), np.array([5], dtype=np.uint8))
+    loop.delete_at(0, 5)
+    assert bulk.table[0].tolist() == [6, 7, 8, 0]
+    assert loop.table[0].tolist() == [8, 6, 7, 0]
+
+
 def test_bulk_delete_matches_sequential_loop():
     """Vectorized chain delete == the per-key delete_at loop: same
     success mask, same surviving multiset (copies of one (bucket-pair,

@@ -4,7 +4,9 @@ and Spark-side builds cross-checked against exact Spark/DuckDB-style
 aggregates and Spark's own built-in sketches.
 """
 
+import importlib.util
 import itertools
+import os
 
 import numpy as np
 import pytest
@@ -18,6 +20,14 @@ from cuckoofilter_spark.sketches import (
     deserialize_sketch,
     serialize_sketch,
 )
+from cuckoofilter_spark.sketches.base import dense_counts
+from cuckoofilter_spark.sketches.hll import _rank
+
+_spec = importlib.util.spec_from_file_location(
+    "make_fixtures", os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                                  "data", "make_fixtures.py"))
+fixtures = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(fixtures)
 
 RNG = np.random.default_rng(42)
 
@@ -179,6 +189,123 @@ def test_tdigest_merge_bound_holds():
     assert acc.min == data.min() and acc.max == data.max()
 
 
+# ---------- Order-free updates: each distinct key hashed once ---------------
+
+def _hll_rank_halving(rest: np.ndarray, p: int) -> np.ndarray:
+    """The rank ``_rank`` replaced, as reference: leading zeros of
+    ``rest`` by a six-pass masked halving loop, plus one, capped at
+    ``64 - p + 1``."""
+    nbits = 64 - p
+    rank = np.full(len(rest), nbits + 1, dtype=np.uint8)
+    nz = rest != 0
+    x = rest[nz]
+    lz = np.zeros(x.shape, dtype=np.uint8)
+    for shift in (32, 16, 8, 4, 2, 1):
+        mask = x < (np.uint64(1) << np.uint64(64 - shift))
+        lz[mask] += shift
+        x[mask] <<= np.uint64(shift)
+    rank[nz] = np.minimum(lz + 1, nbits + 1).astype(np.uint8)
+    return rank
+
+
+def _cms_add_at(c: CountMinSketch, batch: np.ndarray) -> None:
+    """The count-min update the distinct-key one replaced, as reference:
+    one ``add.at`` of weight 1 per occurrence and row."""
+    idx = c._idx(batch)
+    for d in range(c.depth):
+        np.add.at(c.counts[d], idx[d], np.ones(len(batch), dtype=np.int64))
+    c.n_items += len(batch)
+
+
+_DENSE_STREAMS = [s for s in fixtures.SKETCH_STREAMS
+                  if s not in ("sparse_int64", "span_n", "span_n_plus_1")]
+
+
+@pytest.mark.parametrize("stream", fixtures.SKETCH_STREAMS)
+@pytest.mark.parametrize("kind", fixtures.SKETCH_KINDS)
+def test_golden_sketch_bytes(kind, stream):
+    """Each order-free sketch reproduces the committed bytes
+    (``tests/data/golden_sketches``, written by ``make_fixtures.py
+    sketches`` with the per-occurrence kernels) on dense and sparse
+    streams, and every committed sketch survives a deserialize ->
+    serialize trip."""
+    with open(os.path.join(fixtures.GOLDEN_SKETCHES,
+                           fixtures.golden_sketch_name(kind, stream)), "rb") as f:
+        want = f.read()
+    assert fixtures.golden_sketch(kind, stream) == want
+    assert serialize_sketch(deserialize_sketch(want)) == want
+
+
+@pytest.mark.parametrize("stream", fixtures.SKETCH_STREAMS)
+def test_golden_streams_take_both_dense_counts_paths(stream):
+    """Every batch of a dense golden stream is aggregated by
+    ``dense_counts``; the sparse stream and the span-n and span-n+1
+    batches are hashed as they are."""
+    dense = [dense_counts(b) is not None for b in fixtures._sketch_streams()[stream]]
+    assert dense == [stream in _DENSE_STREAMS] * len(dense)
+
+
+@pytest.mark.parametrize("a", [
+    np.array([3, 1, 3, 3, 2], dtype=np.int8),
+    np.array([-128, 127] + [0] * 300, dtype=np.int8),
+    np.array([0, 255, 7] * 100, dtype=np.uint8),
+    np.array([-5, -5, -9, -6, -8], dtype=np.int32),
+    np.int64(-(1 << 63)) + np.arange(10, dtype=np.int64)[::-1].repeat(2),
+    np.int64((1 << 63) - 1) - np.arange(10, dtype=np.int64).repeat(2),
+    np.uint64((1 << 64) - 1) - np.arange(10, dtype=np.uint64).repeat(2),
+    np.array([7], dtype=np.int64),
+], ids=["int8", "int8_full_span", "uint8", "neg_int32", "int64_min", "int64_max",
+        "uint64_top", "one"])
+def test_dense_counts_matches_unique(a):
+    """Distinct keys in ascending order, in the batch's own dtype (so keys
+    next to 2^64 and INT64_MIN are not rounded through float64), with the
+    counts of ``np.unique``."""
+    keys, counts = dense_counts(a)
+    want_keys, want_counts = np.unique(a, return_counts=True)
+    assert keys.dtype == a.dtype
+    assert np.array_equal(keys, want_keys)
+    assert np.array_equal(counts, want_counts)
+
+
+@pytest.mark.parametrize("a", [
+    np.zeros(0, dtype=np.int64),
+    np.array([0, 2], dtype=np.int64),            # span == len
+    np.array([1.0, 1.0, 2.0]),                   # not integer
+    np.array([True, False, True]),
+    np.array([-(1 << 63), (1 << 63) - 1, 0], dtype=np.int64),
+    np.array([0, (1 << 64) - 1, 5], dtype=np.uint64),
+], ids=["empty", "span_eq_len", "float", "bool", "int64_full", "uint64_full"])
+def test_dense_counts_declines(a):
+    assert dense_counts(a) is None
+
+
+@pytest.mark.parametrize("p", [4, 11, 14, 18])
+def test_hll_rank_matches_halving_reference(p):
+    """The frexp bit-length rank equals the halving loop on random hashes
+    and on every one-bit, all-ones-below and zero ``rest``."""
+    from cuckoofilter_spark.hashing import hash64
+
+    h = hash64(np.arange(200_000), seed=p)
+    bits = np.uint64(1) << np.arange(64, dtype=np.uint64)
+    special = np.concatenate([np.array([0, (1 << 64) - 1], dtype=np.uint64),
+                              bits, bits - np.uint64(1), bits | np.uint64(1)])
+    for rest in (h << np.uint64(p), special << np.uint64(p), special):
+        assert np.array_equal(_rank(rest, p), _hll_rank_halving(rest, p))
+
+
+@pytest.mark.parametrize("stream", fixtures.SKETCH_STREAMS)
+def test_cms_update_matches_add_at_reference(stream):
+    """Adding each distinct key's count equals one ``add.at`` per
+    occurrence: same counters, same ``n_items``."""
+    got, want = CountMinSketch(4, 512, seed=1), CountMinSketch(4, 512, seed=1)
+    for batch in fixtures._sketch_streams()[stream]:
+        got.update(batch)
+        _cms_add_at(want, batch)
+    assert np.array_equal(got.counts, want.counts)
+    assert got.n_items == want.n_items == sum(
+        len(b) for b in fixtures._sketch_streams()[stream])
+
+
 # ---------- Spark integration -------------------------------------------------
 
 def test_spark_hll_vs_exact_and_builtin(spark, sf01_dir):
@@ -205,6 +332,46 @@ def test_spark_kll_vs_exact_quantiles(spark, sf01_dir):
         est = k.quantile(q)
         true_rank = np.searchsorted(sorted_p, est) / len(prices)
         assert abs(true_rank - q) <= 4 * k.rank_error
+
+
+def test_spark_order_free_bytes_survive_scan_split_size(spark, tmp_path, monkeypatch):
+    """HLL and count-min bytes do not depend on the scan split size: 16
+    small parquet files read as at most ``FANIN`` partitions at 128m and as
+    one partition per file at 1m, which adds an executor merge level."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cuckoofilter_spark.operators import build
+    from cuckoofilter_spark.operators.sketch_build import build_sketch
+
+    rng = np.random.default_rng(9)
+    for i in range(16):
+        pq.write_table(pa.table({"k": np.minimum(rng.zipf(1.3, 3000), 2000)}),
+                       str(tmp_path / f"part-{i:02d}.parquet"))
+    merges = []
+    real_merge_group = build._merge_group
+    monkeypatch.setattr(build, "_merge_group",
+                        lambda codec: merges.append(codec) or real_merge_group(codec))
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key, None)
+    out = {}
+    try:
+        for size in ("128m", "1m"):
+            spark.conf.set(key, size)
+            df = spark.read.parquet(str(tmp_path))
+            merges.clear()
+            blobs = [serialize_sketch(build_sketch(df, "k", fac)) for fac in (
+                lambda pid: HyperLogLog(p=12), lambda pid: CountMinSketch(4, 1024))]
+            out[size] = (df.rdd.getNumPartitions(), len(merges), blobs)
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    (n_big, merged_big, bytes_big), (n_small, merged_small, bytes_small) = out["128m"], out["1m"]
+    assert n_big <= build.FANIN < n_small
+    assert merged_big == 0 and merged_small == 2  # one merge level per sketch
+    assert bytes_big == bytes_small
 
 
 def test_tdigest_buffer_size_survives_serde():
