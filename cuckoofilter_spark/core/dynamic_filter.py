@@ -141,30 +141,34 @@ class DynamicCuckooFilter:
             self.tables.append(t)
         return t
 
-    def _dedup_pairs(self, fps: np.ndarray, bidx: np.ndarray):
+    def _dedup_pairs(self, fps: np.ndarray, bidx: np.ndarray, distinct: bool = False):
         """Set-mode admission: drop pairs already present in the chain, and
         collapse in-batch duplicates, keyed by (canonical bucket pair, fp).
         The canonical key is (min(i, partner), fp) — identical whichever of
         its two buckets a fingerprint arrives or is stored at.  In-batch
         duplicates go by hashing (``_first_occurrence``), keeping each
-        pair's first occurrence in batch order."""
+        pair's first occurrence in batch order.  ``distinct``: the caller
+        knows the batch holds no duplicate canonical key (a set-mode
+        filter's stored pairs), so only the in-chain check runs."""
         if len(fps) == 0:
             return fps, bidx
-        alt = self.tables[0].complement(bidx, fps)
-        canon = np.minimum(bidx, alt)
-        # in-batch dedup
-        key = (canon.astype(np.uint64) << np.uint64(32)) | fps.astype(np.uint64)
-        first = _first_occurrence(key)
-        fps, bidx = fps[first], bidx[first]
+        if not distinct:
+            # in-batch dedup
+            alt = self.tables[0].complement(bidx, fps)
+            canon = np.minimum(bidx, alt)
+            key = (canon.astype(np.uint64) << np.uint64(32)) | fps.astype(np.uint64)
+            first = _first_occurrence(key)
+            fps, bidx = fps[first], bidx[first]
         # in-chain dedup (contains checks both buckets)
         present = self.contains_fps(fps, bidx)
         keep = ~present
         return fps[keep], bidx[keep]
 
-    def _insert_fps(self, fps: np.ndarray, bidx: np.ndarray) -> None:
-        """Place a (fp, bucket) batch somewhere in the chain; grow on demand."""
+    def _insert_fps(self, fps: np.ndarray, bidx: np.ndarray, distinct: bool = False) -> None:
+        """Place a (fp, bucket) batch somewhere in the chain; grow on demand.
+        ``distinct`` as in ``_dedup_pairs``."""
         if self.dedup:
-            fps, bidx = self._dedup_pairs(fps, bidx)
+            fps, bidx = self._dedup_pairs(fps, bidx, distinct)
         pend_fp, pend_i = fps, bidx
         while len(pend_fp):
             t = self._active()
@@ -293,12 +297,16 @@ class DynamicCuckooFilter:
     def merge(self, other: "DynamicCuckooFilter") -> "DynamicCuckooFilter":
         """Fold *other*'s stored fingerprint multiset into self (in-place;
         returns self).  Distributed analog of DCF chain growth + compaction:
-        associative/commutative on membership answers by construction."""
+        associative/commutative on membership answers by construction.
+
+        A set-mode donor never stores one canonical (bucket pair, fp) twice,
+        so its pairs skip the in-batch pass of a set-mode ``self`` and meet
+        only the in-chain check; a multiset donor's copies still collapse."""
         assert self.params.to_tuple() == other.params.to_tuple(), "param mismatch"
         for t in other.tables:
             rows, fps = t.nonzero_entries()
             if len(rows):
-                self._insert_fps(fps, rows)
+                self._insert_fps(fps, rows, distinct=other.dedup)
         return self
 
     # -- stats ---------------------------------------------------------------------------

@@ -40,25 +40,6 @@ def hash64(keys: np.ndarray, seed: int = 0) -> np.ndarray:
     return z
 
 
-def hash64_bytes(values, seed: int = 0) -> np.ndarray:
-    """64-bit hash of a sequence of str/bytes (FNV-1a 64 then splitmix
-    finalize).  Used for string-element parity (the reference's CityHash64
-    path, ``Utils/hash_function.cpp:64-68``); per-element Python but only on
-    driver-side test fixtures — the hot Spark path hashes int token arrays.
-    """
-    out = np.empty(len(values), dtype=np.uint64)
-    fnv_offset = 0xCBF29CE484222325
-    fnv_prime = 0x100000001B3
-    mask = 0xFFFFFFFFFFFFFFFF
-    for i, v in enumerate(values):
-        b = v.encode("utf-8") if isinstance(v, str) else v
-        h = fnv_offset
-        for byte in b:
-            h = ((h ^ byte) * fnv_prime) & mask
-        out[i] = h
-    return hash64(out, seed=seed)
-
-
 _M32 = 0xFFFFFFFF
 
 
@@ -264,8 +245,8 @@ def cityhash64(data: bytes) -> int:
 def hash64_bytes_city(values) -> np.ndarray:
     """The reference's LIVE string-hash path, reproduced exactly:
     ``CityHash64(key.c_str(), key.size())``
-    (``Utils/hash_function.cpp:36-44,64-68``).  Alternative backend to
-    ``hash64_bytes``; same signature, same uniformity contract."""
+    (``Utils/hash_function.cpp:36-44,64-68``).  A parity backend for
+    tests; the engine hashes integer keys with ``hash64``."""
     out = np.empty(len(values), dtype=np.uint64)
     for i, v in enumerate(values):
         b = v.encode("utf-8") if isinstance(v, str) else v
@@ -277,8 +258,8 @@ def hash64_bytes_murmur3(values, seed: int = 5) -> np.ndarray:
     """The reference's commented-out string-hash path, reproduced exactly:
     ``uint64 hash[2]; MurmurHash3_x86_128(s, len, 5, hash); return
     hash[0]`` (``Utils/hash_function.cpp:53-57``) — i.e. the low 8 output
-    bytes as a little-endian uint64, default seed 5.  Alternative backend
-    to ``hash64_bytes``; same signature, same uniformity contract."""
+    bytes as a little-endian uint64, default seed 5.  A parity backend for
+    tests, like ``hash64_bytes_city``."""
     out = np.empty(len(values), dtype=np.uint64)
     for i, v in enumerate(values):
         b = v.encode("utf-8") if isinstance(v, str) else v

@@ -9,11 +9,11 @@ of the library rides the three pieces defined here:
   mergeable state (``new_state(pid)``, then ``state.update(keys)``) — NumPy
   batch kernels, no per-row Python;
 - ``emit_blob``: that state leaves the task as ONE ``BLOB_SCHEMA`` row;
-- ``tree_merge_blobs``: blobs are grouped by ``pid // FANIN`` and each group
-  is folded in ascending pid order inside ``applyInArrow``, level by level,
-  until ≤ FANIN remain; the driver folds those, again in pid order.  The
-  blob codec (``FilterCodec`` here, ``sketches.base.SketchCodec``) is the
-  caller's.
+- ``tree_merge_blobs``: each level sends merge group ``pid // FANIN`` to
+  its own partition (``repartitionById``) and folds it in ascending pid
+  order inside ``mapInArrow``, until ≤ FANIN blobs remain; the driver folds
+  those, again in pid order.  The blob codec (``FilterCodec`` here,
+  ``sketches.base.SketchCodec``) is the caller's.
 
 ``fold_partitions`` runs the fold over the partitions of a DataFrame
 (``build_filter``, ``kmers.build_ngram_filter``,
@@ -32,7 +32,8 @@ Scale notes (100 TB / ~10^6 input partitions):
 - stage 1 emits ONE row per input partition — the shuffle into the merge
   stage moves sketch state, never data rows;
 - each merge level reduces the blob count by ``FANIN`` (8): 10^6 blobs →
-  6 levels; level parallelism = n_blobs/FANIN tasks, all executor-side;
+  6 levels; a level runs ceil(n_blobs/FANIN) tasks, one per merge group,
+  all executor-side;
 - the driver only ever folds the final ≤ FANIN blobs;
 - column pruning: only the key column is selected before the UDF, so the
   parquet/Iceberg scan reads one column (check ``ReadSchema`` in explain).
@@ -170,18 +171,20 @@ def _fold_blobs(codec, pids, blobs):
 
 
 def _merge_group(codec):
-    """applyInArrow fold of one merge group → one blob row whose pid is the
-    group id (``pid // FANIN``), the next level's pid."""
+    """mapInArrow fold of one merge-level partition: each merge group it
+    holds (``gid = pid // FANIN``), in ascending gid order, folds in pid
+    order into one blob row whose pid is ``gid``, the next level's pid."""
 
-    def fn(table):
-        import pyarrow as pa
-
-        pids = table.column("pid").to_pylist()
-        acc = _fold_blobs(codec, pids, table.column("blob").to_pylist())
-        return pa.Table.from_batches([emit_blob(
-            min(pids) // FANIN, codec.encode(acc),
-            sum(table.column("n_rows").to_pylist()),
-            sum(table.column("n_items").to_pylist()))])
+    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        groups = {}
+        for b in batches:
+            cols = b.to_pydict()
+            for row in zip(cols["pid"], cols["blob"], cols["n_rows"], cols["n_items"]):
+                groups.setdefault(row[0] // FANIN, []).append(row)
+        for gid in sorted(groups):
+            pids, blobs, n_rows, n_items = zip(*groups[gid])
+            yield emit_blob(gid, codec.encode(_fold_blobs(codec, pids, blobs)),
+                            sum(n_rows), sum(n_items))
 
     return fn
 
@@ -202,15 +205,23 @@ def tree_merge_blobs(blobs_df: DataFrame, codec=FilterCodec,
     driver-side fold of P partition filters costs Σ_P (grows with cluster
     parallelism — inverse scaling!); a fanin-f tree does that work in
     parallel executor stages and the driver only ever folds ≤ f blobs, so
-    the critical path is ~f·(per-blob fingerprints)·log_f(P)."""
+    the critical path is ~f·(per-blob fingerprints)·log_f(P).
+
+    A level is ``repartitionById`` into one partition per merge group (the
+    id must be an INT), then ``mapInArrow``: its task count is
+    ceil(n/FANIN), a pure function of the blob count.  Keyed on
+    ``groupBy(gid)`` instead, the level hash-shuffled into
+    ``spark.sql.shuffle.partitions`` partitions and adaptive execution
+    coalesced that KB-to-MB blob shuffle by bytes, so every level ran as
+    one task and its groups folded one after another."""
     import pyspark.sql.functions as F
 
     df = blobs_df
     n = n_blobs if n_blobs is not None else df.count()
     while n > FANIN:
-        df = (df.groupBy((F.col("pid") / FANIN).cast("long").alias("gid"))
-              .applyInArrow(_merge_group(codec), schema=BLOB_SCHEMA))
         n = -(-n // FANIN)
+        df = (df.repartitionById(n, (F.col("pid") / FANIN).cast("int"))
+              .mapInArrow(_merge_group(codec), BLOB_SCHEMA))
     rows = df.collect()
     acc = _fold_blobs(codec, [r["pid"] for r in rows], [r["blob"] for r in rows])
     return acc, sum(r["n_rows"] for r in rows), sum(r["n_items"] for r in rows)

@@ -404,47 +404,6 @@ def rp_lsh_buckets(corpus: DataFrame, nbits: int = 16, seed: int = 42,
     return corpus.select(F.col(id_col), bucket.alias("bucket"))
 
 
-def rp_lsh_buckets_multi(corpus: DataFrame, nbits: int = 4, tables: int = 32,
-                         seed: int = 42, dim: int = 64,
-                         vec_col: str = "embedding",
-                         id_col: str = "vec_id") -> DataFrame:
-    """All `tables` bucket assignments in ONE narrow pass: (id, tbl,
-    bucket) rows, where table t's hyperplanes are
-    ``default_rng(seed + 1000*t)`` — the same seeding rule as
-    `rp_lsh_buckets` per table.  One Arrow batch does a single
-    (batch × tables·nbits) matmul against every hyperplane at once, vs the
-    expression-tree form which rescans the corpus per table (32 tables ×
-    4 bits × 64-dim `aggregate` folds was ~50 s at sf0.01; this pass is
-    sub-second).  Shuffle-free: bucketing is a map."""
-    import pandas as pd
-    from collections.abc import Iterator
-
-    planes = np.stack([
-        np.random.default_rng(seed + 1000 * t).standard_normal((nbits, dim))
-        for t in range(tables)
-    ])  # (tables, nbits, dim)
-    P = planes.reshape(tables * nbits, dim)
-    weights = (1 << np.arange(nbits)).astype(np.int64)
-    tbl_ids = np.arange(tables, dtype=np.int32)
-
-    def bucketize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            bits = (V @ P.T) > 0  # (n, tables*nbits)
-            B = bits.reshape(len(ids), tables, nbits) @ weights  # (n, tables)
-            yield pd.DataFrame({
-                id_col: np.repeat(ids, tables),
-                "tbl": np.tile(tbl_ids, len(ids)),
-                "bucket": B.reshape(-1),
-            })
-
-    return corpus.select(id_col, vec_col).mapInPandas(
-        bucketize, schema=f"{id_col} long, tbl int, bucket long")
-
-
 def lsh_neardup_pairs(corpus: DataFrame, tau_x1e4: int = 9000, nbits: int = 8,
                       tables: int = 8, seed: int = 42, dim: int = 64,
                       vec_col: str = "embedding",

@@ -4,6 +4,7 @@
     python tests/data/make_fixtures.py checkpoint   # golden checkpoint (needs Spark)
     python tests/data/make_fixtures.py blobs        # golden filter bytes per config
     python tests/data/make_fixtures.py compacted    # the same chains, compacted
+    python tests/data/make_fixtures.py deleted      # the same chains after a delete
     python tests/data/make_fixtures.py sketches     # golden order-free sketch bytes
 
 ``fasta`` writes ``synth_small.fna`` — one record, 1,000 bases of seeded
@@ -35,6 +36,15 @@ the chain behind each golden blob, run through
 one donor table holding fewer fingerprints than before (the partial-donor
 branch), so these blobs pin ``compact``'s removal order as well as its
 placement.  Like ``blobs``, existing files are checked, never rewritten.
+
+``deleted`` writes ``golden_deleted/<epb>x<bits>_<set|multiset>.bin``: the
+chain behind each golden blob after one ``DynamicCuckooFilter.delete``
+call (``golden_delete_keys``: every third key of the stream, hot keys
+repeated, then keys never inserted), serialized.  ``delete`` runs
+``CuckooTable.bulk_delete_at`` per chain member, whose left-packed slot
+order differs from a ``delete_at`` loop, so these blobs pin that order.
+Every case deletes from at least two chain members.  Like ``blobs``,
+existing files are checked, never rewritten.
 
 ``sketches`` writes ``golden_sketches/<sketch>_<stream>.bin``: the
 ``serialize_sketch`` bytes of each order-free sketch (HLL at p = 4, 14 and
@@ -68,6 +78,7 @@ KMERS_10 = os.path.join(HERE, "synth_small_kmers_10.txt")
 GOLDEN = os.path.join(HERE, "golden_ckpt")
 GOLDEN_BLOBS = os.path.join(HERE, "golden_blobs")
 GOLDEN_COMPACTED = os.path.join(HERE, "golden_compacted")
+GOLDEN_DELETED = os.path.join(HERE, "golden_deleted")
 GOLDEN_SKETCHES = os.path.join(HERE, "golden_sketches")
 
 FASTA_IDENT = "SYNTH0001.1 synthetic test genome, seed 2718"
@@ -125,6 +136,25 @@ def golden_compacted(epb: int, bits: int, dedup: bool) -> bytes:
 
     filt = golden_filter(epb, bits, dedup)
     filt.compact()
+    return serialize_filter(filt)
+
+
+def golden_delete_keys() -> np.ndarray:
+    """Every third key of the golden stream (the hottest ones many times
+    over), then 200 seeded int32 keys the stream does not hold."""
+    keys = golden_stream()
+    absent = np.random.default_rng(99).integers(-(1 << 31), 1 << 31, 400).astype(np.int32)
+    absent = absent[~np.isin(absent, keys)][:200]
+    return np.concatenate([keys[::3], absent])
+
+
+def golden_deleted(epb: int, bits: int, dedup: bool) -> bytes:
+    """The ``golden_filter`` chain after deleting ``golden_delete_keys``
+    in one call, serialized."""
+    from cuckoofilter_spark.core.serde import serialize_filter
+
+    filt = golden_filter(epb, bits, dedup)
+    filt.delete(golden_delete_keys())
     return serialize_filter(filt)
 
 
@@ -276,7 +306,8 @@ def make_blobs(out_dir: str = GOLDEN_BLOBS, build=golden_blob, cases=None,
 
 
 if __name__ == "__main__":
-    what = sys.argv[1:] or ["fasta", "checkpoint", "blobs", "compacted", "sketches"]
+    what = sys.argv[1:] or ["fasta", "checkpoint", "blobs", "compacted", "deleted",
+                            "sketches"]
     if "fasta" in what:
         make_fasta()
     if "checkpoint" in what:
@@ -285,6 +316,8 @@ if __name__ == "__main__":
         make_blobs()
     if "compacted" in what:
         make_blobs(GOLDEN_COMPACTED, golden_compacted)
+    if "deleted" in what:
+        make_blobs(GOLDEN_DELETED, golden_deleted)
     if "sketches" in what:
         make_blobs(GOLDEN_SKETCHES, golden_sketch,
                    [(k, s) for k in SKETCH_KINDS for s in SKETCH_STREAMS],

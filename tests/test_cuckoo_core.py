@@ -200,6 +200,25 @@ def test_golden_compacted_bytes_per_config(epb, bits, dedup):
         "no donor took the partial-donor branch"
 
 
+@pytest.mark.parametrize("dedup", [True, False], ids=["set", "multiset"])
+@pytest.mark.parametrize("epb,bits", sorted(LEGAL_CONFIGS))
+def test_golden_deleted_bytes_per_config(epb, bits, dedup):
+    """One ``delete`` call (``bulk_delete_at`` per chain member) reproduces
+    the committed chains (``tests/data/golden_deleted``, written by
+    ``make_fixtures.py deleted``) byte for byte, so its slot order is
+    pinned; every case deletes from at least two chain members."""
+    name = fixtures.golden_blob_name(epb, bits, dedup)
+    with open(os.path.join(fixtures.GOLDEN_DELETED, name), "rb") as f:
+        want = f.read()
+    filt = fixtures.golden_filter(epb, bits, dedup)
+    before = [t.element_count for t in filt.tables]
+    hit = filt.delete(fixtures.golden_delete_keys())
+    assert serialize_filter(filt) == want
+    assert hit.any() and not hit.all()
+    assert sum(t.element_count < n for t, n in zip(filt.tables, before)) >= 2
+    assert filt.element_count == sum(before) - hit.sum()
+
+
 @pytest.mark.parametrize("epb,bits", [(4, 4), (4, 16), (2, 32)])
 def test_delete_stored_matches_delete_at_loop(epb, bits):
     """The vectorized removal of ``compact`` leaves the bytes of calling
@@ -331,6 +350,64 @@ def test_merge_then_compact_preserves_membership():
     a.merge(b)
     a.compact()
     assert a.contains(keys).all()
+
+
+def _merge_with_in_batch_pass(filt, other):
+    """The merge the set-donor skip replaced, as reference: every donor
+    table's pairs go through the in-batch first-occurrence pass of
+    ``_dedup_pairs`` before the in-chain check."""
+    for t in other.tables:
+        rows, fps = t.nonzero_entries()
+        if len(rows):
+            filt._insert_fps(fps, rows)
+    return filt
+
+
+@pytest.mark.parametrize("epb,bits", sorted(LEGAL_CONFIGS))
+def test_set_donor_merge_matches_in_batch_reference(epb, bits, monkeypatch):
+    """Merging set-mode donors skips the in-batch pass and leaves the
+    bytes of the merge that ran it: a set filter stores each canonical
+    (bucket pair, fp) once.  Chained donors, overlapping key sets."""
+    from cuckoofilter_spark.core import dynamic_filter
+
+    keys = fixtures.golden_stream()
+    params = CuckooParams(max_table_size=fixtures.BLOB_MAX_TABLE_SIZE,
+                          entries_per_bucket=epb, bits_per_fp=bits)
+    blobs = []
+    for i, part in enumerate((keys[:900], keys[600:1500], keys[1200:])):
+        f = DynamicCuckooFilter(params, rng_seed=i, dedup=True)
+        f.insert(part)
+        assert f.cf_count >= 2
+        blobs.append(serialize_filter(f))
+    want = deserialize_filter(blobs[0])
+    for b in blobs[1:]:
+        _merge_with_in_batch_pass(want, deserialize_filter(b))
+    passes = []
+    real = dynamic_filter._first_occurrence
+    monkeypatch.setattr(dynamic_filter, "_first_occurrence",
+                        lambda a: passes.append(len(a)) or real(a))
+    got = deserialize_filter(blobs[0])
+    for b in blobs[1:]:
+        got.merge(deserialize_filter(b))
+    assert passes == []
+    assert serialize_filter(got) == serialize_filter(want)
+    assert got.contains(keys).all()
+
+
+@pytest.mark.parametrize("epb,bits", [(4, 8), (2, 32)])
+def test_multiset_donor_copies_collapse_in_set_merge(epb, bits):
+    """A multiset donor holding many copies of a key, merged into a set
+    filter, still leaves one copy: its pairs keep the in-batch pass."""
+    params = CuckooParams(max_table_size=256, entries_per_bucket=epb, bits_per_fp=bits)
+    donor = DynamicCuckooFilter(params, dedup=False)
+    donor.insert(np.array([7] * 20 + [8, 9, 8], dtype=np.int64))
+    assert donor.element_count == 23
+    into = DynamicCuckooFilter(params, rng_seed=1, dedup=True)
+    into.insert(np.array([9], dtype=np.int64))
+    into.merge(donor)
+    assert into.element_count == 3
+    assert into.contains(np.array([7, 8, 9])).all()
+    assert into.delete(np.array([7, 7])).tolist() == [True, False]
 
 
 def _first_occurrence_by_sort(a):

@@ -217,6 +217,14 @@ def _cms_add_at(c: CountMinSketch, batch: np.ndarray) -> None:
     c.n_items += len(batch)
 
 
+def _bloom_or_at(b: BloomFilter, batch: np.ndarray) -> None:
+    """The Bloom update the bool-buffer one replaced, as reference: one
+    ``np.bitwise_or.at`` over every position of every key."""
+    pos = b._positions(batch).reshape(-1)
+    np.bitwise_or.at(b.bits, pos >> 6, np.uint64(1) << (pos & 63).astype(np.uint64))
+    b.n_items += len(batch)
+
+
 _DENSE_STREAMS = [s for s in fixtures.SKETCH_STREAMS
                   if s not in ("sparse_int64", "span_n", "span_n_plus_1")]
 
@@ -304,6 +312,25 @@ def test_cms_update_matches_add_at_reference(stream):
     assert np.array_equal(got.counts, want.counts)
     assert got.n_items == want.n_items == sum(
         len(b) for b in fixtures._sketch_streams()[stream])
+
+
+@pytest.mark.parametrize("m_bits,k,n", [
+    (1 << 14, 7, 2000),      # the golden Bloom shape
+    (1 << 20, 13, 50_000),   # many keys per word
+    (1_917_011, 13, 10),     # m not a multiple of 64; fewer positions than words
+    (1 << 20, 3, 5000),      # just under one position per word
+    (64, 1, 1),
+], ids=["golden_shape", "k13", "ragged_m_small_batch", "sparse", "one_word"])
+def test_bloom_update_matches_or_at_reference(m_bits, k, n):
+    """The packbits update sets the words and ``n_items`` of one
+    ``bitwise_or.at`` per position, batch after batch, at any fill."""
+    rng = np.random.default_rng(m_bits + k)
+    got, want = BloomFilter(m_bits, k, seed=5), BloomFilter(m_bits, k, seed=5)
+    for batch in (rng.integers(-(1 << 62), 1 << 62, n), rng.integers(0, 50, n)):
+        got.update(batch)
+        _bloom_or_at(want, batch)
+        assert np.array_equal(got.bits, want.bits)
+    assert got.bits.any() and got.n_items == want.n_items == 2 * n
 
 
 # ---------- Spark integration -------------------------------------------------

@@ -13,6 +13,8 @@ from cuckoofilter_spark.operators.build import (
     BLOB_SCHEMA,
     FANIN,
     FilterCodec,
+    _merge_group,
+    emit_blob,
     tree_merge_blobs,
 )
 from cuckoofilter_spark.params import CuckooParams
@@ -76,6 +78,46 @@ def test_tree_merge_equals_in_process_tree(spark, codec, make_state):
     assert codec.encode(_fold(codec, blobs)) != codec.encode(want)
 
 
+def test_merge_group_folds_each_group_it_holds():
+    """A level partition that holds several merge groups (pids with gaps
+    fold to gids that meet modulo the level's partition count) emits one
+    row per group, in gid order, each folded in pid order."""
+    pids = [17, 3, 20, 1, 16, 2]  # groups 0 (1, 2, 3) and 2 (16, 17, 20)
+    blobs = {pid: FilterCodec.encode(_cuckoo_state(pid)) for pid in pids}
+    batches = [emit_blob(pid, blobs[pid], 1, pid) for pid in pids]
+    out = list(_merge_group(FilterCodec)(iter(batches)))
+    rows = [b.to_pylist()[0] for b in out]
+    assert [(r["pid"], r["n_rows"], r["n_items"]) for r in rows] == [(0, 3, 6), (2, 3, 53)]
+    for r, group in zip(rows, ([1, 2, 3], [16, 17, 20])):
+        want = _fold(FilterCodec, [blobs[pid] for pid in group])
+        assert r["blob"] == FilterCodec.encode(want)
+
+
 def test_tree_merge_of_no_blobs_is_none(spark):
     empty = spark.createDataFrame([], BLOB_SCHEMA)
     assert tree_merge_blobs(empty, FilterCodec) == (None, 0, 0)
+
+
+def test_merge_levels_run_one_task_per_group(spark):
+    """A level of g merge groups runs as g tasks: 70 blobs read from 3
+    source partitions take a 9-task level, then a 2-task level.  Keyed on
+    ``groupBy``, adaptive execution coalesced each small blob shuffle
+    into one task."""
+    blobs = [FilterCodec.encode(_cuckoo_state(pid)) for pid in range(N_BLOBS)]
+    rows = [(pid, blobs[pid], 1, pid) for pid in range(N_BLOBS)]
+    sc = spark.sparkContext
+    df = spark.createDataFrame(sc.parallelize(rows, 3), BLOB_SCHEMA)
+    group = "test-merge-level-tasks"
+    sc.setJobGroup(group, "tree merge levels")
+    try:
+        got, _, _ = tree_merge_blobs(df, FilterCodec, N_BLOBS)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    stage_ids = sorted({s for j in tracker.getJobIdsForGroup(group)
+                        for s in tracker.getJobInfo(j).stageIds})
+    # a stage AQE reuses shows up again in a later job, with no task run
+    ran = [info.numCompletedTasks for info in map(tracker.getStageInfo, stage_ids)
+           if info is not None and info.numCompletedTasks]
+    assert ran == [3, 9, 2]  # the source stage, then one stage per level
+    assert FilterCodec.encode(got) == FilterCodec.encode(_in_process_tree(FilterCodec, blobs))
