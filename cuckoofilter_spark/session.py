@@ -8,7 +8,8 @@ Settings chosen for the 100 TB story, not just local tests:
   this to ~2-3x total executor cores via spark-submit conf),
 - on a ``local`` master whose workers can import this package when they
   start, Python workers forked from ``cuckoofilter_spark.worker_daemon``
-  (installed pyspark in place of ``pyspark.zip``; see that module).
+  (installed pyspark in place of ``pyspark.zip``, and no archive without
+  Python, such as Spark's spark-core jar, on the path; see that module).
   Anywhere else, e.g. a package shipped with ``--py-files``, which a worker
   only sees once a task runs, Spark's own ``pyspark.daemon``.
 """

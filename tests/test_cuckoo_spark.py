@@ -201,3 +201,52 @@ def test_parquet_listing_skips_uncommitted_temporary_files(spark, tmp_path):
     assert filt.contains(np.arange(0, 1000, dtype=np.int64)).all()
     leaked = filt.contains(np.arange(900000, 901000, dtype=np.int64)).mean()
     assert leaked <= CuckooParams(max_table_size=8192).fpr_bound * 3
+
+
+def test_pyarrow_build_skips_metadata_only_and_all_null_files(spark, tmp_path):
+    """A 0-row-group parquet file and a file whose ``array<int>`` column is
+    all NULL, beside normal files, add no key: zero false negatives and the
+    same answers as the normal files alone.  A table of only all-NULL rows
+    builds an empty filter."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cuckoofilter_spark.operators.build import (_num_row_groups,
+                                                    build_filter_from_parquet)
+    from cuckoofilter_spark.params import CuckooParams
+
+    ty = pa.list_(pa.int32())
+    rng = np.random.default_rng(7)
+    normal, mixed = tmp_path / "normal", tmp_path / "mixed"
+    normal.mkdir()
+    mixed.mkdir()
+    keys = []
+    for i in range(3):
+        docs = [rng.integers(0, 50_000, int(n)).astype(np.int32).tolist()
+                for n in rng.integers(0, 40, 300)]
+        keys += [k for d in docs for k in d]
+        for d in (normal, mixed):
+            pq.write_table(pa.table({"tokens": pa.array(docs, ty)}),
+                           str(d / f"part-{i}.parquet"))
+    # the extra files sort between the normal ones
+    empty = str(mixed / "part-0a.parquet")
+    pq.ParquetWriter(empty, pa.schema([("tokens", ty)])).close()
+    assert _num_row_groups(empty) == 0
+    nulls = pa.table({"tokens": pa.array([None] * 500, ty)})
+    pq.write_table(nulls, str(mixed / "part-1a.parquet"))
+
+    params = CuckooParams(max_table_size=1 << 14, bits_per_fp=12)
+    alone = build_filter_from_parquet(spark, str(normal), "tokens", params)
+    with_edges = build_filter_from_parquet(spark, str(mixed), "tokens", params)
+    members = np.unique(np.array(keys, dtype=np.int64))
+    assert with_edges.contains(members).all()
+    probes = np.arange(0, 100_000, dtype=np.int64)
+    assert np.array_equal(with_edges.contains(probes), alone.contains(probes))
+
+    only_nulls = tmp_path / "only_nulls"
+    only_nulls.mkdir()
+    pq.write_table(nulls, str(only_nulls / "part-0.parquet"))
+    filt = build_filter_from_parquet(spark, str(only_nulls), "tokens", params)
+    assert filt.element_count == 0
+    assert not filt.contains(probes).any()
