@@ -21,7 +21,7 @@ from __future__ import annotations
 import numpy as np
 
 from cuckoofilter_spark.core.cuckoo_table import CuckooTable, KickDraws
-from cuckoofilter_spark.hashing import hash64
+from cuckoofilter_spark.core.dynamic_filter import DynamicCuckooFilter
 from cuckoofilter_spark.params import CuckooParams
 
 
@@ -38,16 +38,8 @@ class CuckooFilter:
         self.draws = KickDraws(np.uint64(params.seed) ^ np.uint64(rng_seed) ^ np.uint64(0xC0FFEE),
                                params.entries_per_bucket)
 
-    # -- hashing ------------------------------------------------------------
-    def first_pass(self, keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """Vectorized ``firstPass`` (``CF/cuckoo_filter.h:181-188``):
-        ``i1 = (h >> 32) & (size-1)``, ``fp = h & fp_mask`` forced non-zero."""
-        h = hash64(np.asarray(keys), seed=self.params.seed)
-        mask = np.uint64(self.params.table_size - 1)
-        i1 = ((h >> np.uint64(32)) & mask).astype(np.int64)
-        fp = (h & np.uint64(self.params.fp_mask)).astype(np.uint32)
-        fp += (fp == 0).astype(np.uint32)
-        return fp, i1
+    #: the dynamic filter's hash layout: one ``firstPass`` body for both
+    first_pass = DynamicCuckooFilter.first_pass
 
     # -- insert ---------------------------------------------------------------
     def insert(self, keys: np.ndarray) -> np.ndarray:
@@ -58,26 +50,16 @@ class CuckooFilter:
     def insert_fps(self, fps: np.ndarray, bidx: np.ndarray) -> np.ndarray:
         """Insert pre-computed (fp, bucket) pairs — the merge path.  Either
         stored index of a pair is valid (partner recoverable)."""
-        n = len(fps)
-        ok = np.zeros(n, dtype=bool)
-        if n == 0 or self.victim is not None:
-            return ok
-        placed1 = self.table.bulk_place(fps, bidx)
-        ok |= placed1
-        pend = ~placed1
-        if pend.any():
-            i2 = self.table.complement(bidx[pend], fps[pend])
-            placed2 = self.table.bulk_place(fps[pend], i2)
-            ok[np.nonzero(pend)[0][placed2]] = True
-            res_pos = np.nonzero(pend)[0][~placed2]
-            res_i2 = i2[~placed2]
-            for pos, fp, i in zip(res_pos.tolist(), fps[res_pos].tolist(), res_i2.tolist()):
-                if self.victim is not None:
-                    break
-                leftover = self.table.kick_insert(fp, i, self.draws)
-                ok[pos] = True
-                if leftover is not None:
-                    self.victim = leftover
+        if self.victim is not None:
+            return np.zeros(len(fps), dtype=bool)
+        ok, res_pos, res_alt = self.table.place_two_choice(fps, bidx)
+        for pos, fp, i in zip(res_pos.tolist(), fps[res_pos].tolist(), res_alt.tolist()):
+            if self.victim is not None:
+                break
+            leftover = self.table.kick_insert(fp, i, self.draws)
+            ok[pos] = True
+            if leftover is not None:
+                self.victim = leftover
         return ok
 
     # -- contains ---------------------------------------------------------------

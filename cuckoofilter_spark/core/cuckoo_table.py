@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from cuckoofilter_spark.core.distinct import runs
 from cuckoofilter_spark.params import KICKS_MAX_COUNT, LEGAL_CONFIGS, MURMUR_CONST, CuckooParams
 
 _U32_MASK = np.uint64(0xFFFFFFFF)
@@ -106,10 +107,10 @@ class CuckooTable:
     def bulk_place(self, fps: np.ndarray, bidx: np.ndarray) -> np.ndarray:
         """Place as many (fp, bucket) pairs as fit without eviction.
 
-        Fully vectorized first-fit: stable-sort by bucket, rank within
-        bucket, admit ranks below the bucket's free-slot count, scatter into
-        the left-packed slots.  Returns a boolean mask of placed items.
-        Semantics match repeated ``replacingFingerprintInsertion(..,
+        Fully vectorized first-fit: stable-sort by bucket, rank within its
+        run (``distinct.runs``), admit ranks below the bucket's free slots,
+        scatter into the left-packed slots.  Returns a boolean mask of placed
+        items.  Semantics match repeated ``replacingFingerprintInsertion(..,
         eject=false)`` (``CF/cuckoo_table.h:223-241``): duplicates are
         stored as a multiset, full buckets reject.
         """
@@ -119,7 +120,8 @@ class CuckooTable:
         epb = self.params.entries_per_bucket
         order = np.argsort(bidx, kind="stable")
         sb = bidx[order]
-        uniq, start, counts = np.unique(sb, return_index=True, return_counts=True)
+        start, counts = runs(sb)
+        uniq = sb[start]
         rank = np.arange(n, dtype=np.int64) - np.repeat(start, counts)
         occ_u = self.occ[uniq].astype(np.int64)
         free_u = epb - occ_u
@@ -133,6 +135,21 @@ class CuckooTable:
         placed[order[ok_sorted]] = True
         self.element_count += int(ok_sorted.sum())
         return placed
+
+    def place_two_choice(self, fps: np.ndarray, bidx: np.ndarray
+                         ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """``bulk_place`` at each pair's own bucket, then the rest at its
+        partner bucket.  Returns ``(placed, res_pos, res_alt)``: the placed
+        mask, the ascending input positions of the pairs neither bucket
+        took, and their partner buckets, where a kick chain starts."""
+        placed = self.bulk_place(fps, bidx)
+        pend = np.flatnonzero(~placed)
+        if len(pend) == 0:
+            return placed, pend, pend
+        alt = self.complement(bidx[pend], fps[pend])
+        placed2 = self.bulk_place(fps[pend], alt)
+        placed[pend[placed2]] = True
+        return placed, pend[~placed2], alt[~placed2]
 
     # -- kick loop ---------------------------------------------------------
     def kick_insert(self, fp: int, idx: int, draws: KickDraws):
@@ -229,8 +246,8 @@ class CuckooTable:
         n = len(rows)
         if n == 0:
             return
-        start = np.flatnonzero(np.r_[True, rows[1:] != rows[:-1]])
-        rank = np.arange(n) - np.repeat(start, np.diff(np.r_[start, n]))
+        start, counts = runs(rows)
+        rank = np.arange(n) - np.repeat(start, counts)
         tbl = self.table
         for k in range(int(rank.max()) + 1):
             sel = rank == k
@@ -266,7 +283,8 @@ class CuckooTable:
         key = (bidx.astype(np.uint64) << np.uint64(32)) | fps.astype(np.uint64)
         order = np.argsort(key, kind="stable")
         sk = key[order]
-        uniq, start, req = np.unique(sk, return_index=True, return_counts=True)
+        start, req = runs(sk)
+        uniq = sk[start]
         ub = (uniq >> np.uint64(32)).astype(np.int64)
         uf = (uniq & np.uint64(0xFFFFFFFF)).astype(self.table.dtype)
         rows = self.table[ub]                      # (m, epb) gathered copies
@@ -285,8 +303,9 @@ class CuckooTable:
         clear = match & (mrank < ndel[:, None])
         pi, cols = np.nonzero(clear)
         self.table[ub[pi], cols] = 0
-        # re-left-pack every touched bucket (occupied slots first, stable)
-        tb = np.unique(ub[ndel > 0])
+        # re-left-pack every touched bucket (occupied slots first, stable);
+        # a bucket listed twice gets the same packed row twice
+        tb = ub[ndel > 0]
         trows = self.table[tb]
         pack = np.argsort(trows == 0, axis=1, kind="stable")
         self.table[tb] = np.take_along_axis(trows, pack, axis=1)

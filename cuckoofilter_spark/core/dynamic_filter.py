@@ -40,27 +40,11 @@ per-partition → tree-merge build correct.
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
-import pyarrow.compute as pc
 
 from cuckoofilter_spark.core.cuckoo_table import CuckooTable, KickDraws
+from cuckoofilter_spark.core.distinct import first_occurrence
 from cuckoofilter_spark.hashing import hash64
 from cuckoofilter_spark.params import CuckooParams
-
-
-def _first_occurrence(a: np.ndarray) -> np.ndarray:
-    """Mask of the first occurrence of each distinct value of ``a``, by
-    hashing rather than sorting: ``dictionary_encode`` numbers values in
-    order of first appearance, so position i is a first occurrence exactly
-    when ``codes[i] > max(codes[:i])``."""
-    if len(a) == 0:
-        return np.zeros(0, dtype=bool)
-    codes = pc.dictionary_encode(pa.array(a)).indices.to_numpy()
-    seen = np.maximum.accumulate(codes)
-    first = np.empty(len(a), dtype=bool)
-    first[0] = True
-    np.greater(codes[1:], seen[:-1], out=first[1:])
-    return first
 
 
 class DynamicCuckooFilter:
@@ -92,6 +76,8 @@ class DynamicCuckooFilter:
 
     # -- hashing (shared with CF) --------------------------------------------
     def first_pass(self, keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """Vectorized ``firstPass`` (``CF/cuckoo_filter.h:181-188``):
+        ``i1 = (h >> 32) & (size-1)``, ``fp = h & fp_mask`` forced non-zero."""
         h = hash64(np.asarray(keys), seed=self.params.seed)
         mask = np.uint64(self.params.table_size - 1)
         i1 = ((h >> np.uint64(32)) & mask).astype(np.int64)
@@ -112,9 +98,9 @@ class DynamicCuckooFilter:
         Processed in cache-sized chunks; semantics are unchanged (dedup
         mode is idempotent across chunks via the chain-contains check;
         multiset mode appends every occurrence either way).  Dedup mode
-        drops repeated keys before hashing: the first occurrence of a
-        (bucket pair, fp) is always the first occurrence of its key, so
-        the stored bytes are the same."""
+        drops repeated keys before hashing (``distinct.first_occurrence``):
+        the first occurrence of a (bucket pair, fp) is always the first
+        occurrence of its key, so the stored bytes are the same."""
         keys = np.asarray(keys)
         n = len(keys)
         if n == 0:
@@ -122,7 +108,7 @@ class DynamicCuckooFilter:
         for s in range(0, n, self.INSERT_CHUNK):
             chunk = keys[s:s + self.INSERT_CHUNK]
             if self.dedup:
-                chunk = chunk[_first_occurrence(chunk)]
+                chunk = chunk[first_occurrence(chunk)]
             fp, i1 = self.first_pass(chunk)
             self._insert_fps(fp, i1)
         return n
@@ -146,8 +132,8 @@ class DynamicCuckooFilter:
         collapse in-batch duplicates, keyed by (canonical bucket pair, fp).
         The canonical key is (min(i, partner), fp) — identical whichever of
         its two buckets a fingerprint arrives or is stored at.  In-batch
-        duplicates go by hashing (``_first_occurrence``), keeping each
-        pair's first occurrence in batch order.  ``distinct``: the caller
+        duplicates go by ``distinct.first_occurrence``, keeping each pair's
+        first occurrence in batch order.  ``distinct``: the caller
         knows the batch holds no duplicate canonical key (a set-mode
         filter's stored pairs), so only the in-chain check runs."""
         if len(fps) == 0:
@@ -157,7 +143,7 @@ class DynamicCuckooFilter:
             alt = self.tables[0].complement(bidx, fps)
             canon = np.minimum(bidx, alt)
             key = (canon.astype(np.uint64) << np.uint64(32)) | fps.astype(np.uint64)
-            first = _first_occurrence(key)
+            first = first_occurrence(key)
             fps, bidx = fps[first], bidx[first]
         # in-chain dedup (contains checks both buckets)
         present = self.contains_fps(fps, bidx)
@@ -175,21 +161,16 @@ class DynamicCuckooFilter:
             budget = self.params.capacity - t.element_count
             take_fp, take_i = pend_fp[:budget], pend_i[:budget]
             rest_fp, rest_i = pend_fp[budget:], pend_i[budget:]
-            placed = t.bulk_place(take_fp, take_i)
-            pend = ~placed
-            if pend.any():
-                i2 = t.complement(take_i[pend], take_fp[pend])
-                placed2 = t.bulk_place(take_fp[pend], i2)
-                res = ~placed2
-                spill_fp, spill_i = [], []
-                for fp, i in zip(take_fp[pend][res].tolist(), i2[res].tolist()):
-                    leftover = t.kick_insert(fp, i, self.draws)
-                    if leftover is not None:
-                        spill_i.append(leftover[0])
-                        spill_fp.append(leftover[1])
-                if spill_fp:
-                    rest_fp = np.concatenate([np.asarray(spill_fp, dtype=np.uint32), rest_fp])
-                    rest_i = np.concatenate([np.asarray(spill_i, dtype=np.int64), rest_i])
+            _, res_pos, res_alt = t.place_two_choice(take_fp, take_i)
+            spill_fp, spill_i = [], []
+            for fp, i in zip(take_fp[res_pos].tolist(), res_alt.tolist()):
+                leftover = t.kick_insert(fp, i, self.draws)
+                if leftover is not None:
+                    spill_i.append(leftover[0])
+                    spill_fp.append(leftover[1])
+            if spill_fp:
+                rest_fp = np.concatenate([np.asarray(spill_fp, dtype=np.uint32), rest_fp])
+                rest_i = np.concatenate([np.asarray(spill_i, dtype=np.int64), rest_i])
             if len(rest_fp) and self.tables[-1].element_count < self.params.capacity:
                 # kicks failed below the watermark (adversarial duplicate
                 # pile-up): force growth so every round makes progress
@@ -234,16 +215,12 @@ class DynamicCuckooFilter:
         i2 = self.tables[0].complement(i1, fp)
         remaining = np.arange(n, dtype=np.int64)
         for t in self.tables:
-            if len(remaining) == 0:
-                break
-            d1 = t.bulk_delete_at(i1[remaining], fp[remaining])
-            out[remaining[d1]] = True
-            remaining = remaining[~d1]
-            if len(remaining) == 0:
-                break
-            d2 = t.bulk_delete_at(i2[remaining], fp[remaining])
-            out[remaining[d2]] = True
-            remaining = remaining[~d2]
+            for idx in (i1, i2):
+                if len(remaining) == 0:
+                    return out
+                hit = t.bulk_delete_at(idx[remaining], fp[remaining])
+                out[remaining[hit]] = True
+                remaining = remaining[~hit]
         return out
 
     # -- compaction ---------------------------------------------------------------
@@ -254,10 +231,10 @@ class DynamicCuckooFilter:
         Donor order: ascending element count (the reference bubble-sorts the
         same way, ``:477-493``) — canonical order keeps merges deterministic.
 
-        Each donor's fingerprints go to the recipients by ``bulk_place``
-        (own bucket, then partner).  A fully moved donor is dropped; a
-        partly moved one loses its moved copies in one
-        ``CuckooTable.delete_stored``, which leaves the bytes of one
+        Each donor's fingerprints go to the recipients by
+        ``place_two_choice`` (own bucket, then partner; no kicks).  A fully
+        moved donor is dropped; a partly moved one loses its moved copies in
+        one ``CuckooTable.delete_stored``, which leaves the bytes of one
         ``delete_at`` per moved copy."""
         if len(self.tables) <= 1:
             return
@@ -275,12 +252,7 @@ class DynamicCuckooFilter:
                 if not remaining.any():
                     break
                 idx = np.nonzero(remaining)[0]
-                placed = r.bulk_place(fps[idx], rows[idx])
-                done = placed.copy()
-                if (~placed).any():
-                    alt = r.complement(rows[idx][~placed], fps[idx][~placed])
-                    placed2 = r.bulk_place(fps[idx][~placed], alt)
-                    done[np.nonzero(~placed)[0][placed2]] = True
+                done, _, _ = r.place_two_choice(fps[idx], rows[idx])
                 remaining[idx[done]] = False
             moved_mask = ~remaining
             if moved_mask.all():

@@ -50,19 +50,25 @@ def build_string_filter(df: DataFrame, col: str, params: CuckooParams,
                         params, **kw)
 
 
+def horner_hashes(win: np.ndarray) -> np.ndarray:
+    """Hash of each row of a ``(windows, n)`` uint64 window array:
+    Horner-combine its values with an odd 64-bit multiplier (wrapping mod
+    2^64).  The one n-gram and k-mer hash kernel."""
+    acc = np.zeros(len(win), dtype=np.uint64)
+    with np.errstate(over="ignore"):
+        for j in range(win.shape[1]):
+            acc = acc * NGRAM_MULT + win[:, j]
+    return acc
+
+
 def ngram_hashes(tokens: np.ndarray, n: int) -> np.ndarray:
     """Vectorized stride-1 n-gram hash of one token array (the k-mer
-    window, ``FASTA/fasta_reader.cpp:67-75``): Horner-combine the window
-    with an odd 64-bit multiplier.  len(out) = max(0, len(tokens)-n+1)."""
+    window, ``FASTA/fasta_reader.cpp:67-75``), by ``horner_hashes``.
+    len(out) = max(0, len(tokens)-n+1)."""
     t = np.asarray(tokens, dtype=np.uint64)
     if len(t) < n:
         return np.empty(0, dtype=np.uint64)
-    win = np.lib.stride_tricks.sliding_window_view(t, n)
-    acc = np.zeros(len(win), dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        for j in range(n):
-            acc = acc * NGRAM_MULT + win[:, j]
-    return acc
+    return horner_hashes(np.lib.stride_tricks.sliding_window_view(t, n))
 
 
 def _flat_ngram_hashes(ends: np.ndarray, values: np.ndarray, n: int) -> np.ndarray:
@@ -70,17 +76,10 @@ def _flat_ngram_hashes(ends: np.ndarray, values: np.ndarray, n: int) -> np.ndarr
     into the flat ``values`` array, without a Python-level per-window loop:
     Horner over the flat array, then windows crossing document boundaries
     are masked out."""
-    if len(values) < n:
-        return np.empty(0, dtype=np.uint64)
-    vals = values.astype(np.uint64)
-    win = np.lib.stride_tricks.sliding_window_view(vals, n)
-    acc = np.zeros(len(win), dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        for j in range(n):
-            acc = acc * NGRAM_MULT + win[:, j]
+    acc = ngram_hashes(values, n)
     # a window starting at flat position p is valid iff p+n ≤ the end of
     # the document containing p (first end strictly greater than p)
-    starts = np.arange(len(win))
+    starts = np.arange(len(acc))
     doc_of = np.searchsorted(ends, starts, side="right")
     valid = (starts + n) <= ends[doc_of]
     return acc[valid]

@@ -15,10 +15,10 @@ driver (``operators/build.py``, entered through
 
 Order-free sketches (HLL, count-min, Bloom, KMV: register max, counter
 sum, bit OR, min-k set) do not depend on update order, so their
-``update`` hashes each distinct key of a batch once: ``dense_counts``
-collapses an integer batch that spans fewer integers than it has values
-(a Zipf token stream over a small vocabulary) with one ``bincount``, and
-any other batch is hashed as it is.  The bytes are the same either way.
+``update`` hashes each distinct key of a batch once (``distinct.dense_counts``:
+one ``bincount`` over a batch that spans fewer integers than it has values,
+such as a Zipf token stream over a small vocabulary; any other batch is
+hashed as it is).  The bytes are the same either way.
 
 Wire format: 1-byte type tag + pickle-free struct/numpy payload per sketch
 (each class owns its layout); ``serialize_sketch``/``deserialize_sketch``
@@ -41,28 +41,6 @@ class Sketch(Protocol):
     def merge(self, other: "Sketch") -> "Sketch": ...
 
     def to_bytes(self) -> bytes: ...
-
-
-def dense_counts(batch: np.ndarray):
-    """``(keys, counts)``: the distinct values of an integer batch, in
-    ascending order and in the batch's own dtype, with their counts — or
-    ``None`` when the batch is not integer or its values span at least
-    ``len(batch)`` integers, where the ``bincount`` scratch would outgrow
-    the batch.  No hash table: Arrow's costs 200–360 ns/key on 2^18 or
-    more distinct int64 keys, a dense ``bincount`` ~4."""
-    if batch.dtype.kind not in "iu" or len(batch) == 0:
-        return None
-    lo, hi = batch.min(), batch.max()
-    if int(hi) - int(lo) >= len(batch):
-        return None
-    # offsets in the unsigned twin dtype: a span of 255 wraps in int8 but
-    # not in uint8, and every offset fits (span < len(batch))
-    u = np.dtype(f"u{batch.itemsize}")
-    counts = np.bincount((batch.view(u) - np.array(lo).view(u)).astype(np.intp))
-    nz = np.flatnonzero(counts)
-    # keys back in the batch's dtype: intp + uint64 would promote to
-    # float64 and round keys near 2^64; the wrap-around sum is exact
-    return nz.astype(batch.dtype) + lo, counts[nz]
 
 
 _REGISTRY: dict[int, type] = {}

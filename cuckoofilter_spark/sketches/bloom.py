@@ -3,7 +3,7 @@ against (no deletes, no load-factor cliff; merge = bitwise OR, perfectly
 commutative).  k index functions derived from one 64-bit hash by the
 Kirsch-Mitzenmacher double-hashing construction; everything batch-NumPy.
 A bit OR is idempotent, so ``update`` takes positions from each distinct
-key of a batch once (``base.dense_counts``); ``n_items`` counts
+key of a batch once (``distinct.dense_counts``); ``n_items`` counts
 occurrences.  A batch sets its bits through a bool buffer and one
 ``packbits`` (~70 ns/key at k = 13, against ~370 for ``np.bitwise_or.at``).
 """
@@ -15,8 +15,9 @@ import zlib
 
 import numpy as np
 
+from cuckoofilter_spark.core.distinct import dense_counts
 from cuckoofilter_spark.hashing import hash64
-from cuckoofilter_spark.sketches.base import dense_counts, register
+from cuckoofilter_spark.sketches.base import register
 
 _HDR = struct.Struct("<qiiq")  # m_bits, k, seed, n_items
 

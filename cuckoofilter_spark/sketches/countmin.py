@@ -2,7 +2,7 @@
 ``estimate(x) >= true(x)``, and ``estimate(x) <= true(x) + εN`` with
 probability 1-δ for ε = e/width, δ = e^-depth.  Merge = element-wise add
 (commutative), so ``update`` hashes each distinct key of a batch once and
-adds its count (``base.dense_counts``); ``n_items`` counts occurrences.
+adds its count (``distinct.dense_counts``); ``n_items`` counts occurrences.
 Cross-checked against exact GROUP BY counts of the Zipf head
 and Spark's built-in ``count_min_sketch``.
 """
@@ -14,8 +14,9 @@ import zlib
 
 import numpy as np
 
+from cuckoofilter_spark.core.distinct import dense_counts
 from cuckoofilter_spark.hashing import hash64
-from cuckoofilter_spark.sketches.base import dense_counts, register
+from cuckoofilter_spark.sketches.base import register
 
 _HDR = struct.Struct("<iiiq")  # depth, width, seed, n_items
 

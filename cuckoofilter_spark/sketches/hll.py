@@ -5,7 +5,7 @@ Standard HLL with the HLL++ small-range correction (linear counting below
 (max rank ≤ 64 - p).  Merge = element-wise max — commutative, associative.
 Relative error ≈ 1.04/√m; p=14 → m=16384 → ~0.81%.
 
-``update`` hashes each distinct key of a batch once (``base.dense_counts``;
+``update`` hashes each distinct key of a batch once (``distinct.dense_counts``;
 a register max does not care how often a key repeats) and takes the rank
 from a branch-free bit length (``_rank``).
 
@@ -20,8 +20,9 @@ import zlib
 
 import numpy as np
 
+from cuckoofilter_spark.core.distinct import dense_counts
 from cuckoofilter_spark.hashing import hash64
-from cuckoofilter_spark.sketches.base import dense_counts, register
+from cuckoofilter_spark.sketches.base import register
 
 _HDR = struct.Struct("<ii")  # p, seed
 

@@ -17,7 +17,7 @@ intersection is tiny relative to the union, exactly where HLL's
 inclusion–exclusion degrades (its absolute error is on the UNION's
 scale).  This is the theta-sketch trick (Apache DataSketches) on the
 simplest possible state: one sorted uint64 array.  ``update`` hashes each
-distinct key of a batch once (``base.dense_counts``).
+distinct key of a batch once (``distinct.dense_counts``).
 
 Merge = union of value sets, keep k smallest — commutative, associative,
 idempotent (a set union), so it rides the same deterministic tree as
@@ -31,8 +31,9 @@ import zlib
 
 import numpy as np
 
+from cuckoofilter_spark.core.distinct import dense_counts
 from cuckoofilter_spark.hashing import hash64
-from cuckoofilter_spark.sketches.base import dense_counts, register
+from cuckoofilter_spark.sketches.base import register
 
 _HDR = struct.Struct("<iiq")  # k, seed, n_values
 _FULL = float(2**64)

@@ -39,7 +39,7 @@ from pyspark.sql import SparkSession
 
 from cuckoofilter_spark.core.dynamic_filter import DynamicCuckooFilter
 from cuckoofilter_spark.operators.build import finish_filter, map_units, new_filter
-from cuckoofilter_spark.operators.kmers import ngram_hashes
+from cuckoofilter_spark.operators.kmers import horner_hashes, ngram_hashes
 from cuckoofilter_spark.params import CuckooParams
 
 
@@ -183,8 +183,6 @@ def hash_kmer_batch(kmers: "np.ndarray | list[str]", k: int) -> np.ndarray:
     """Hash a batch of equal-length k-mer strings (the probe side) with the
     same byte-Horner kernel: one frombuffer over the concatenated bytes,
     one reshape, one vectorized fold — no per-string loop."""
-    from cuckoofilter_spark.operators.kmers import NGRAM_MULT
-
     joined = "".join(kmers).encode("utf-8")
     flat = np.frombuffer(joined, dtype=np.uint8)
     if len(flat) != k * len(kmers):
@@ -197,12 +195,7 @@ def hash_kmer_batch(kmers: "np.ndarray | list[str]", k: int) -> np.ndarray:
             if len(h):
                 out[i] = h[0]
         return out
-    win = flat.reshape(len(kmers), k).astype(np.uint64)
-    acc = np.zeros(len(kmers), dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        for j in range(k):
-            acc = acc * NGRAM_MULT + win[:, j]
-    return acc
+    return horner_hashes(flat.reshape(len(kmers), k).astype(np.uint64))
 
 
 def build_fasta_filter(spark: SparkSession, paths: list[str], k: int,

@@ -30,7 +30,8 @@ from typing import Any
 import numpy as np
 import pandas as pd
 
-from cuckoofilter_spark.core.dynamic_filter import DynamicCuckooFilter, _first_occurrence
+from cuckoofilter_spark.core.distinct import first_occurrence
+from cuckoofilter_spark.core.dynamic_filter import DynamicCuckooFilter
 from cuckoofilter_spark.core.serde import deserialize_filter, serialize_filter
 from cuckoofilter_spark.params import CuckooParams
 
@@ -65,7 +66,7 @@ def streaming_dedup_by_key(stream_df, key_col: str,
             if len(keys) == 0:
                 continue
             # first occurrence within the batch...
-            fresh = _first_occurrence(keys)
+            fresh = first_occurrence(keys)
             # ...and not already in the seen-set filter
             fresh[fresh] = ~filt.contains(keys[fresh])
             if fresh.any():

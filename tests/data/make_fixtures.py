@@ -49,7 +49,7 @@ existing files are checked, never rewritten.
 ``sketches`` writes ``golden_sketches/<sketch>_<stream>.bin``: the
 ``serialize_sketch`` bytes of each order-free sketch (HLL at p = 4, 14 and
 18, count-min, Bloom, KMV) after ``update`` over each ``SKETCH_STREAMS``
-stream.  The streams cover both ``base.dense_counts`` outcomes: dense
+stream.  The streams cover both ``distinct.dense_counts`` outcomes: dense
 Zipf and negative int32 batches, dense int64 next to INT64_MIN and
 INT64_MAX, dense uint64 just below 2^64, a sparse random int64 stream, and
 single batches whose span is n - 1 (dense), n and n + 1 (hashed as they

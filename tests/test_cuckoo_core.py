@@ -14,7 +14,7 @@ import pytest
 
 from cuckoofilter_spark.core import CuckooFilter, DynamicCuckooFilter
 from cuckoofilter_spark.core.cuckoo_table import CuckooTable, KickDraws
-from cuckoofilter_spark.core.dynamic_filter import _first_occurrence
+from cuckoofilter_spark.core.distinct import first_occurrence, runs
 from cuckoofilter_spark.core.serde import deserialize_filter, serialize_filter
 from cuckoofilter_spark.params import LEGAL_CONFIGS, CuckooParams, highest_power_of_two
 
@@ -383,8 +383,8 @@ def test_set_donor_merge_matches_in_batch_reference(epb, bits, monkeypatch):
     for b in blobs[1:]:
         _merge_with_in_batch_pass(want, deserialize_filter(b))
     passes = []
-    real = dynamic_filter._first_occurrence
-    monkeypatch.setattr(dynamic_filter, "_first_occurrence",
+    real = dynamic_filter.first_occurrence
+    monkeypatch.setattr(dynamic_filter, "first_occurrence",
                         lambda a: passes.append(len(a)) or real(a))
     got = deserialize_filter(blobs[0])
     for b in blobs[1:]:
@@ -411,7 +411,7 @@ def test_multiset_donor_copies_collapse_in_set_merge(epb, bits):
 
 
 def _first_occurrence_by_sort(a):
-    """Reference for ``_first_occurrence``: the sort-based mask it replaced."""
+    """Reference for ``first_occurrence``: the ``np.unique`` mask."""
     _, first = np.unique(a, return_index=True)
     first.sort()
     mask = np.zeros(len(a), dtype=bool)
@@ -431,11 +431,71 @@ _I64 = np.iinfo(np.int64)
         np.array([_I64.min, _I64.max, -1, 0, 1, _I64.min + 1, _I64.max - 1]), 5000),
     np.random.default_rng(5).choice(
         np.array([1 << 63, (1 << 64) - 1, 0, 1, (1 << 63) + 1], dtype=np.uint64), 5000),
-], ids=["empty", "one", "all_equal", "zipf_int32", "int64_extremes", "uint64_high_bit"])
+    np.array([0, 3, 1, 3], dtype=np.int64),                      # span == len - 1
+    np.array([0, 4, 1, 4], dtype=np.int64),                      # span == len
+    np.r_[-128, 127, np.random.default_rng(6).integers(-128, 128, 2000)].astype(np.int8),
+    np.random.default_rng(7).integers(-(1 << 31), -(1 << 31) + 900, 1000).astype(np.int32),
+    np.random.default_rng(8).integers(-(1 << 31), 0, 1000).astype(np.int32),
+    np.uint64((1 << 64) - 1) - np.array([9, 0, 3, 9, 0, 1, 2, 5, 7, 8, 9], dtype=np.uint64),
+    np.uint64((1 << 64) - 1) - np.array([9, 0, 3, 0, 1, 2], dtype=np.uint64),
+], ids=["empty", "one", "all_equal", "zipf_int32", "int64_extremes", "uint64_high_bit",
+        "span_len_minus_1", "span_len", "int8_full_span", "neg_int32_dense",
+        "neg_int32_sparse", "uint64_top_10_dense", "uint64_top_10_sparse"])
 def test_first_occurrence_matches_sort_reference(a):
-    got = _first_occurrence(a)
+    got = first_occurrence(a)
     assert got.dtype == bool and len(got) == len(a)
     assert (got == _first_occurrence_by_sort(a)).all()
+
+
+def test_batch_paths_need_neither_unique_nor_arrow_hash(monkeypatch):
+    """Set-mode ``insert``, a multiset-donor ``merge``, ``delete``, a
+    chained ``compact`` and the HLL, count-min and Bloom updates find a
+    batch's distinct values and runs through ``core/distinct`` alone: they
+    all run, on a dense and a sparse batch, with ``np.unique`` and Arrow's
+    ``dictionary_encode`` raising."""
+    import pyarrow.compute as pc
+
+    from cuckoofilter_spark.sketches import BloomFilter, CountMinSketch, HyperLogLog
+
+    def banned(*args, **kwargs):
+        raise AssertionError("a batch path called np.unique or dictionary_encode")
+
+    rng = np.random.default_rng(12)
+    dense = (rng.zipf(1.3, 6000) % 700).astype(np.int64)
+    sparse = rng.integers(0, 1 << 62, 3000)
+    params = CuckooParams(max_table_size=256, bits_per_fp=16)
+    monkeypatch.setattr(np, "unique", banned)
+    monkeypatch.setattr(pc, "dictionary_encode", banned)
+    filt = DynamicCuckooFilter(params, dedup=True)
+    filt.insert(dense)
+    filt.insert(sparse)
+    donor = DynamicCuckooFilter(params, rng_seed=1)
+    donor.insert(np.concatenate([dense[:2000], sparse[:500]]))
+    filt.merge(donor)
+    assert filt.cf_count >= 3
+    assert filt.delete(sparse[:2000]).all()
+    filt.compact()
+    for sketch in (HyperLogLog(p=10), CountMinSketch(width=512), BloomFilter(m_bits=1 << 14)):
+        sketch.update(dense)
+        sketch.update(sparse)
+    monkeypatch.undo()
+    assert filt.contains(np.concatenate([dense, sparse[2000:]])).all()
+
+
+@pytest.mark.parametrize("s", [
+    np.zeros(0, dtype=np.int64),
+    np.array([42], dtype=np.int64),
+    np.full(9, 5, dtype=np.uint64),
+    np.sort(np.random.default_rng(9).choice(
+        np.array([_I64.min, _I64.min + 1, -1, 0, _I64.max - 1, _I64.max]), 300)),
+], ids=["empty", "one", "all_equal", "int64_extremes"])
+def test_runs_match_unique(s):
+    """Run starts and lengths of a sorted array are ``np.unique``'s first
+    indices and counts."""
+    start, counts = runs(s)
+    _, want_start, want_counts = np.unique(s, return_index=True, return_counts=True)
+    assert np.array_equal(start, want_start)
+    assert np.array_equal(counts, want_counts)
 
 
 @pytest.mark.parametrize("epb,bits", sorted(LEGAL_CONFIGS))

@@ -11,6 +11,7 @@ import os
 import numpy as np
 import pytest
 
+from cuckoofilter_spark.core.distinct import dense_counts
 from cuckoofilter_spark.sketches import (
     BloomFilter,
     CountMinSketch,
@@ -20,7 +21,6 @@ from cuckoofilter_spark.sketches import (
     deserialize_sketch,
     serialize_sketch,
 )
-from cuckoofilter_spark.sketches.base import dense_counts
 from cuckoofilter_spark.sketches.hll import _rank
 
 _spec = importlib.util.spec_from_file_location(
@@ -262,8 +262,12 @@ def test_golden_streams_take_both_dense_counts_paths(stream):
     np.int64((1 << 63) - 1) - np.arange(10, dtype=np.int64).repeat(2),
     np.uint64((1 << 64) - 1) - np.arange(10, dtype=np.uint64).repeat(2),
     np.array([7], dtype=np.int64),
+    np.array([0, 3, 1, 3], dtype=np.int64),                      # span == len - 1
+    np.int32(-1 << 31) + np.array([0, 5, 2, 5, 0, 1], dtype=np.int32),
+    np.uint64((1 << 64) - 1) - np.array([9, 0, 3, 9, 0, 1, 2, 5, 7, 8, 9], dtype=np.uint64),
 ], ids=["int8", "int8_full_span", "uint8", "neg_int32", "int64_min", "int64_max",
-        "uint64_top", "one"])
+        "uint64_top", "one", "span_len_minus_1", "int32_min_span_len_minus_1",
+        "uint64_top_10"])
 def test_dense_counts_matches_unique(a):
     """Distinct keys in ascending order, in the batch's own dtype (so keys
     next to 2^64 and INT64_MIN are not rounded through float64), with the
@@ -282,7 +286,11 @@ def test_dense_counts_matches_unique(a):
     np.array([True, False, True]),
     np.array([-(1 << 63), (1 << 63) - 1, 0], dtype=np.int64),
     np.array([0, (1 << 64) - 1, 5], dtype=np.uint64),
-], ids=["empty", "span_eq_len", "float", "bool", "int64_full", "uint64_full"])
+    np.array([-7, -3, -7, -4], dtype=np.int32),                  # span == len
+    np.uint64((1 << 64) - 1) - np.array([0, 4, 1, 2], dtype=np.uint64),
+    np.array([-1 << 31, (1 << 31) - 1] * 4, dtype=np.int32),
+], ids=["empty", "span_eq_len", "float", "bool", "int64_full", "uint64_full",
+        "neg_int32_span_eq_len", "uint64_top_span_eq_len", "int32_full"])
 def test_dense_counts_declines(a):
     assert dense_counts(a) is None
 
