@@ -274,7 +274,8 @@ class DynamicCuckooFilter:
         A set-mode donor never stores one canonical (bucket pair, fp) twice,
         so its pairs skip the in-batch pass of a set-mode ``self`` and meet
         only the in-chain check; a multiset donor's copies still collapse."""
-        assert self.params.to_tuple() == other.params.to_tuple(), "param mismatch"
+        if self.params.to_tuple() != other.params.to_tuple():
+            raise ValueError(f"merge: params {other.params} differ from {self.params}")
         for t in other.tables:
             rows, fps = t.nonzero_entries()
             if len(rows):

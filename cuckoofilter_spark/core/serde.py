@@ -1,4 +1,10 @@
-"""Compact binary serialization for filters and sketches.
+"""Compact binary serialization for filters, and the one blob format.
+
+Every blob the library ships or stores says what it holds in its first
+byte: filter bytes start with the magic ``CKF2`` (``is_filter_blob``), and
+sketch bytes start with their registry tag (``sketches.base``), which may
+never equal the magic's first byte.  ``operators.build.encode`` /
+``decode`` write and read both kinds with no further hint.
 
 A filter crosses process boundaries three times in the distributed build
 (Arrow batch out of the build UDF, shuffle into the merge stage, broadcast
@@ -101,6 +107,13 @@ def serialize_filter(f: CuckooFilter | DynamicCuckooFilter) -> bytes:
         parts.append(struct.pack("<q", len(blob)))
         parts.append(blob)
     return b"".join(parts)
+
+
+def is_filter_blob(data: bytes) -> bool:
+    """True when *data* is filter bytes, not tagged sketch bytes.  Only the
+    first byte is read, so a blob of an older filter format still goes to
+    ``deserialize_filter``, which rejects its magic loudly."""
+    return data[:1] == _MAGIC[:1]
 
 
 def deserialize_filter(data: bytes) -> CuckooFilter | DynamicCuckooFilter:

@@ -12,8 +12,11 @@ of the library rides the three pieces defined here:
 - ``tree_merge_blobs``: each level sends merge group ``pid // FANIN`` to
   its own partition (``repartitionById``) and folds it in ascending pid
   order inside ``mapInArrow``, until ≤ FANIN blobs remain; the driver folds
-  those, again in pid order.  The blob codec (``FilterCodec`` here,
-  ``sketches.base.SketchCodec``) is the caller's.
+  those, again in pid order.
+
+A blob is ``encode(state)``: filter bytes (magic ``CKF2``) or tagged sketch
+bytes, which ``decode`` tells apart by their first byte
+(``serde.is_filter_blob``), so no caller names a format.
 
 ``fold_partitions`` runs the fold over the partitions of a DataFrame
 (``build_filter``, ``kmers.build_ngram_filter``,
@@ -38,10 +41,11 @@ Scale notes (100 TB / ~10^6 input partitions):
 - column pruning: only the key column is selected before the UDF, so the
   parquet/Iceberg scan reads one column (check ``ReadSchema`` in explain).
 
-Closures shipped to Spark reach the serde functions only through a codec
-class or a module-level name, never as a captured function object: the
-benchmark's traced run patches ``deserialize_filter`` in this module on the
-driver, and a captured wrapper would be pickled into the job.
+Closures shipped to Spark reach the serde functions only through the
+module-level ``encode``/``decode``, which look them up in this module at
+call time, never as a captured function object: the benchmark's traced run
+patches ``deserialize_filter`` in this module on the driver, and a captured
+wrapper would be pickled into the job.
 """
 
 from __future__ import annotations
@@ -51,9 +55,11 @@ from collections.abc import Iterator
 import numpy as np
 from pyspark.sql import DataFrame
 
+from cuckoofilter_spark.core.cuckoo_filter import CuckooFilter
 from cuckoofilter_spark.core.dynamic_filter import DynamicCuckooFilter
-from cuckoofilter_spark.core.serde import deserialize_filter, serialize_filter
+from cuckoofilter_spark.core.serde import deserialize_filter, is_filter_blob, serialize_filter
 from cuckoofilter_spark.params import CuckooParams
+from cuckoofilter_spark.sketches.base import deserialize_sketch, serialize_sketch
 
 BLOB_SCHEMA = "pid long, blob binary, n_rows long, n_items long"
 
@@ -74,18 +80,18 @@ ROW_GROUP_SPLIT_MAX_FILES = 48
 UNITS_PER_TASK = 4
 
 
-class FilterCodec:
-    """Cuckoo blobs: plain ``serialize_filter`` bytes with no sketch tag —
-    the checkpoint wire format (``format_version`` 1).  Looks the serde
-    functions up in this module at call time."""
+def encode(state) -> bytes:
+    """The blob of a filter (plain ``serialize_filter`` bytes, the
+    checkpoint wire format) or of a sketch (``serialize_sketch``'s tagged
+    bytes)."""
+    if isinstance(state, (CuckooFilter, DynamicCuckooFilter)):
+        return serialize_filter(state)
+    return serialize_sketch(state)
 
-    @staticmethod
-    def encode(filt: DynamicCuckooFilter) -> bytes:
-        return serialize_filter(filt)
 
-    @staticmethod
-    def decode(blob: bytes) -> DynamicCuckooFilter:
-        return deserialize_filter(blob)
+def decode(blob: bytes):
+    """The filter or sketch ``encode`` wrote into *blob*."""
+    return deserialize_filter(blob) if is_filter_blob(blob) else deserialize_sketch(blob)
 
 
 def _keys_from_arrow(col) -> np.ndarray:
@@ -160,37 +166,31 @@ def finish_filter(filt, params: CuckooParams, dedup: bool,
     return filt
 
 
-def _fold_blobs(codec, pids, blobs):
+def _fold_blobs(pids, blobs):
     """Decode and merge blobs in ascending pid order: the fold of one merge
     group and of the driver alike."""
     acc = None
     for _, blob in sorted(zip(pids, blobs), key=lambda pb: pb[0]):
-        state = codec.decode(bytes(blob))
+        state = decode(bytes(blob))
         acc = state if acc is None else acc.merge(state)
     return acc
 
 
-def _merge_group(codec):
+def _merge_group(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
     """mapInArrow fold of one merge-level partition: each merge group it
     holds (``gid = pid // FANIN``), in ascending gid order, folds in pid
     order into one blob row whose pid is ``gid``, the next level's pid."""
-
-    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        groups = {}
-        for b in batches:
-            cols = b.to_pydict()
-            for row in zip(cols["pid"], cols["blob"], cols["n_rows"], cols["n_items"]):
-                groups.setdefault(row[0] // FANIN, []).append(row)
-        for gid in sorted(groups):
-            pids, blobs, n_rows, n_items = zip(*groups[gid])
-            yield emit_blob(gid, codec.encode(_fold_blobs(codec, pids, blobs)),
-                            sum(n_rows), sum(n_items))
-
-    return fn
+    groups = {}
+    for b in batches:
+        cols = b.to_pydict()
+        for row in zip(cols["pid"], cols["blob"], cols["n_rows"], cols["n_items"]):
+            groups.setdefault(row[0] // FANIN, []).append(row)
+    for gid in sorted(groups):
+        pids, blobs, n_rows, n_items = zip(*groups[gid])
+        yield emit_blob(gid, encode(_fold_blobs(pids, blobs)), sum(n_rows), sum(n_items))
 
 
-def tree_merge_blobs(blobs_df: DataFrame, codec=FilterCodec,
-                     n_blobs: int | None = None):
+def tree_merge_blobs(blobs_df: DataFrame, n_blobs: int | None = None):
     """Deterministically fold a ``BLOB_SCHEMA`` DataFrame down to one state.
     Executor-side levels while > FANIN blobs remain, then a driver-side
     ordered fold of the last ≤ FANIN.  Returns (state, n_rows, n_items);
@@ -221,15 +221,14 @@ def tree_merge_blobs(blobs_df: DataFrame, codec=FilterCodec,
     while n > FANIN:
         n = -(-n // FANIN)
         df = (df.repartitionById(n, (F.col("pid") / FANIN).cast("int"))
-              .mapInArrow(_merge_group(codec), BLOB_SCHEMA))
+              .mapInArrow(_merge_group, BLOB_SCHEMA))
     rows = df.collect()
-    acc = _fold_blobs(codec, [r["pid"] for r in rows], [r["blob"] for r in rows])
+    acc = _fold_blobs([r["pid"] for r in rows], [r["blob"] for r in rows])
     return acc, sum(r["n_rows"] for r in rows), sum(r["n_items"] for r in rows)
 
 
 def fold_partitions(df: DataFrame, col: str, new_state,
-                    extract=_keys_from_arrow, codec=FilterCodec,
-                    num_partitions: int | None = None):
+                    extract=_keys_from_arrow, num_partitions: int | None = None):
     """Fold each partition of ``df[col]`` into ``new_state(pid)`` inside
     ``mapInArrow`` and tree-merge the blobs; returns what
     ``tree_merge_blobs`` returns.
@@ -255,9 +254,9 @@ def fold_partitions(df: DataFrame, col: str, new_state,
         pid = TaskContext.get().partitionId()
         state = new_state(pid)
         n_rows, n_items = fold_batches(state, batches, extract)
-        yield emit_blob(pid, codec.encode(state), n_rows, n_items)
+        yield emit_blob(pid, encode(state), n_rows, n_items)
 
-    return tree_merge_blobs(proj.mapInArrow(fn, schema=BLOB_SCHEMA), codec, n_blobs)
+    return tree_merge_blobs(proj.mapInArrow(fn, schema=BLOB_SCHEMA), n_blobs)
 
 
 def map_units(spark, units: list, build_unit):
@@ -280,12 +279,12 @@ def map_units(spark, units: list, build_unit):
         for b in batches:
             for uid in b.column(0).to_pylist():
                 filt, n_rows, n_items = build_unit(ulist[uid], uid)
-                yield emit_blob(uid, FilterCodec.encode(filt), n_rows, n_items)
+                yield emit_blob(uid, encode(filt), n_rows, n_items)
 
     n = len(units)
     n_tasks = max(-(-n // UNITS_PER_TASK), spark.sparkContext.defaultParallelism)
     ids = spark.range(0, n, numPartitions=min(n, n_tasks))
-    return tree_merge_blobs(ids.mapInArrow(fn, schema=BLOB_SCHEMA), FilterCodec, n)
+    return tree_merge_blobs(ids.mapInArrow(fn, schema=BLOB_SCHEMA), n)
 
 
 def build_filter_from_parquet(spark, path: str, col: str, params: CuckooParams,

@@ -39,8 +39,8 @@ from cuckoofilter_spark.core.dynamic_filter import DynamicCuckooFilter
 from cuckoofilter_spark.core.serde import deserialize_filter, serialize_filter
 from cuckoofilter_spark.operators.build import (
     BLOB_SCHEMA,
-    FilterCodec,
     emit_blob,
+    encode,
     finish_filter,
     fold_batches,
     new_filter,
@@ -79,7 +79,7 @@ def _build_shard_udf(params: CuckooParams, dedup: bool):
         n_rows, n_items = fold_batches(
             filt, table.select([0]).combine_chunks().to_batches())
         return pa.Table.from_batches(
-            [emit_blob(shard, FilterCodec.encode(filt), n_rows, n_items)])
+            [emit_blob(shard, encode(filt), n_rows, n_items)])
 
     return fn
 

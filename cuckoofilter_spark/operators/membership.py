@@ -23,8 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
 
-from cuckoofilter_spark.core.serde import deserialize_filter, serialize_filter
+from cuckoofilter_spark.core.serde import deserialize_filter, is_filter_blob, serialize_filter
 from cuckoofilter_spark.operators.build import _keys_from_arrow
+from cuckoofilter_spark.sketches.base import deserialize_sketch
 
 # per-worker-process cache: full-blob digest -> deserialized filter or sketch.
 # The digest costs one pass over the (zlib-packed, ~100s of KB) blob on a
@@ -34,28 +35,27 @@ from cuckoofilter_spark.operators.build import _keys_from_arrow
 _FILTER_CACHE: dict[bytes, object] = {}
 
 
-def _get_filter(blob: bytes, codec=None):
-    """The cached state of *blob*: a cuckoo filter, or ``codec.decode(blob)``
-    when a codec class (e.g. ``SketchCodec``) is given."""
+def _get_filter(blob: bytes):
+    """The cached state of *blob*, filter or sketch (``build.decode``'s
+    rule, with this module's ``deserialize_filter``)."""
     key = hashlib.md5(blob).digest()
     s = _FILTER_CACHE.get(key)
     if s is None:
-        s = deserialize_filter(blob) if codec is None else codec.decode(blob)
+        s = deserialize_filter(blob) if is_filter_blob(blob) else deserialize_sketch(blob)
         _FILTER_CACHE[key] = s
     return s
 
 
-def _probe_udf(spark: SparkSession, blob: bytes, codec, return_type: str,
-               answer):
+def _probe_udf(spark: SparkSession, blob: bytes, return_type: str, answer):
     """The one point-query UDF: ``answer(state, keys)`` over each Arrow batch
     of keys, *state* being *blob* broadcast once and loaded through
-    ``_get_filter(blob, codec)`` once per task.  Every build drops NULLs, so
+    ``_get_filter`` once per task.  Every build drops NULLs, so
     a NULL key answers what an absent key answers: ``False`` / ``0``."""
     bc = spark.sparkContext.broadcast(blob)
 
     @arrow_udf(return_type)
     def probe(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
-        state = _get_filter(bc.value, codec)
+        state = _get_filter(bc.value)
         for keys in batches:
             res = answer(state, keys)
             if keys.null_count:
@@ -73,7 +73,7 @@ def cf_contains_udf(spark: SparkSession, filt) -> "callable":
     """Return an Arrow UDF ``contains(col) -> boolean`` bound to a broadcast
     of *filt*.  Usable in DataFrame code and registrable for SQL:
     ``spark.udf.register("cf_contains", cf_contains_udf(spark, f))``."""
-    return _probe_udf(spark, serialize_filter(filt), None, "boolean", _contains)
+    return _probe_udf(spark, serialize_filter(filt), "boolean", _contains)
 
 
 def membership_df(spark: SparkSession, filt, probes: DataFrame, col: str,

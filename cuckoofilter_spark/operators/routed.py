@@ -193,8 +193,8 @@ class RoutedCuckooFilter:
     def merge(self, other: "RoutedCuckooFilter") -> "RoutedCuckooFilter":
         """Union two routed filters (same routing config): per-route blob
         merge — state-only shuffle, keys are never touched."""
-        assert (self.n_routes, self.params.to_tuple()) == \
-               (other.n_routes, other.params.to_tuple()), "routing config mismatch"
+        if (self.n_routes, self.params.to_tuple()) != (other.n_routes, other.params.to_tuple()):
+            raise ValueError("merge: routing config (n_routes, params) differs")
 
         def merge_route(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             pdf = pdf.sort_values("n_keys", ascending=False)

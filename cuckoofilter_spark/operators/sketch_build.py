@@ -22,7 +22,6 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from cuckoofilter_spark.operators.build import _keys_from_arrow, fold_partitions
-from cuckoofilter_spark.sketches.base import SketchCodec
 
 
 def _numeric_from_arrow(col) -> np.ndarray:
@@ -58,5 +57,5 @@ def build_sketch(df: DataFrame, col: str, factory: Callable[[int], object],
     """
     extract = {"int": _keys_from_arrow, "float": _numeric_from_arrow,
                "str": _strings_from_arrow}[values]
-    sk, _, _ = fold_partitions(df, col, factory, extract, SketchCodec, num_partitions)
+    sk, _, _ = fold_partitions(df, col, factory, extract, num_partitions)
     return sk

@@ -14,8 +14,8 @@ semantics), so an all-NULL group emits the empty sketch's rows.
 
 Skew: a hot key's values all route to one group.  ``salt_buckets`` builds
 one partial sketch per (key, ``pmod(xxhash64(value), salt_buckets)``),
-ships it as ``SketchCodec`` bytes, and folds the partials per key with
-``build._fold_blobs`` in ascending salt order — never shuffle-arrival
+ships it as one ``build.encode`` blob, and folds the partials per key
+with ``build._fold_blobs`` in ascending salt order — never shuffle-arrival
 order, which matters for merges that depend on order (space-saving).
 Each distinct value lands wholly in one salt, so reducer input is bounded
 by ~1/salt_buckets of a hot key and per-value partial state is exact.
@@ -28,14 +28,13 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cuckoofilter_spark.operators.build import _fold_blobs
+from cuckoofilter_spark.operators.build import _fold_blobs, encode
 from cuckoofilter_spark.sketches import (
     HyperLogLog,
     KLLSketch,
     KMVSketch,
     SpaceSavingSketch,
 )
-from cuckoofilter_spark.sketches.base import SketchCodec
 
 
 def _keyed(table, key: str, cols: dict):
@@ -69,12 +68,11 @@ def _by_key(df: DataFrame, key: str, value: str, new_sketch, emit,
     def partial(table):
         return _keyed(table, key, {
             "_salt": table.column("_salt").slice(0, 1),
-            "blob": pa.array([SketchCodec.encode(sketch_of(table))], pa.binary())})
+            "blob": pa.array([encode(sketch_of(table))], pa.binary())})
 
     def merge(table):
         return _keyed(table, key, emit(_fold_blobs(
-            SketchCodec, table.column("_salt").to_pylist(),
-            table.column("blob").to_pylist())))
+            table.column("_salt").to_pylist(), table.column("blob").to_pylist())))
 
     salt = F.pmod(F.xxhash64(value), F.lit(salt_buckets)).alias("_salt")
     return (df.select(key, value, salt).groupBy(key, "_salt")

@@ -71,47 +71,38 @@ def bpe_ish_tokens(text: Column) -> Column:
     return F.regexp_extract_all(text, F.lit(BPE_ISH_PATTERN), 0)
 
 
-def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document token statistics (exact, SQL-reproducible)."""
-    ws = words(F.col(text_col))
+def _token_stats_cols(text: Column) -> dict[str, Column]:
+    ws = words(text)
     n_words = F.size(ws).cast("long")
-    n_chars = F.length(F.col(text_col)).cast("long")
-    bpe = bpe_ish_tokens(F.col(text_col))
-    return docs.select(
-        F.col("doc_id"),
-        n_words.alias("n_words"),
-        n_chars.alias("n_chars_m"),
+    n_chars = F.length(text).cast("long")
+    return {
+        "n_words": n_words,
+        "n_chars_m": n_chars,
         # average word length ×10000, integer-exact: total word chars =
         # n_chars - (n_words - 1) separators
-        F.floor((n_chars - n_words + 1) * 10000 / n_words).cast("long").alias("avg_word_len_x1e4"),
+        "avg_word_len_x1e4": F.floor((n_chars - n_words + 1) * 10000 / n_words).cast("long"),
         # BPE-ish pre-token count, whitespace runs excluded (what a
         # subword tokenizer's merge stage would consume)
-        F.size(F.filter(bpe, lambda t: ~t.rlike(r"^\s+$"))).cast("long")
-        .alias("n_bpe_ish"),
-    )
+        "n_bpe_ish": F.size(F.filter(bpe_ish_tokens(text),
+                                     lambda t: ~t.rlike(r"^\s+$"))).cast("long"),
+    }
 
 
-def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Heuristic quality signals: stopword ratio, short-doc flag, mean word
-    length band.  Mirrors common pretraining-corpus filters (C4/Gopher-style
-    rules) with exactly-reproducible integer arithmetic."""
-    ws = words(F.col(text_col))
+def _quality_cols(text: Column) -> dict[str, Column]:
+    ws = words(text)
     n_words = F.size(ws).cast("long")
     n_stop = _count_in(ws, EN_STOPWORDS).cast("long")
-    return docs.select(
-        F.col("doc_id"),
-        n_words.alias("n_words"),
-        n_stop.alias("n_stopwords"),
-        F.floor(n_stop * 10000 / n_words).cast("long").alias("stop_ratio_x1e4"),
-        (n_words >= 20).alias("len_ok"),
-        (n_stop > 0).alias("has_stopwords"),
-    )
+    return {
+        "n_words": n_words,
+        "n_stopwords": n_stop,
+        "stop_ratio_x1e4": F.floor(n_stop * 10000 / n_words).cast("long"),
+        "len_ok": n_words >= 20,
+        "has_stopwords": n_stop > 0,
+    }
 
 
-def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Stopword-vote language ID: count hits against per-language function
-    word lists, argmax with deterministic tie order en > de > fr > und."""
-    ws = words(F.col(text_col))
+def _lang_id_cols(text: Column) -> dict[str, Column]:
+    ws = words(text)
     en, de, fr = (_count_in(ws, v) for v in (EN_STOPWORDS, DE_STOPWORDS, FR_STOPWORDS))
     pred = (
         F.when((en >= de) & (en >= fr) & (en > 0), F.lit("en"))
@@ -119,10 +110,30 @@ def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
         .when(fr > 0, F.lit("fr"))
         .otherwise(F.lit("und"))
     )
-    return docs.select(
-        F.col("doc_id"), F.col("lang"), pred.alias("lang_pred"),
-        (pred == F.col("lang")).alias("lang_match"),
-    )
+    return {"lang": F.col("lang"), "lang_pred": pred,
+            "lang_match": pred == F.col("lang")}
+
+
+def _project(docs: DataFrame, cols: dict[str, Column]) -> DataFrame:
+    return docs.select(F.col("doc_id"), *(c.alias(name) for name, c in cols.items()))
+
+
+def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """Per-document token statistics (exact, SQL-reproducible)."""
+    return _project(docs, _token_stats_cols(F.col(text_col)))
+
+
+def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """Heuristic quality signals: stopword ratio, short-doc flag, mean word
+    length band.  Mirrors common pretraining-corpus filters (C4/Gopher-style
+    rules) with exactly-reproducible integer arithmetic."""
+    return _project(docs, _quality_cols(F.col(text_col)))
+
+
+def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """Stopword-vote language ID: count hits against per-language function
+    word lists, argmax with deterministic tie order en > de > fr > und."""
+    return _project(docs, _lang_id_cols(F.col(text_col)))
 
 
 def text_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -131,52 +142,28 @@ def text_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
     individual operators is logically identical (1:1 on a unique key of
     the same relation) but Catalyst cannot prove it and would plan three
     scans plus two corpus-wide shuffles; at 100 TB the fused form is the
-    only right plan.  Column values are expression-identical to the
-    individual operators (pytest-gated), with the shared subexpressions
-    (`ws`, `n_words`) computed once."""
-    ws = words(F.col(text_col))
-    n_words = F.size(ws).cast("long")
-    n_chars = F.length(F.col(text_col)).cast("long")
-    bpe = bpe_ish_tokens(F.col(text_col))
-    n_stop = _count_in(ws, EN_STOPWORDS).cast("long")
-    en, de, fr = (_count_in(ws, v)
-                  for v in (EN_STOPWORDS, DE_STOPWORDS, FR_STOPWORDS))
-    pred = (
-        F.when((en >= de) & (en >= fr) & (en > 0), F.lit("en"))
-        .when((de >= fr) & (de > 0), F.lit("de"))
-        .when(fr > 0, F.lit("fr"))
-        .otherwise(F.lit("und"))
-    )
-    return docs.select(
-        F.col("doc_id"),
-        n_words.alias("n_words"),
-        n_chars.alias("n_chars_m"),
-        F.floor((n_chars - n_words + 1) * 10000 / n_words).cast("long")
-        .alias("avg_word_len_x1e4"),
-        F.size(F.filter(bpe, lambda t: ~t.rlike(r"^\s+$"))).cast("long")
-        .alias("n_bpe_ish"),
-        n_stop.alias("n_stopwords"),
-        F.floor(n_stop * 10000 / n_words).cast("long")
-        .alias("stop_ratio_x1e4"),
-        (n_words >= 20).alias("len_ok"),
-        (n_stop > 0).alias("has_stopwords"),
-        F.col("lang"),
-        pred.alias("lang_pred"),
-        (pred == F.col("lang")).alias("lang_match"),
-    )
+    only right plan.  The columns are the individual operators' own
+    expressions, ``n_words`` once."""
+    text = F.col(text_col)
+    return _project(docs, {**_token_stats_cols(text), **_quality_cols(text),
+                           **_lang_id_cols(text)})
+
+
+def word_fingerprint(ws: Column, mult: int = 31, mod: int = (1 << 31) - 1) -> Column:
+    """Polynomial rolling hash over the hash-codes of the words *ws*
+    (Horner form, modular) — the order-sensitive document fingerprint
+    (same words → same code; any reorder/edit → different).  Stays
+    JVM-side via `aggregate`."""
+    codes = F.transform(ws, lambda w: F.pmod(F.xxhash64(w), F.lit(mod)))
+    return F.aggregate(codes, F.lit(0).cast("long"),
+                       lambda acc, c: F.pmod(acc * mult + c, F.lit(mod)))
 
 
 def rolling_fingerprint(docs: DataFrame, text_col: str = "text",
                         mult: int = 31, mod: int = (1 << 31) - 1) -> DataFrame:
-    """Polynomial rolling hash over word hash-codes (Horner form, modular)
-    — the order-sensitive document fingerprint (same text → same code;
-    any reorder/edit → different).  Stays JVM-side via `aggregate`."""
-    ws = words(F.col(text_col))
-    codes = F.transform(ws, lambda w: F.pmod(F.xxhash64(w), F.lit(mod)))
-    fp = F.aggregate(
-        codes, F.lit(0).cast("long"),
-        lambda acc, c: F.pmod(acc * mult + c, F.lit(mod)))
-    return docs.select("doc_id", fp.alias("rolling_fp"))
+    """``word_fingerprint`` of each document's words."""
+    return docs.select(
+        "doc_id", word_fingerprint(words(F.col(text_col)), mult, mod).alias("rolling_fp"))
 
 
 def _max_group_size(arr: Column) -> Column:
@@ -255,14 +242,15 @@ def repetition_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
         (F.col("top_word_frac_x1e4") > 2000) | (F.col("dup_3gram_frac_x1e4") > 3000))
 
 
+def content_md5(text: Column) -> Column:
+    """md5 of the lowercased, whitespace-normalized text."""
+    return F.md5(F.encode(F.regexp_replace(F.lower(text), r"\s+", " "), "UTF-8"))
+
+
 def fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Canonicalized exact-content fingerprint: md5 of the lowercased,
-    whitespace-normalized text.  The grouping key for exact dedup."""
-    canon = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
-    return docs.select(
-        F.col("doc_id"),
-        F.md5(F.encode(canon, "UTF-8")).alias("fingerprint"),
-    )
+    """Canonicalized exact-content fingerprint (``content_md5``): the
+    grouping key for exact dedup."""
+    return docs.select(F.col("doc_id"), content_md5(F.col(text_col)).alias("fingerprint"))
 
 
 #: PII patterns kept to the regex subset Java (Spark) and RE2 (DuckDB,

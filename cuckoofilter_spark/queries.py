@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from cuckoofilter_spark.operators import dedup as D
 from cuckoofilter_spark.operators import similarity as S
 from cuckoofilter_spark.operators import text as TX
-from cuckoofilter_spark.operators.build import build_filter
+from cuckoofilter_spark.operators.build import build_filter, new_filter
 from cuckoofilter_spark.operators.membership import cf_contains_udf, membership_df
 from cuckoofilter_spark.operators.sketch_build import build_sketch
 from cuckoofilter_spark.params import CuckooParams
@@ -794,24 +794,19 @@ def q_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``rejoin_stable``: re-joining the tokenized words reproduces the
       fingerprint of the raw text (tokenize→hash is deterministic and
       whitespace-canonical on the single-space corpus)."""
-    docs = T(spark, sf_dir, "documents")
-    mult, mod = 31, (1 << 31) - 1
-    ws = F.split(F.col("text"), " ")
+    return T(spark, sf_dir, "documents").select("doc_id", *_fingerprint_gates())
 
-    def fp_of(arr):
-        codes = F.transform(arr, lambda w: F.pmod(F.xxhash64(w), F.lit(mod)))
-        return F.aggregate(codes, F.lit(0).cast("long"),
-                           lambda acc, c: F.pmod(acc * mult + c, F.lit(mod)))
 
-    fwd = fp_of(ws)
-    rev = fp_of(F.reverse(ws))
-    rejoined = fp_of(F.split(F.array_join(ws, " "), " "))
+def _fingerprint_gates() -> list:
+    """``order_sensitive`` and ``rejoin_stable`` of q_rolling_fingerprint,
+    as columns over ``text``."""
+    ws = TX.words(F.col("text"))
+    fwd = TX.word_fingerprint(ws)
+    rev = TX.word_fingerprint(F.reverse(ws))
+    rejoined = TX.word_fingerprint(TX.words(F.array_join(ws, " ")))
     palindrome = ws == F.reverse(ws)
-    return docs.select(
-        "doc_id",
-        (palindrome | (fwd != rev)).alias("order_sensitive"),
-        (fwd == rejoined).alias("rejoin_stable"),
-    )
+    return [(palindrome | (fwd != rev)).alias("order_sensitive"),
+            (fwd == rejoined).alias("rejoin_stable")]
 
 
 SQL_ROLLING_FINGERPRINT = """
@@ -2000,7 +1995,6 @@ def q_streaming_tokens_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     restart-without-re-reading-history obligation)."""
     import tempfile
 
-    from cuckoofilter_spark.sketches import CuckooSketch
     from cuckoofilter_spark.sources.tokens import VOCAB, synth_tokens_df
     from cuckoofilter_spark.streaming.incremental import StreamingSketchBuilder
 
@@ -2014,18 +2008,16 @@ def q_streaming_tokens_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema = spark.read.parquet(src).schema
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", 2).parquet(src))
-        b = StreamingSketchBuilder(
-            lambda pid: CuckooSketch(params, seed=pid),
-            "tokens", state_dir=f"{td}/state")
+        b = StreamingSketchBuilder(new_filter(params), "tokens",
+                                   state_dir=f"{td}/state")
         q = (b.attach(stream).option("checkpointLocation", f"{td}/ckpt")
              .trigger(availableNow=True).start())
         _await_stream(q, 300)
 
         found = int(b.sketch.contains(head).sum())
         n_fp = int(b.sketch.contains(negs).sum())
-        b2 = StreamingSketchBuilder(
-            lambda pid: CuckooSketch(params, seed=pid),
-            "tokens", state_dir=f"{td}/state")
+        b2 = StreamingSketchBuilder(new_filter(params), "tokens",
+                                    state_dir=f"{td}/state")
         resume_ok = (
             b2.last_batch_id == b.last_batch_id
             and b2.sketch is not None
@@ -2953,26 +2945,9 @@ def q_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolling-hash order-sensitivity / rejoin-stability gates
     (expression-identical to q_rolling_fingerprint); a doc_id join of the
     two would scan the corpus twice and shuffle it once."""
-    docs = T(spark, sf_dir, "documents")
-    mult, mod = 31, (1 << 31) - 1
-    ws = F.split(F.col("text"), " ")
-
-    def fp_of(arr):
-        codes = F.transform(arr, lambda w: F.pmod(F.xxhash64(w), F.lit(mod)))
-        return F.aggregate(codes, F.lit(0).cast("long"),
-                           lambda acc, c: F.pmod(acc * mult + c, F.lit(mod)))
-
-    fwd = fp_of(ws)
-    rev = fp_of(F.reverse(ws))
-    rejoined = fp_of(F.split(F.array_join(ws, " "), " "))
-    palindrome = ws == F.reverse(ws)
-    canon = F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")
-    return docs.select(
-        "doc_id",
-        F.md5(F.encode(canon, "UTF-8")).alias("fingerprint"),
-        (palindrome | (fwd != rev)).alias("order_sensitive"),
-        (fwd == rejoined).alias("rejoin_stable"),
-    )
+    return T(spark, sf_dir, "documents").select(
+        "doc_id", TX.content_md5(F.col("text")).alias("fingerprint"),
+        *_fingerprint_gates())
 
 
 SQL_FINGERPRINTS = f"""

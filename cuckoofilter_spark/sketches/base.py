@@ -22,7 +22,10 @@ hashed as it is).  The bytes are the same either way.
 
 Wire format: 1-byte type tag + pickle-free struct/numpy payload per sketch
 (each class owns its layout); ``serialize_sketch``/``deserialize_sketch``
-dispatch on the tag, and ``SketchCodec`` hands them to the build driver.
+dispatch on the tag.  No tag equals the first byte of a filter blob
+(``serde.is_filter_blob``), so ``operators.build.decode`` reads filter and
+sketch bytes alike.  Tag 7 is the retired cuckoo-filter adapter's: such a
+blob (say, in a streaming state dir) still loads, as the filter it wraps.
 """
 
 from __future__ import annotations
@@ -30,6 +33,8 @@ from __future__ import annotations
 from typing import Protocol, runtime_checkable
 
 import numpy as np
+
+from cuckoofilter_spark.core.serde import deserialize_filter, is_filter_blob
 
 
 @runtime_checkable
@@ -45,8 +50,13 @@ class Sketch(Protocol):
 
 _REGISTRY: dict[int, type] = {}
 
+#: tag of the retired cuckoo-filter adapter: ``serialize_filter`` bytes behind it
+_FILTER_TAG = 7
+
 
 def register(cls):
+    if cls.TAG == _FILTER_TAG or is_filter_blob(bytes([cls.TAG])):
+        raise ValueError(f"sketch tag {cls.TAG} is reserved for filter blobs")
     _REGISTRY[cls.TAG] = cls
     return cls
 
@@ -56,13 +66,7 @@ def serialize_sketch(s) -> bytes:
 
 
 def deserialize_sketch(data: bytes):
+    if data[0] == _FILTER_TAG:
+        return deserialize_filter(data[1:])
     cls = _REGISTRY[data[0]]
     return cls.from_bytes(data[1:])
-
-
-class SketchCodec:
-    """Blob codec of the build driver (``operators/build.py``): tagged
-    sketch bytes."""
-
-    encode = staticmethod(serialize_sketch)
-    decode = staticmethod(deserialize_sketch)

@@ -66,7 +66,9 @@ class BloomFilter:
         return hit.all(axis=0)
 
     def merge(self, other: "BloomFilter") -> "BloomFilter":
-        assert (self.m_bits, self.k, self.seed) == (other.m_bits, other.k, other.seed)
+        mine, theirs = (self.m_bits, self.k, self.seed), (other.m_bits, other.k, other.seed)
+        if mine != theirs:
+            raise ValueError(f"merge: (m_bits, k, seed) {theirs} differ from {mine}")
         self.bits |= other.bits
         self.n_items += other.n_items
         return self

@@ -59,7 +59,9 @@ class CountMinSketch:
         return ests.min(axis=0)
 
     def merge(self, other: "CountMinSketch") -> "CountMinSketch":
-        assert (self.depth, self.width, self.seed) == (other.depth, other.width, other.seed)
+        mine, theirs = (self.depth, self.width, self.seed), (other.depth, other.width, other.seed)
+        if mine != theirs:
+            raise ValueError(f"merge: (depth, width, seed) {theirs} differ from {mine}")
         self.counts += other.counts
         self.n_items += other.n_items
         return self

@@ -59,7 +59,9 @@ class HyperLogLog:
         np.maximum.at(self.registers, idx, _rank(h << np.uint64(self.p), self.p))
 
     def merge(self, other: "HyperLogLog") -> "HyperLogLog":
-        assert (self.p, self.seed) == (other.p, other.seed)
+        if (self.p, self.seed) != (other.p, other.seed):
+            raise ValueError(f"merge: (p, seed) {(other.p, other.seed)} differ from "
+                             f"{(self.p, self.seed)}")
         np.maximum(self.registers, other.registers, out=self.registers)
         return self
 

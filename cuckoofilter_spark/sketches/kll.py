@@ -79,7 +79,8 @@ class KLLSketch:
 
     # -- merge ---------------------------------------------------------------
     def merge(self, other: "KLLSketch") -> "KLLSketch":
-        assert self.k == other.k
+        if self.k != other.k:
+            raise ValueError(f"merge: k {other.k} differs from {self.k}")
         while len(self.levels) < len(other.levels):
             self.levels.append(np.empty(0, dtype=np.float64))
         for l, buf in enumerate(other.levels):

@@ -58,7 +58,9 @@ class KMVSketch:
         self.values = np.unique(np.concatenate([self.values, h]))[:self.k]
 
     def merge(self, other: "KMVSketch") -> "KMVSketch":
-        assert (self.k, self.seed) == (other.k, other.seed)
+        if (self.k, self.seed) != (other.k, other.seed):
+            raise ValueError(f"merge: (k, seed) {(other.k, other.seed)} differ from "
+                             f"{(self.k, self.seed)}")
         self.values = np.unique(
             np.concatenate([self.values, other.values]))[:self.k]
         return self

@@ -65,7 +65,8 @@ class SpaceSavingSketch:
         self._prune()
 
     def merge(self, other: "SpaceSavingSketch") -> "SpaceSavingSketch":
-        assert self.k == other.k
+        if self.k != other.k:
+            raise ValueError(f"merge: k {other.k} differs from {self.k}")
         self.counts.update(other.counts)
         self.err += other.err
         self.n_items += other.n_items

@@ -77,7 +77,8 @@ class TDigest:
 
     # -- merge -------------------------------------------------------------------
     def merge(self, other: "TDigest") -> "TDigest":
-        assert self.delta == other.delta
+        if self.delta != other.delta:
+            raise ValueError(f"merge: delta {other.delta} differs from {self.delta}")
         self._flush()
         o_means, o_weights = other._merged_state()
         means = np.concatenate([self.means, o_means])

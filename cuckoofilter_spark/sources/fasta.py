@@ -247,4 +247,4 @@ def cf_contains_kmer_udf(spark: SparkSession, filt: DynamicCuckooFilter,
         h = hash_kmer_batch(vals, k).astype(np.int64)
         return f.contains(h) & valid.to_numpy(zero_copy_only=False)
 
-    return _probe_udf(spark, serialize_filter(filt), None, "boolean", answer)
+    return _probe_udf(spark, serialize_filter(filt), "boolean", answer)

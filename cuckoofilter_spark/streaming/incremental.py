@@ -26,7 +26,7 @@ from typing import Any
 
 import pandas as pd
 
-from cuckoofilter_spark.sketches.base import deserialize_sketch, serialize_sketch
+from cuckoofilter_spark.operators.build import decode, encode
 
 
 class StreamingSketchBuilder:
@@ -72,7 +72,7 @@ class StreamingSketchBuilder:
             # 8-byte little-endian last-committed batch id, then the blob —
             # one file so id+sketch commit atomically (single os.replace)
             bid = int.from_bytes(raw[8:16], "little", signed=True)
-            return deserialize_sketch(raw[16:]), bid
+            return decode(raw[16:]), bid
         return None, -1
 
     def _persist(self, batch_id: int) -> None:
@@ -80,7 +80,7 @@ class StreamingSketchBuilder:
         with open(tmp, "wb") as f:
             f.write(self._STATE_MAGIC)
             f.write(int(batch_id).to_bytes(8, "little", signed=True))
-            f.write(serialize_sketch(self.sketch))
+            f.write(encode(self.sketch))
         os.replace(tmp, self._blob_path)
         self.last_batch_id = batch_id
 

@@ -1,18 +1,19 @@
-"""CuckooSketch adapter: the cuckoo filter rides the generic sketch
-drivers (batch build, streaming foreachBatch) like every other sketch."""
+"""The cuckoo filter itself rides the generic sketch drivers (batch
+build, streaming foreachBatch) like every other sketch: it has ``update``
+and ``merge``, and ``build.encode``/``decode`` carry its blob."""
 
 import numpy as np
 
+from cuckoofilter_spark.operators.build import decode, encode, new_filter
 from cuckoofilter_spark.params import CuckooParams
-from cuckoofilter_spark.sketches import CuckooSketch, deserialize_sketch, serialize_sketch
 
 PARAMS = CuckooParams(max_table_size=65536, bits_per_fp=16)
 
 
 def test_protocol_roundtrip():
-    s = CuckooSketch(PARAMS, seed=1)
+    s = new_filter(PARAMS)(1)
     s.update(np.arange(10_000))
-    t = deserialize_sketch(serialize_sketch(s))
+    t = decode(encode(s))
     assert t.contains(np.arange(10_000)).all()
     assert t.element_count == s.element_count
 
@@ -22,8 +23,7 @@ def test_generic_sketch_build_driver(spark):
     from cuckoofilter_spark.sources.tokens import synth_tokens_df
 
     toks = synth_tokens_df(spark, n_docs=200, seed=42, num_partitions=4)
-    cs = build_sketch(toks, "tokens", lambda pid: CuckooSketch(PARAMS, seed=pid),
-                      num_partitions=4)
+    cs = build_sketch(toks, "tokens", new_filter(PARAMS), num_partitions=4)
     assert cs.contains(np.arange(0, 500, dtype=np.int64)).all()  # Zipf head
     negs = np.arange(10**8, 10**8 + 50_000, dtype=np.int64)
     assert cs.contains(negs).mean() <= PARAMS.fpr_bound
@@ -38,8 +38,8 @@ def test_streaming_cuckoo_build(spark, tmp_path):
     batch_df = spark.read.parquet(src)
     stream_df = (spark.readStream.schema(batch_df.schema)
                  .option("maxFilesPerTrigger", 1).parquet(src))
-    b = StreamingSketchBuilder(lambda pid: CuckooSketch(PARAMS, seed=pid),
-                               "tokens", state_dir=str(tmp_path / "state"))
+    b = StreamingSketchBuilder(new_filter(PARAMS), "tokens",
+                               state_dir=str(tmp_path / "state"))
     q = (b.attach(stream_df)
          .option("checkpointLocation", str(tmp_path / "ckpt"))
          .trigger(availableNow=True).start())

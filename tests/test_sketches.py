@@ -375,6 +375,7 @@ def test_spark_order_free_bytes_survive_scan_split_size(spark, tmp_path, monkeyp
     one partition per file at 1m, which adds an executor merge level."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.classic.dataframe import DataFrame
 
     from cuckoofilter_spark.operators import build
     from cuckoofilter_spark.operators.sketch_build import build_sketch
@@ -384,9 +385,13 @@ def test_spark_order_free_bytes_survive_scan_split_size(spark, tmp_path, monkeyp
         pq.write_table(pa.table({"k": np.minimum(rng.zipf(1.3, 3000), 2000)}),
                        str(tmp_path / f"part-{i:02d}.parquet"))
     merges = []
-    real_merge_group = build._merge_group
-    monkeypatch.setattr(build, "_merge_group",
-                        lambda codec: merges.append(codec) or real_merge_group(codec))
+    real_map = DataFrame.mapInArrow
+
+    def counting_map(self, fn, *args, **kwargs):
+        merges.append(fn is build._merge_group)
+        return real_map(self, fn, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "mapInArrow", counting_map)
     key = "spark.sql.files.maxPartitionBytes"
     old = spark.conf.get(key, None)
     out = {}
@@ -397,7 +402,7 @@ def test_spark_order_free_bytes_survive_scan_split_size(spark, tmp_path, monkeyp
             merges.clear()
             blobs = [serialize_sketch(build_sketch(df, "k", fac)) for fac in (
                 lambda pid: HyperLogLog(p=12), lambda pid: CountMinSketch(4, 1024))]
-            out[size] = (df.rdd.getNumPartitions(), len(merges), blobs)
+            out[size] = (df.rdd.getNumPartitions(), sum(merges), blobs)
     finally:
         if old is None:
             spark.conf.unset(key)
