@@ -13,11 +13,18 @@ endian header + zlib-compressed table bytes (freshly built, mostly-sparse
 tables compress 5-20×).  12-bit and 4-bit lane configs are densely packed
 on the wire (true ``bits_per_fp`` per slot, matching the reference's packed
 ``BitManager`` layout budget, ``Utils/bit_manager.cpp``) and unpacked into
-compute lanes on read.
+compute lanes on read.  A blob is read as untrusted bytes: every length is
+checked against the blob and the header, and a table inflates to exactly
+the bytes its params imply or the blob is refused with ``ValueError``.
+
+``content_digest`` hashes what ``serialize_filter`` reads, at a few
+percent of its cost (no packing, no zlib), so a caller can tell that a
+filter has not changed since it was last serialized.
 """
 
 from __future__ import annotations
 
+import hashlib
 import struct
 import zlib
 
@@ -63,9 +70,28 @@ def _pack_table(t: CuckooTable) -> bytes:
     return zlib.compress(raw, 1)
 
 
+def _packed_size(params: CuckooParams) -> int:
+    """Bytes of one table on the wire before zlib: 4- and 12-bit lanes are
+    packed in slot pairs (an odd count is padded with one zero slot)."""
+    n = params.slots
+    bits = params.bits_per_fp
+    if bits in (4, 12):
+        n += n % 2
+    return n * bits // 8
+
+
 def _unpack_table(params: CuckooParams, blob: bytes) -> CuckooTable:
-    raw = zlib.decompress(blob)
-    n = params.table_size * params.entries_per_bucket
+    want = _packed_size(params)
+    d = zlib.decompressobj()
+    try:
+        # one byte of room past the bound: a stream that inflates further
+        # shows it, and one that ends exactly there reaches its end marker
+        raw = d.decompress(blob, want + 1)
+    except zlib.error as e:
+        raise ValueError(f"bad filter blob: table stream: {e}") from None
+    if len(raw) != want or not d.eof or d.unused_data:
+        raise ValueError(f"bad filter blob: a table must inflate to exactly {want} bytes")
+    n = params.slots
     bits = params.bits_per_fp
     if bits in (8, 16, 32):
         flat = np.frombuffer(raw, dtype=params.dtype).copy()
@@ -88,7 +114,8 @@ def _unpack_table(params: CuckooParams, blob: bytes) -> CuckooTable:
     return CuckooTable(params, flat.reshape(params.table_size, params.entries_per_bucket))
 
 
-def serialize_filter(f: CuckooFilter | DynamicCuckooFilter) -> bytes:
+def _header(f: CuckooFilter | DynamicCuckooFilter) -> tuple[bytes, list[CuckooTable]]:
+    """The packed header of *f*'s blob, and the tables that follow it."""
     if isinstance(f, CuckooFilter):
         kind = 0
         tables = [f.table]
@@ -99,9 +126,28 @@ def serialize_filter(f: CuckooFilter | DynamicCuckooFilter) -> bytes:
         tables = f.tables
         v_idx, v_fp = -1, 0
     p = f.params
-    parts = [_HDR.pack(_MAGIC, kind, p.max_table_size, p.entries_per_bucket,
-                       p.bits_per_fp, int(p.seed) & 0xFFFFFFFFFFFFFFFF,
-                       len(tables), v_idx, v_fp)]
+    return _HDR.pack(_MAGIC, kind, p.max_table_size, p.entries_per_bucket,
+                     p.bits_per_fp, int(p.seed) & 0xFFFFFFFFFFFFFFFF,
+                     len(tables), v_idx, v_fp), tables
+
+
+def content_digest(f: CuckooFilter | DynamicCuckooFilter) -> bytes:
+    """A sha256 of everything ``serialize_filter`` reads from *f*: its
+    header fields and each table's shape, dtype and raw words.  Filters
+    with equal digests serialize to equal bytes; an ``insert``, ``delete``,
+    ``merge``, ``compact`` or a direct write to a table changes it."""
+    hdr, tables = _header(f)
+    h = hashlib.sha256(hdr)
+    for t in tables:
+        words = np.ascontiguousarray(t.table)
+        h.update(f"{words.shape}{words.dtype.str}".encode())
+        h.update(words)
+    return h.digest()
+
+
+def serialize_filter(f: CuckooFilter | DynamicCuckooFilter) -> bytes:
+    hdr, tables = _header(f)
+    parts = [hdr]
     for t in tables:
         blob = _pack_table(t)
         parts.append(struct.pack("<q", len(blob)))
@@ -117,19 +163,32 @@ def is_filter_blob(data: bytes) -> bool:
 
 
 def deserialize_filter(data: bytes) -> CuckooFilter | DynamicCuckooFilter:
+    if len(data) < _HDR.size:
+        raise ValueError(f"bad filter blob: {len(data)} bytes, shorter than its header")
     magic, kind, max_ts, epb, bits, seed, n_tables, v_idx, v_fp = \
         _HDR.unpack_from(data, 0)
     if magic != _MAGIC:
         raise ValueError(f"bad filter blob: magic {magic!r}, want {_MAGIC!r}")
+    if kind not in (0, 1, 2):
+        raise ValueError(f"bad filter blob: kind {kind}")
+    if n_tables < 1 or (kind == 0 and n_tables != 1):
+        raise ValueError(f"bad filter blob: {n_tables} tables for kind {kind}")
     params = CuckooParams(max_table_size=max_ts, entries_per_bucket=epb,
                           bits_per_fp=bits, seed=seed)
     off = _HDR.size
     tables = []
     for _ in range(n_tables):
+        if off + 8 > len(data):
+            raise ValueError(f"bad filter blob: {n_tables} tables, data ends at table {len(tables)}")
         (ln,) = struct.unpack_from("<q", data, off)
         off += 8
+        if ln < 0 or off + ln > len(data):
+            raise ValueError(f"bad filter blob: table {len(tables)} of {ln} bytes "
+                             f"overruns the blob")
         tables.append(_unpack_table(params, data[off:off + ln]))
         off += ln
+    if off != len(data):
+        raise ValueError(f"bad filter blob: {len(data) - off} bytes after the last table")
     if kind == 0:
         v = None if v_idx < 0 else (v_idx, v_fp)
         return CuckooFilter(params, table=tables[0], victim=v)

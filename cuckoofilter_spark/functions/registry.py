@@ -18,7 +18,7 @@ import pyarrow as pa
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import arrow_udf
 
-from cuckoofilter_spark.operators.build import _keys_from_arrow, encode
+from cuckoofilter_spark.operators.build import _keys_from_arrow
 from cuckoofilter_spark.operators.membership import _contains, _probe_udf, cf_contains_udf
 
 
@@ -48,7 +48,7 @@ def register_sketch(spark: SparkSession, sketch, name: str):
     if kind not in _POINT_QUERIES:
         raise ValueError(f"no SQL point-query shape for {kind}")
     return_type, answer = _POINT_QUERIES[kind]
-    fn = _probe_udf(spark, encode(sketch), return_type, answer)
+    fn = _probe_udf(spark, sketch, return_type, answer)
     spark.udf.register(name, fn)
     return fn
 

@@ -20,11 +20,13 @@ one ``bincount`` over a batch that spans fewer integers than it has values,
 such as a Zipf token stream over a small vocabulary; any other batch is
 hashed as it is).  The bytes are the same either way.
 
-Wire format: 1-byte type tag + pickle-free struct/numpy payload per sketch
-(each class owns its layout); ``serialize_sketch``/``deserialize_sketch``
-dispatch on the tag.  No tag equals the first byte of a filter blob
-(``serde.is_filter_blob``), so ``operators.build.decode`` reads filter and
-sketch bytes alike.  Tag 7 is the retired cuckoo-filter adapter's: such a
+Wire format: 1-byte type tag + a payload per sketch (each class owns its
+layout); ``serialize_sketch``/``deserialize_sketch`` dispatch on the tag.
+Most payloads are struct/NumPy bytes, but KLL and t-digest ``to_bytes``
+are still pickles, so their blobs must come from a trusted source.  A tag
+names one class: ``register`` refuses a second class under a taken tag.
+No tag equals the first byte of a filter blob (``serde.is_filter_blob``),
+so ``operators.build.decode`` reads filter and sketch bytes alike.  Tag 7 is the retired cuckoo-filter adapter's: such a
 blob (say, in a streaming state dir) still loads, as the filter it wraps.
 """
 
@@ -57,7 +59,8 @@ _FILTER_TAG = 7
 def register(cls):
     if cls.TAG == _FILTER_TAG or is_filter_blob(bytes([cls.TAG])):
         raise ValueError(f"sketch tag {cls.TAG} is reserved for filter blobs")
-    _REGISTRY[cls.TAG] = cls
+    if _REGISTRY.setdefault(cls.TAG, cls) is not cls:
+        raise ValueError(f"sketch tag {cls.TAG} is taken by {_REGISTRY[cls.TAG].__name__}")
     return cls
 
 

@@ -235,7 +235,6 @@ def cf_contains_kmer_udf(spark: SparkSession, filt: DynamicCuckooFilter,
     ``operators/membership``'s one probe helper."""
     import pyarrow.compute as pc
 
-    from cuckoofilter_spark.core.serde import serialize_filter
     from cuckoofilter_spark.operators.membership import _probe_udf
 
     def answer(f, kmers):
@@ -247,4 +246,4 @@ def cf_contains_kmer_udf(spark: SparkSession, filt: DynamicCuckooFilter,
         h = hash_kmer_batch(vals, k).astype(np.int64)
         return f.contains(h) & valid.to_numpy(zero_copy_only=False)
 
-    return _probe_udf(spark, serialize_filter(filt), "boolean", answer)
+    return _probe_udf(spark, filt, "boolean", answer)

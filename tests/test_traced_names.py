@@ -4,6 +4,7 @@ traced run, which only ``python -m pytest perfbench`` (slow subprocesses)
 would otherwise notice."""
 
 import os
+from collections import OrderedDict
 
 import numpy as np
 import pytest
@@ -47,7 +48,8 @@ def test_wrapped_serde_names_stay_on_the_call_path(perfbench, monkeypatch):
     """The driver fold decodes through ``build.deserialize_filter``, a probe
     loads its filter through ``membership._get_filter`` and
     ``membership.deserialize_filter``, and ``cf_contains_udf`` serializes
-    through ``membership.serialize_filter``."""
+    through ``membership.serialize_filter`` on its first call of a filter,
+    not again while the filter is unchanged, and again after an insert."""
     run, spans, workloads = perfbench
     from cuckoofilter_spark.core.serde import serialize_filter
     from cuckoofilter_spark.operators import build, membership
@@ -56,15 +58,28 @@ def test_wrapped_serde_names_stay_on_the_call_path(perfbench, monkeypatch):
     filt = build.new_filter(CuckooParams(max_table_size=1024, bits_per_fp=16))(0)
     filt.update(np.arange(1_000))
     blob = serialize_filter(filt)
-    monkeypatch.setattr(membership, "_probe_udf", lambda *a: None)
+
+    class Context:
+        def broadcast(self, value):
+            return None
+
+    spark = type("Session", (), {"sparkContext": Context()})
+    monkeypatch.setattr(membership, "_REUSE", OrderedDict())
+    monkeypatch.setattr(membership, "arrow_udf", lambda return_type: lambda fn: fn)
     tracer = spans.Tracer()
+    serialized = []
     try:
         workloads.install_layer_wrappers(tracer)
         run.install_driver_wrappers(tracer)
         build._fold_blobs([0], [blob])
         membership._FILTER_CACHE.clear()
         membership._get_filter(blob)
-        membership.cf_contains_udf(None, filt)
+        for change in (None, None, np.arange(1_000, 1_010)):
+            if change is not None:
+                filt.insert(change)
+            n = len(tracer.spans)
+            membership.cf_contains_udf(spark, filt)
+            serialized.append(sum(s["name"] == "driver.serialize" for s in tracer.spans[n:]))
     finally:
         tracer.restore()
         membership._FILTER_CACHE.clear()
@@ -72,4 +87,4 @@ def test_wrapped_serde_names_stay_on_the_call_path(perfbench, monkeypatch):
     assert "driver.fold" in names
     assert "operators.membership.get_filter" in names
     assert "core.serde.deserialize" in names
-    assert "driver.serialize" in names
+    assert serialized == [1, 0, 1]
