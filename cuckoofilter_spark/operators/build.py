@@ -19,11 +19,17 @@ bytes, which ``decode`` tells apart by their first byte
 (``serde.is_filter_blob``), so no caller names a format.
 
 ``fold_partitions`` runs the fold over the partitions of a DataFrame
-(``build_filter``, ``kmers.build_ngram_filter``,
-``sketch_build.build_sketch``); ``map_units`` runs it over a driver-planned
-unit list, up to ``UNITS_PER_TASK`` units per task and one blob per unit
-(``build_filter_from_parquet``, ``sources.fasta.build_fasta_filter``); the
-checkpointed shard build calls ``fold_batches`` from its own grouped map.
+(``build_filter``, ``kmers.build_ngram_filter``, and
+``sketch_build.build_sketch`` on any DataFrame but a bare parquet scan);
+``map_units`` runs it over a driver-planned unit list, up to
+``UNITS_PER_TASK`` units per task and one blob per unit.  Its callers are
+``sources.fasta.build_fasta_filter`` and ``fold_parquet``, the one pyarrow
+reader of parquet splits (``parquet_splits``), which serves
+``build_filter_from_parquet`` (one unit per split, so filter bytes follow
+the split list) and ``build_sketch`` over a bare parquet scan (contiguous
+splits packed by ``pack_splits`` into at most ``FANIN`` units on a small
+table).  The checkpointed shard build calls ``fold_batches`` from its own
+grouped map.
 
 Unlike ``RDD.treeAggregate`` (whose reduce order follows task completion),
 the tree shape and fold order are pure functions of the partition ids — the
@@ -72,6 +78,11 @@ FANIN = 8
 #: split granularity is a pure function of the data layout, never of
 #: cluster size (the merge tree must be identical at N and 4N executors)
 ROW_GROUP_SPLIT_MAX_FILES = 48
+
+#: most contiguous splits ``pack_splits`` puts in one unit once a table has
+#: more than ``FANIN`` units' worth: a constant bound on the work of one
+#: unit, so a large table still spreads over many tasks
+SPLITS_PER_UNIT = 4
 
 #: most units ``map_units`` packs into one task.  Packing pays a Python
 #: task's fixed cost once for several units; the cap keeps what a straggler
@@ -287,6 +298,62 @@ def map_units(spark, units: list, build_unit):
     return tree_merge_blobs(ids.mapInArrow(fn, schema=BLOB_SCHEMA), n)
 
 
+def parquet_splits(files: list[str]) -> list[tuple[str, int]]:
+    """The (file, row group) splits of a sorted file list, row group -1
+    meaning the whole file: one split per row group when the table has at
+    most ``ROW_GROUP_SPLIT_MAX_FILES`` files (the footer reads that takes
+    are one per file, affordable exactly when files are few), else one per
+    file.  The cutoff is a constant, so the split list is a pure function of
+    the data layout, never of cluster size (a ``defaultParallelism``-based
+    cutoff would silently change the merge tree with the cluster)."""
+    if len(files) > ROW_GROUP_SPLIT_MAX_FILES:
+        return [(f, -1) for f in files]
+    splits = []
+    for f in files:
+        # a metadata-only file (0 row groups) keeps one whole-file split,
+        # so the split list is never empty
+        splits += [(f, rg) for rg in range(_num_row_groups(f))] or [(f, -1)]
+    return splits
+
+
+def pack_splits(splits: list) -> list[list]:
+    """Contiguous runs of ``splits``: ``FANIN`` runs while that keeps each
+    to at most ``SPLITS_PER_UNIT`` splits (so a small table's blobs go
+    straight to the driver fold, no executor merge level), else
+    ``ceil(n / SPLITS_PER_UNIT)`` runs, so a large table still spreads over
+    many tasks.  A pure function of the split list."""
+    n = len(splits)
+    k = min(n, max(FANIN, -(-n // SPLITS_PER_UNIT)))
+    return [splits[i * n // k:(i + 1) * n // k] for i in range(k)]
+
+
+def fold_parquet(spark, units: list[list], col: str, new_state,
+                 extract=_keys_from_arrow, want=None):
+    """Fold each unit (a list of ``parquet_splits`` splits) into
+    ``new_state(uid)`` through ``map_units``, reading ``col`` with pyarrow
+    in ~8k-row batches (≈ 9 MB of tokens: decode scratch stays
+    cache-resident; whole-file reads measured ~10× slower under 32-way
+    concurrency).  ``want``: the Arrow type every file's ``col`` must have
+    (``ValueError`` otherwise), or None.  Returns what ``tree_merge_blobs``
+    returns."""
+
+    def build_unit(unit, uid):
+        state = new_state(uid)
+        batches = (b for split in unit for b in _read_split(split, col, want))
+        return (state, *fold_batches(state, batches, extract))
+
+    return map_units(spark, units, build_unit)
+
+
+def _read_split(split, col: str, want=None):
+    fpath, rg = split
+    pf = _parquet_file(fpath)
+    if want is not None and (got := _column_type(pf, col)) != want:
+        raise ValueError(f"{fpath}: column {col!r} is {got}, the table reads {want}")
+    return pf.iter_batches(columns=[col], batch_size=8192,
+                           row_groups=None if rg < 0 else [rg])
+
+
 def build_filter_from_parquet(spark, path: str, col: str, params: CuckooParams,
                               compact: bool = True,
                               dedup: bool = True) -> DynamicCuckooFilter:
@@ -302,44 +369,16 @@ def build_filter_from_parquet(spark, path: str, col: str, params: CuckooParams,
     readers (Petastorm etc.).  Works against any pyarrow filesystem
     (local/HDFS/S3) since executors read their own splits.
 
-    The split list is sorted-deterministic and each split is its own blob,
-    so the merge tree is pinned regardless of cluster size (north_rule
-    invariance)."""
+    The split list is sorted-deterministic (``parquet_splits``) and each
+    split is its own unit and blob, so the merge tree and the per-split rng
+    seeds are pinned regardless of cluster size (north_rule invariance)."""
     files = sorted(_list_parquet_files(path))
     if not files:
         # an empty filter answers "non-member" to everything — a silent
         # wrong-path/permissions bug must not masquerade as that
         raise ValueError(f"no parquet files found under {path!r}")
-    # Split granularity: one split (one blob) per FILE by default.  When
-    # the file count is small (single-file tables, small imports), split per
-    # ROW GROUP instead — the footer reads that requires are one per file,
-    # affordable exactly when files are few.  The cutoff is a CONSTANT,
-    # i.e. a pure function of the data layout — never of cluster size —
-    # so the split list, per-split rng seeds and the merge tree are
-    # identical at N and 4N executors (north_rule invariance; a
-    # defaultParallelism-based cutoff would silently change the tree
-    # with the cluster).  rg -1 = the whole file.
-    if len(files) <= ROW_GROUP_SPLIT_MAX_FILES:
-        splits = []
-        for f in files:
-            # a metadata-only file (0 row groups) keeps one whole-file
-            # split, so the split list is never empty
-            splits += [(f, rg) for rg in range(_num_row_groups(f))] or [(f, -1)]
-    else:
-        splits = [(f, -1) for f in files]
-    new_state = new_filter(params, dedup)
-
-    def build_split(split, sid):
-        fpath, rg = split
-        filt = new_state(sid)
-        # small streaming batches: ~8k docs ≈ 2M tokens ≈ 9 MB — decode
-        # scratch stays cache-resident; whole-file reads measured ~10×
-        # slower under 32-way concurrency
-        batches = _parquet_file(fpath).iter_batches(
-            columns=[col], batch_size=8192, row_groups=None if rg < 0 else [rg])
-        return (filt, *fold_batches(filt, batches))
-
-    filt, _, _ = map_units(spark, splits, build_split)
+    units = [[split] for split in parquet_splits(files)]
+    filt, _, _ = fold_parquet(spark, units, col, new_filter(params, dedup))
     return finish_filter(filt, params, dedup, compact)
 
 
@@ -355,6 +394,13 @@ def _parquet_file(fpath: str):
 
 def _num_row_groups(fpath: str) -> int:
     return _parquet_file(fpath).metadata.num_row_groups
+
+
+def _column_type(pf, col: str):
+    """The Arrow type of ``col`` in the open parquet file ``pf``; None when
+    the file has no such column."""
+    i = pf.schema_arrow.get_field_index(col)
+    return pf.schema_arrow.field(i).type if i >= 0 else None
 
 
 def _list_parquet_files(path: str) -> list[str]:

@@ -2,16 +2,29 @@
 ``operators/build.py`` parameterized over the ``Sketch`` protocol
 (Bloom/HLL/count-min/KLL/t-digest all ride it).
 
-One partial aggregate per input partition; merge levels shrink the blob
-count by ``build.FANIN``; fold order inside each group is ascending
-partition id, so the merge tree is a pure function of the partition count.
-What holds across scan splits and cluster sizes: the bytes of order-free
-states (HLL, count-min, Bloom, KMV) and every membership answer are
-identical.  What does not: the bytes of order-sensitive states (KLL,
-t-digest) follow the partition layout, which the scan's split size
-decides (``spark.sql.files.maxPartitionBytes`` 128m vs 1m over one token
-corpus at local[4]: 4 vs 16 partitions, different KLL bytes, the same HLL
-bytes).
+Two paths, one fold (``build.fold_batches``, the same extract) and one
+merge tree:
+- **direct**: when ``df`` is a bare parquet scan (``_parquet_scan``) and no
+  ``num_partitions`` is asked for, the tasks read the files themselves
+  with pyarrow (``build.fold_parquet``), so no token goes through the
+  JVM's parquet → InternalRow → Arrow re-encode.  One partial aggregate
+  per unit of contiguous row-group splits (``build.pack_splits``): at most
+  ``build.FANIN`` units on a small table, so its blobs skip the executor
+  merge level;
+- **JVM scan**: any other DataFrame, through ``build.fold_partitions``, one
+  partial aggregate per input partition.
+
+Merge levels shrink the blob count by ``build.FANIN``; fold order inside
+each group is ascending unit or partition id, so the merge tree is a pure
+function of the unit list or the partition count.  What holds across
+paths, scan splits and cluster sizes: the bytes of order-free states (HLL,
+count-min, Bloom, KMV) and every membership answer are identical.  What
+does not: the bytes of order-sensitive states (KLL, t-digest) follow the
+unit plan on the direct path (a pure function of the sorted file list and
+its footers) and the partition layout on the JVM path, which the scan's
+split size decides (``spark.sql.files.maxPartitionBytes`` 128m vs 1m over
+one token corpus at local[4]: 4 vs 16 partitions, different KLL bytes, the
+same HLL bytes).
 """
 
 from __future__ import annotations
@@ -21,22 +34,23 @@ from collections.abc import Callable
 import numpy as np
 from pyspark.sql import DataFrame
 
-from cuckoofilter_spark.operators.build import _keys_from_arrow, fold_partitions
+from cuckoofilter_spark.operators.build import (
+    ROW_GROUP_SPLIT_MAX_FILES,
+    _column_type,
+    _parquet_file,
+    fold_parquet,
+    fold_partitions,
+    pack_splits,
+    parquet_splits,
+)
 
 
-def _numeric_from_arrow(col) -> np.ndarray:
-    """Flatten an Arrow scalar/list numeric column to float64 (nulls → NaN,
-    dropped by quantile sketches); zero-copy offset arithmetic."""
-    import pyarrow as pa
-
-    if pa.types.is_list(col.type) or pa.types.is_large_list(col.type):
-        col = col.flatten()
-    return col.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
-
-
-def _strings_from_arrow(col) -> np.ndarray:
-    """Flatten an Arrow string (or list<string>) column to an object array
-    — for labeled sketches (top-k heavy hitters keep the actual keys)."""
+def _values_from_arrow(col) -> np.ndarray:
+    """Flatten an Arrow scalar or list column to a NumPy array in its own
+    dtype (ints stay ints, strings become an object array for labeled
+    sketches), NULL rows and NULL list elements dropped: NULL is not a
+    value to a sketch.  A filter build instead keeps a NULL element as key
+    0 (``build._keys_from_arrow``, row-aligned for probes)."""
     import pyarrow as pa
 
     if pa.types.is_list(col.type) or pa.types.is_large_list(col.type):
@@ -46,16 +60,68 @@ def _strings_from_arrow(col) -> np.ndarray:
     return col.to_numpy(zero_copy_only=False)
 
 
+def _numeric_from_arrow(col) -> np.ndarray:
+    """``_values_from_arrow`` as float64, for quantile sketches."""
+    return _values_from_arrow(col).astype(np.float64, copy=False)
+
+
+def _parquet_scan(df: DataFrame, col: str):
+    """(sorted files, Arrow type of ``col``) when ``df`` is a bare parquet
+    scan, else None.  Bare: the optimized plan is a parquet
+    ``LogicalRelation`` with no partition columns, at most under a
+    ``Project`` of plain column references (no filter, alias or limit), and
+    ``col`` has the Arrow type Spark would hand a Python task in every file
+    whose footer the plan reads anyway (all up to
+    ``ROW_GROUP_SPLIT_MAX_FILES``, else the first; a task refuses any other
+    file of another type)."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() == "Project":
+        exprs = plan.projectList()
+        if any(exprs.apply(i).getClass().getSimpleName() != "AttributeReference"
+               for i in range(exprs.size())):
+            return None
+        plan = plan.child()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if (rel.getClass().getSimpleName() != "HadoopFsRelation"
+            or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
+            or rel.partitionSchema().nonEmpty()):
+        return None
+    fields = [f for f in df.schema.fields if f.name == col]
+    files = sorted(df.inputFiles())
+    if len(fields) != 1 or not files:
+        return None
+    try:
+        want = to_arrow_type(fields[0].dataType)
+    except TypeError:  # a type Arrow cannot carry takes the JVM path
+        return None
+    for f in files if len(files) <= ROW_GROUP_SPLIT_MAX_FILES else files[:1]:
+        if _column_type(_parquet_file(f), col) != want:
+            return None
+    return files, want
+
+
 def build_sketch(df: DataFrame, col: str, factory: Callable[[int], object],
                  num_partitions: int | None = None, values: str = "int"):
     """Build one global sketch over ``df[col]``.
 
-    ``factory(partition_id)`` returns a fresh sketch (seed partition-local
-    randomness off the id).  ``values``: "int" for key sketches
-    (Bloom/HLL/CMS), "float" for quantile sketches (KLL/t-digest),
-    "str" for labeled sketches (space-saving top-k).
+    ``factory(unit_or_partition_id)`` returns a fresh sketch (seed
+    partition-local randomness off the id).  ``values``: "int" for key
+    sketches (Bloom/HLL/CMS), "float" for quantile sketches (KLL/t-digest),
+    "str" for labeled sketches (space-saving top-k).  A bare parquet scan
+    is read directly from its files unless ``num_partitions`` is given
+    (module docstring).
     """
-    extract = {"int": _keys_from_arrow, "float": _numeric_from_arrow,
-               "str": _strings_from_arrow}[values]
-    sk, _, _ = fold_partitions(df, col, factory, extract, num_partitions)
+    extract = {"int": _values_from_arrow, "float": _numeric_from_arrow,
+               "str": _values_from_arrow}[values]
+    scan = _parquet_scan(df, col) if num_partitions is None else None
+    if scan is None:
+        sk, _, _ = fold_partitions(df, col, factory, extract, num_partitions)
+    else:
+        files, want = scan
+        units = pack_splits(parquet_splits(files))
+        sk, _, _ = fold_parquet(df.sparkSession, units, col, factory, extract, want)
     return sk

@@ -372,7 +372,9 @@ def test_spark_kll_vs_exact_quantiles(spark, sf01_dir):
 def test_spark_order_free_bytes_survive_scan_split_size(spark, tmp_path, monkeypatch):
     """HLL and count-min bytes do not depend on the scan split size: 16
     small parquet files read as at most ``FANIN`` partitions at 128m and as
-    one partition per file at 1m, which adds an executor merge level."""
+    one partition per file at 1m, which adds an executor merge level.  The
+    no-op ``WHERE`` (``k`` has no NULLs) keeps the build on the JVM scan: a
+    bare scan is read directly from its files (the twin test below)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.classic.dataframe import DataFrame
@@ -398,7 +400,7 @@ def test_spark_order_free_bytes_survive_scan_split_size(spark, tmp_path, monkeyp
     try:
         for size in ("128m", "1m"):
             spark.conf.set(key, size)
-            df = spark.read.parquet(str(tmp_path))
+            df = spark.read.parquet(str(tmp_path)).where("k IS NOT NULL")
             merges.clear()
             blobs = [serialize_sketch(build_sketch(df, "k", fac)) for fac in (
                 lambda pid: HyperLogLog(p=12), lambda pid: CountMinSketch(4, 1024))]
@@ -412,6 +414,62 @@ def test_spark_order_free_bytes_survive_scan_split_size(spark, tmp_path, monkeyp
     assert n_big <= build.FANIN < n_small
     assert merged_big == 0 and merged_small == 2  # one merge level per sketch
     assert bytes_big == bytes_small
+
+
+def test_spark_direct_scan_bytes_survive_scan_split_size(spark, tmp_path, monkeypatch):
+    """The bare-scan twin of the test above: ``build_sketch`` reads the 16
+    files itself, in ``FANIN`` units planned from the sorted files and their
+    footers, so the scan split size reaches neither the plan (no executor
+    merge level at 128m or at 1m) nor the HLL and count-min bytes, which
+    equal the JVM scan's."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from cuckoofilter_spark.operators import build, sketch_build
+    from cuckoofilter_spark.operators.sketch_build import build_sketch
+
+    rng = np.random.default_rng(9)
+    for i in range(16):
+        pq.write_table(pa.table({"k": np.minimum(rng.zipf(1.3, 3000), 2000)}),
+                       str(tmp_path / f"part-{i:02d}.parquet"))
+    merges, units = [], []
+    real_map, real_fold = DataFrame.mapInArrow, sketch_build.fold_parquet
+
+    def counting_map(self, fn, *args, **kwargs):
+        merges.append(fn is build._merge_group)
+        return real_map(self, fn, *args, **kwargs)
+
+    def recording_fold(spark_, unit_list, *args, **kwargs):
+        units.append(unit_list)
+        return real_fold(spark_, unit_list, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "mapInArrow", counting_map)
+    monkeypatch.setattr(sketch_build, "fold_parquet", recording_fold)
+    facs = (lambda pid: HyperLogLog(p=12), lambda pid: CountMinSketch(4, 1024))
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key, None)
+    out = {}
+    try:
+        for size in ("128m", "1m"):
+            spark.conf.set(key, size)
+            df = spark.read.parquet(str(tmp_path))
+            merges.clear()
+            units.clear()
+            blobs = [serialize_sketch(build_sketch(df, "k", fac)) for fac in facs]
+            out[size] = (sum(merges), units[:], blobs)
+        jvm = [serialize_sketch(build_sketch(df, "k", fac, num_partitions=3)) for fac in facs]
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    (merged_big, units_big, bytes_big), (merged_small, units_small, bytes_small) = (
+        out["128m"], out["1m"])
+    assert merged_big == merged_small == 0
+    assert units_big == units_small and len(units_big) == 2
+    assert [len(u) for u in units_big[0]] == [2] * build.FANIN
+    assert bytes_big == bytes_small == jvm
 
 
 def test_tdigest_buffer_size_survives_serde():
