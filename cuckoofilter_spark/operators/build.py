@@ -26,9 +26,8 @@ bytes, which ``decode`` tells apart by their first byte
 ``sources.fasta.build_fasta_filter`` and ``fold_parquet``, the one pyarrow
 reader of parquet splits (``parquet_splits``), which serves
 ``build_filter_from_parquet`` (one unit per split, so filter bytes follow
-the split list) and ``build_sketch`` over a bare parquet scan (contiguous
-splits packed by ``pack_splits`` into at most ``FANIN`` units on a small
-table).  The checkpointed shard build calls ``fold_batches`` from its own
+the split list) and ``build_sketch`` over a small bare parquet scan (its
+splits packed into at most ``FANIN`` contiguous units).  The checkpointed shard build calls ``fold_batches`` from its own
 grouped map.
 
 Unlike ``RDD.treeAggregate`` (whose reduce order follows task completion),
@@ -78,11 +77,6 @@ FANIN = 8
 #: split granularity is a pure function of the data layout, never of
 #: cluster size (the merge tree must be identical at N and 4N executors)
 ROW_GROUP_SPLIT_MAX_FILES = 48
-
-#: most contiguous splits ``pack_splits`` puts in one unit once a table has
-#: more than ``FANIN`` units' worth: a constant bound on the work of one
-#: unit, so a large table still spreads over many tasks
-SPLITS_PER_UNIT = 4
 
 #: most units ``map_units`` packs into one task.  Packing pays a Python
 #: task's fixed cost once for several units; the cap keeps what a straggler
@@ -308,50 +302,35 @@ def parquet_splits(files: list[str]) -> list[tuple[str, int]]:
     cutoff would silently change the merge tree with the cluster)."""
     if len(files) > ROW_GROUP_SPLIT_MAX_FILES:
         return [(f, -1) for f in files]
-    splits = []
-    for f in files:
-        # a metadata-only file (0 row groups) keeps one whole-file split,
-        # so the split list is never empty
-        splits += [(f, rg) for rg in range(_num_row_groups(f))] or [(f, -1)]
-    return splits
+    return [s for f in files for s in row_group_splits(f, _num_row_groups(f))]
 
 
-def pack_splits(splits: list) -> list[list]:
-    """Contiguous runs of ``splits``: ``FANIN`` runs while that keeps each
-    to at most ``SPLITS_PER_UNIT`` splits (so a small table's blobs go
-    straight to the driver fold, no executor merge level), else
-    ``ceil(n / SPLITS_PER_UNIT)`` runs, so a large table still spreads over
-    many tasks.  A pure function of the split list."""
-    n = len(splits)
-    k = min(n, max(FANIN, -(-n // SPLITS_PER_UNIT)))
-    return [splits[i * n // k:(i + 1) * n // k] for i in range(k)]
+def row_group_splits(fpath: str, num_row_groups: int) -> list[tuple[str, int]]:
+    """One split per row group of ``fpath``; a metadata-only file (0 row
+    groups) keeps one whole-file split, so a split list is never empty."""
+    return [(fpath, rg) for rg in range(num_row_groups)] or [(fpath, -1)]
 
 
 def fold_parquet(spark, units: list[list], col: str, new_state,
-                 extract=_keys_from_arrow, want=None):
+                 extract=_keys_from_arrow):
     """Fold each unit (a list of ``parquet_splits`` splits) into
     ``new_state(uid)`` through ``map_units``, reading ``col`` with pyarrow
     in ~8k-row batches (≈ 9 MB of tokens: decode scratch stays
     cache-resident; whole-file reads measured ~10× slower under 32-way
-    concurrency).  ``want``: the Arrow type every file's ``col`` must have
-    (``ValueError`` otherwise), or None.  Returns what ``tree_merge_blobs``
-    returns."""
+    concurrency).  Returns what ``tree_merge_blobs`` returns."""
 
     def build_unit(unit, uid):
         state = new_state(uid)
-        batches = (b for split in unit for b in _read_split(split, col, want))
+        batches = (b for split in unit for b in _read_split(split, col))
         return (state, *fold_batches(state, batches, extract))
 
     return map_units(spark, units, build_unit)
 
 
-def _read_split(split, col: str, want=None):
+def _read_split(split, col: str):
     fpath, rg = split
-    pf = _parquet_file(fpath)
-    if want is not None and (got := _column_type(pf, col)) != want:
-        raise ValueError(f"{fpath}: column {col!r} is {got}, the table reads {want}")
-    return pf.iter_batches(columns=[col], batch_size=8192,
-                           row_groups=None if rg < 0 else [rg])
+    return _parquet_file(fpath).iter_batches(
+        columns=[col], batch_size=8192, row_groups=None if rg < 0 else [rg])
 
 
 def build_filter_from_parquet(spark, path: str, col: str, params: CuckooParams,
@@ -394,13 +373,6 @@ def _parquet_file(fpath: str):
 
 def _num_row_groups(fpath: str) -> int:
     return _parquet_file(fpath).metadata.num_row_groups
-
-
-def _column_type(pf, col: str):
-    """The Arrow type of ``col`` in the open parquet file ``pf``; None when
-    the file has no such column."""
-    i = pf.schema_arrow.get_field_index(col)
-    return pf.schema_arrow.field(i).type if i >= 0 else None
 
 
 def _list_parquet_files(path: str) -> list[str]:

@@ -4,15 +4,16 @@
 
 Two paths, one fold (``build.fold_batches``, the same extract) and one
 merge tree:
-- **direct**: when ``df`` is a bare parquet scan (``_parquet_scan``) and no
-  ``num_partitions`` is asked for, the tasks read the files themselves
-  with pyarrow (``build.fold_parquet``), so no token goes through the
-  JVM's parquet → InternalRow → Arrow re-encode.  One partial aggregate
-  per unit of contiguous row-group splits (``build.pack_splits``): at most
-  ``build.FANIN`` units on a small table, so its blobs skip the executor
-  merge level;
-- **JVM scan**: any other DataFrame, through ``build.fold_partitions``, one
-  partial aggregate per input partition.
+- **direct**: when ``df`` is a bare parquet scan of at most
+  ``DIRECT_MAX_SPLITS`` row groups that pyarrow opens on the driver
+  (``_parquet_scan``) and no ``num_partitions`` is asked for, the tasks
+  read the files themselves with pyarrow (``build.fold_parquet``), so no
+  token goes through the JVM's parquet → InternalRow → Arrow re-encode.
+  One partial aggregate per unit of contiguous row-group splits
+  (``_pack_splits``): at most ``build.FANIN`` units, so the blobs skip the
+  executor merge level;
+- **JVM scan**: any other DataFrame, a larger table included, through
+  ``build.fold_partitions``, one partial aggregate per input partition.
 
 Merge levels shrink the blob count by ``build.FANIN``; fold order inside
 each group is ascending unit or partition id, so the merge tree is a pure
@@ -35,14 +36,18 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from cuckoofilter_spark.operators.build import (
-    ROW_GROUP_SPLIT_MAX_FILES,
-    _column_type,
+    FANIN,
     _parquet_file,
     fold_parquet,
     fold_partitions,
-    pack_splits,
-    parquet_splits,
+    row_group_splits,
 )
+
+#: most row-group splits a bare parquet scan may have for ``build_sketch``
+#: to read it directly: ``FANIN`` units of at most 4 splits each, the
+#: layouts measured against the JVM scan.  A larger table keeps the JVM
+#: scan, which splits it by ``spark.sql.files.maxPartitionBytes``.
+DIRECT_MAX_SPLITS = 4 * FANIN
 
 
 def _values_from_arrow(col) -> np.ndarray:
@@ -66,14 +71,17 @@ def _numeric_from_arrow(col) -> np.ndarray:
 
 
 def _parquet_scan(df: DataFrame, col: str):
-    """(sorted files, Arrow type of ``col``) when ``df`` is a bare parquet
-    scan, else None.  Bare: the optimized plan is a parquet
-    ``LogicalRelation`` with no partition columns, at most under a
-    ``Project`` of plain column references (no filter, alias or limit), and
-    ``col`` has the Arrow type Spark would hand a Python task in every file
-    whose footer the plan reads anyway (all up to
-    ``ROW_GROUP_SPLIT_MAX_FILES``, else the first; a task refuses any other
-    file of another type)."""
+    """The (file, row group) splits of ``df``'s sorted files when
+    ``build_sketch`` can read them directly, else None.  That takes a bare
+    parquet scan: the optimized plan is a parquet ``LogicalRelation`` with
+    no partition columns, at most under a ``Project`` of plain column
+    references (no filter, alias or limit).  It also takes at most
+    ``DIRECT_MAX_SPLITS`` splits, every footer opened by pyarrow on the
+    driver, and ``col`` of the Arrow type Spark would hand a Python task in
+    every file, so no task meets a file the JVM scan would read and it
+    would not.  One footer read per file gives both the type and the row
+    groups."""
+    import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
     plan = df._jdf.queryExecution().optimizedPlan()
@@ -92,16 +100,33 @@ def _parquet_scan(df: DataFrame, col: str):
         return None
     fields = [f for f in df.schema.fields if f.name == col]
     files = sorted(df.inputFiles())
-    if len(fields) != 1 or not files:
+    if len(fields) != 1 or not 0 < len(files) <= DIRECT_MAX_SPLITS:
         return None
     try:
         want = to_arrow_type(fields[0].dataType)
     except TypeError:  # a type Arrow cannot carry takes the JVM path
         return None
-    for f in files if len(files) <= ROW_GROUP_SPLIT_MAX_FILES else files[:1]:
-        if _column_type(_parquet_file(f), col) != want:
-            return None
-    return files, want
+    splits = []
+    try:
+        for f in files:
+            pf = _parquet_file(f)
+            i = pf.schema_arrow.get_field_index(col)
+            if i < 0 or pf.schema_arrow.field(i).type != want:
+                return None
+            splits += row_group_splits(f, pf.metadata.num_row_groups)
+    except (pa.ArrowException, OSError):
+        # a scheme pyarrow does not resolve (s3a://, dbfs:/, ...) or a file
+        # it cannot open: the JVM scan reads it
+        return None
+    return splits if len(splits) <= DIRECT_MAX_SPLITS else None
+
+
+def _pack_splits(splits: list) -> list[list]:
+    """At most ``FANIN`` contiguous runs of ``splits``, sizes within one of
+    each other: a pure function of the split list."""
+    n = len(splits)
+    k = min(n, FANIN)
+    return [splits[i * n // k:(i + 1) * n // k] for i in range(k)]
 
 
 def build_sketch(df: DataFrame, col: str, factory: Callable[[int], object],
@@ -111,17 +136,16 @@ def build_sketch(df: DataFrame, col: str, factory: Callable[[int], object],
     ``factory(unit_or_partition_id)`` returns a fresh sketch (seed
     partition-local randomness off the id).  ``values``: "int" for key
     sketches (Bloom/HLL/CMS), "float" for quantile sketches (KLL/t-digest),
-    "str" for labeled sketches (space-saving top-k).  A bare parquet scan
-    is read directly from its files unless ``num_partitions`` is given
+    "str" for labeled sketches (space-saving top-k).  A small bare parquet
+    scan is read directly from its files unless ``num_partitions`` is given
     (module docstring).
     """
     extract = {"int": _values_from_arrow, "float": _numeric_from_arrow,
                "str": _values_from_arrow}[values]
-    scan = _parquet_scan(df, col) if num_partitions is None else None
-    if scan is None:
+    splits = _parquet_scan(df, col) if num_partitions is None else None
+    if splits is None:
         sk, _, _ = fold_partitions(df, col, factory, extract, num_partitions)
     else:
-        files, want = scan
-        units = pack_splits(parquet_splits(files))
-        sk, _, _ = fold_parquet(df.sparkSession, units, col, factory, extract, want)
+        sk, _, _ = fold_parquet(df.sparkSession, _pack_splits(splits), col, factory,
+                                extract)
     return sk

@@ -1,6 +1,6 @@
-"""``sketch_build.build_sketch`` over a bare parquet scan reads the files
-itself (``build.fold_parquet`` over ``build.pack_splits`` units); any other
-DataFrame keeps the JVM scan (``build.fold_partitions``).  Order-free
+"""``sketch_build.build_sketch`` over a small bare parquet scan reads the
+files itself (``build.fold_parquet`` over ``sketch_build._pack_splits``
+units); any other DataFrame keeps the JVM scan (``build.fold_partitions``).  Order-free
 sketch bytes are the same on both paths, quantile sketches keep their rank
 gates, the unit plan is a pure function of the files, and NULL rows and
 list elements are no value on either path."""
@@ -114,6 +114,21 @@ def test_non_bare_dataframes_take_the_jvm_scan(spark, parts, paths, tmp_path):
      .write.partitionBy("parity").parquet(str(pdir)))
     cast_dir = tmp_path / "int32"
     pq.write_table(pa.table({"k": pa.array([1, 2, 3], pa.int32())}), str(cast_dir))
+    # the first file matches the column type; a later one is int32, or has
+    # no such column (the JVM scan widens the one and reads NULL for the other)
+    later_dir, missing_dir = tmp_path / "later_int32", tmp_path / "missing"
+    for d, last in ((later_dir, {"k": pa.array([3], pa.int32())}),
+                    (missing_dir, {"j": pa.array([3], pa.int64())})):
+        d.mkdir()
+        pq.write_table(pa.table({"k": pa.array([1, 2], pa.int64())}), str(d / "a.parquet"))
+        pq.write_table(pa.table(last), str(d / "b.parquet"))
+    n = sketch_build.DIRECT_MAX_SPLITS + 1
+    many_groups = str(tmp_path / "many_groups.parquet")
+    pq.write_table(pa.table({"k": np.arange(n)}), many_groups, row_group_size=1)
+    many_files = tmp_path / "many_files"
+    many_files.mkdir()
+    for i in range(n):
+        pq.write_table(pa.table({"k": [i]}), str(many_files / f"part-{i:02d}.parquet"))
     cases = {
         "filter": (base.where("doc >= 0"), "tokens", {}),
         "alias": (base.select(F.col("tokens").alias("t")), "t", {}),
@@ -121,6 +136,11 @@ def test_non_bare_dataframes_take_the_jvm_scan(spark, parts, paths, tmp_path):
         "partitioned": (spark.read.parquet(str(pdir)), "tokens", {}),
         "num_partitions": (base, "tokens", {"num_partitions": 3}),
         "type_mismatch": (spark.read.schema("k long").parquet(str(cast_dir)), "k", {}),
+        "later_file_type": (spark.read.schema("k long").parquet(str(later_dir)), "k", {}),
+        "missing_column": (spark.read.option("mergeSchema", "true").parquet(str(missing_dir)),
+                           "k", {}),
+        "too_many_row_groups": (spark.read.parquet(many_groups), "k", {}),
+        "too_many_files": (spark.read.parquet(str(many_files)), "k", {}),
     }
     for name, (df, col, kwargs) in cases.items():
         paths.clear()
@@ -136,7 +156,7 @@ def test_unit_plan_and_bytes_ignore_parallelism(spark, parts, paths, monkeypatch
     path, _ = parts
     df = spark.read.parquet(path)
     factories = {**ORDER_FREE, "kll": lambda pid: KLLSketch(200, seed=pid)}
-    ref_units = build.pack_splits(build.parquet_splits(sorted(df.inputFiles())))
+    ref_units = sketch_build._pack_splits(sketch_build._parquet_scan(df, "tokens"))
     ref = {name: serialize_sketch(build_sketch(df, "tokens", fac,
                                                values="float" if name == "kll" else "int"))
            for name, fac in factories.items()}
@@ -187,23 +207,35 @@ def test_null_list_elements_are_no_value(spark, tmp_path):
         assert cms.estimate(np.array([0]))[0] == 0
 
 
-def test_a_file_of_another_type_stops_the_direct_read(tmp_path):
-    """Past ``ROW_GROUP_SPLIT_MAX_FILES`` files the driver checks only the
-    first file's type; a task that meets another refuses it."""
-    path = str(tmp_path / "x.parquet")
-    pq.write_table(pa.table({"k": pa.array([1, 2], pa.int32())}), path)
-    assert [len(b) for b in build._read_split((path, -1), "k", pa.int32())] == [2]
-    with pytest.raises(ValueError, match="int32"):
-        build._read_split((path, -1), "k", pa.int64())
-    with pytest.raises(ValueError, match="None"):
-        build._read_split((path, -1), "j", pa.int32())
+def _unopenable(fpath):
+    raise pa.ArrowInvalid(f"Unrecognized filesystem type in URI: {fpath}")
+
+
+@pytest.mark.parametrize("how", ["dbfs_uri", "arrow_invalid"])
+def test_files_pyarrow_cannot_open_take_the_jvm_scan(spark, parts, paths, monkeypatch, how):
+    """A file URI pyarrow does not resolve on the driver (``dbfs:/``, or a
+    scheme ``FileSystem.from_uri`` refuses) sends the build to the JVM
+    scan, which reads the table as before: same bytes, no error."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    path, _ = parts
+    df = spark.read.parquet(path)
+    ref = _bytes(df, "tokens", ORDER_FREE)
+    if how == "dbfs_uri":
+        monkeypatch.setattr(DataFrame, "inputFiles",
+                            lambda self: ["dbfs:/tables/t/part-00.parquet"])
+    else:
+        monkeypatch.setattr(sketch_build, "_parquet_file", _unopenable)
+    assert sketch_build._parquet_scan(df, "tokens") is None
+    paths.clear()
+    assert _bytes(df, "tokens", ORDER_FREE) == ref
+    assert [p for p, _ in paths] == ["jvm"] * len(ORDER_FREE)
 
 
 def test_pack_splits_is_contiguous_and_bounded():
-    for n in (1, 3, 8, 12, 16, 32, 33, 100):
-        units = build.pack_splits(list(range(n)))
+    for n in (1, 3, 8, 12, 16, sketch_build.DIRECT_MAX_SPLITS):
+        units = sketch_build._pack_splits(list(range(n)))
         assert [s for u in units for s in u] == list(range(n))
         assert all(units) and max(map(len, units)) - min(map(len, units)) <= 1
-        assert len(units) == (min(n, build.FANIN) if n <= build.FANIN * build.SPLITS_PER_UNIT
-                              else -(-n // build.SPLITS_PER_UNIT))
-        assert max(map(len, units)) <= build.SPLITS_PER_UNIT
+        assert len(units) == min(n, build.FANIN)
+        assert max(map(len, units)) <= sketch_build.DIRECT_MAX_SPLITS // build.FANIN
