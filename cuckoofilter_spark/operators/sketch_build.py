@@ -107,17 +107,18 @@ def _parquet_scan(df: DataFrame, col: str):
     except TypeError:  # a type Arrow cannot carry takes the JVM path
         return None
     splits = []
-    try:
-        for f in files:
+    for f in files:
+        try:
             pf = _parquet_file(f)
+        except (pa.ArrowException, OSError):
+            # a scheme pyarrow does not resolve (s3a://, dbfs:/, ...) or a
+            # file it cannot open: the JVM scan reads it
+            return None
+        with pf:
             i = pf.schema_arrow.get_field_index(col)
             if i < 0 or pf.schema_arrow.field(i).type != want:
                 return None
             splits += row_group_splits(f, pf.metadata.num_row_groups)
-    except (pa.ArrowException, OSError):
-        # a scheme pyarrow does not resolve (s3a://, dbfs:/, ...) or a file
-        # it cannot open: the JVM scan reads it
-        return None
     return splits if len(splits) <= DIRECT_MAX_SPLITS else None
 
 
